@@ -1,20 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.SessionTuning
 object Bench {
 
   /** Per-query timings out of a committed bench record's JSON text.
     * Tolerates whitespace around the colon: committed records may be
-    * pretty-printed — round 14 found the r13 record in that form, which
-    * silently DISARMED the baseline guard (the common query set parsed
-    * empty); BenchParseSpec pins both layouts now. */
+    * pretty-printed, and a layout the regex missed would parse to an
+    * empty common query set and silently disarm the baseline guard
+    * (BenchParseSpec pins both layouts). */
   private[graft] def parseQueryTimings(txt: String): Map[String, Double] = {
     val body = txt.drop(txt.indexOf("\"queries\""))
     """"(q[0-9][^"]*)"\s*:\s*([0-9.Ee+-]+)""".r.findAllMatchIn(body)
       .map(m => m.group(1) -> m.group(2).toDouble).toMap
   }
 
-  // JSON string escape (same contract as Verify.q)
-  private def q(s: String): String = "\"" + s.flatMap {
+  /** JSON string literal: backslash, quote and ALL control chars (<0x20)
+    * escaped — a tab or CR in query text or an error message would
+    * otherwise make a json.load of the record fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -24,77 +27,84 @@ object Bench {
     case c => c.toString
   } + "\""
 
+  /** Run the DECLARED plan and return its row count. count() is NOT a
+    * fair force: Catalyst prunes every unreferenced projection under it
+    * (map-only queries collapse to bare scans) and even eliminates a left
+    * join whose aggregated right side is provably unique-keyed — q60's
+    * whole pipeline optimizes away under count(). toRdd materializes the
+    * query's own output columns, so every operator pays its real cost. */
+  def force(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** Operators that persist() intermediates (similarity joins,
+    * clustering) leave their blocks cached after the action; drop them
+    * between runs so later queries aren't timed under accumulated memory
+    * pressure. */
+  def dropCaches(s: SparkSession): Unit = {
+    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    s.catalog.clearCache()
+  }
+
+  /** Reclaim session state between queries: caches, then a forced GC so
+    * the ContextCleaner actually releases unreferenced broadcasts and
+    * shuffle files. A late-session JVM (many plans' generated classes,
+    * accumulated broadcast/shuffle blocks) inflated timings 2-4x over
+    * isolated runs, surviving even the min-of-3; warm-then-time
+    * ADJACENTLY per query plus GC between queries keeps each measurement
+    * near its isolation state. */
+  def reclaim(s: SparkSession): Unit = {
+    dropCaches(s)
+    System.gc()
+  }
+
+  /** Sum of `now` over the queries both records timed, divided by the
+    * same sum in `prev`; None when they share no query. */
+  private def aggregateRatio(now: collection.Map[String, Double],
+      prev: collection.Map[String, Double]): Option[Double] = {
+    val common = (now.keySet & prev.keySet).toSeq.sorted
+    if (common.isEmpty) None
+    else Some(common.map(now).sum / math.max(common.map(prev).sum, 1e-9))
+  }
+
+  // Timed passes per query; the MIN is reported. A single timed pass is
+  // noise-fragile (a GC pause or machine contention mid-run reads as a
+  // phantom regression); min-of-3 measures the plan, not the weather.
+  private val Iters = 3
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def makeSession(): SparkSession = {
-      // engine session tuning (r17, VERDICT r16 #1) — ONE shared knob set
-      // with Verify/BenchOne so the oracle gate runs the same plans the
-      // bench times; env-overridable, defaults A/B-measured. The timing
-      // methodology below is unchanged.
-      val s = graft.core.SessionTuning(SparkSession.builder())
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    // Operators that persist() intermediates (similarity joins, clustering)
-    // leave their blocks cached after the action; drop them between runs so
-    // later queries aren't timed under accumulated memory pressure.
-    def dropCaches(s: SparkSession): Unit = {
-      s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      s.catalog.clearCache()
-    }
-    // Reclaim session state between queries: caches, then a forced GC so
-    // the ContextCleaner actually releases unreferenced broadcasts and
-    // shuffle files. Round 6 showed that a global warmup pass over all 51
-    // queries left every timed run in a late-session JVM (51 plans'
-    // generated classes, accumulated broadcast/shuffle blocks): mid-run
-    // timings inflated 2-4x over BenchOne isolation, surviving even the
-    // min-of-3. Warm-then-time ADJACENTLY per query + GC between queries
-    // keeps each measurement near its isolation state.
-    def reclaim(s: SparkSession): Unit = {
-      dropCaches(s)
-      System.gc()
-    }
-    // >=3 timed iterations per query, report the MIN: a single timed pass is
-    // noise-fragile (GC pauses / machine contention mid-run showed up as a
-    // phantom 40% regression in round 5); min-of-3 measures the plan, not
-    // the weather.
-    val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    // Force = run the DECLARED plan and discard rows. count() is NOT a fair
-    // force: Catalyst prunes every unreferenced projection under it (map-only
-    // queries collapse to bare scans) and even eliminates a left join whose
-    // aggregated right side is provably unique-keyed — q60's whole pipeline
-    // optimized away under count(). toRdd materializes the query's own
-    // output columns, so every operator pays its real cost.
-    //
-    // A query that THROWS is a failure, never a timing: round 7's
-    // TIMESTAMP_NTZ breakage recorded six time-to-throw values (0.07-0.12s)
-    // as if they were real runs because force() swallowed the exception.
-    // Failures now land in the emitted JSON's "errors" field and the query
-    // is excluded from "queries"/total.
-    def force(s: SparkSession,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[String] =
-      try { fn(s, sfDir).queryExecution.toRdd.foreach(_ => ()); None }
+    type Query = (SparkSession, String) => DataFrame
+    // A query that THROWS is a failure, never a timing: a time-to-throw
+    // must not be recorded as if it were a real run. Failures land in the
+    // emitted JSON's "errors" field and the query is excluded from
+    // "queries"/total.
+    def attempt(s: SparkSession, fn: Query): Option[String] =
+      try { force(fn(s, sfDir)); None }
       catch { case e: Throwable =>
         Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
       }
-    def timed(s: SparkSession,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timed(s: SparkSession, fn: Query): Double = {
       val t0 = System.nanoTime()
-      force(s, fn)
+      attempt(s, fn)
       val sec = (System.nanoTime() - t0) / 1e9
       dropCaches(s)
       sec
     }
-    val spark0 = makeSession()
+    // Re-measure one query in a BRAND-NEW SparkContext — the state an
+    // isolated BenchOne run starts from — so a min that carries
+    // accumulated-session inflation (generated classes, code-cache and
+    // broadcast pressure from the plans timed before it, which reclaim()
+    // can't give back) gets a clean second measurement. One warm pass
+    // (parquet footers, codegen, JIT for this plan only), then 3 timed.
+    def remeasureFresh(name: String): Seq[Double] = {
+      val fn = SparkEntry.queries(name)
+      val s = SessionTuning.local()
+      attempt(s, fn)
+      reclaim(s)
+      val fresh = (0 until 3).map(_ => timed(s, fn))
+      s.stop()
+      fresh
+    }
+    val spark0 = SessionTuning.local()
     // Warm the session (parquet reader init, codegen, shuffle machinery) so
     // per-query timings reflect steady state, not first-touch JVM costs.
     graft.core.Tables.names.foreach { t =>
@@ -110,17 +120,17 @@ object Bench {
       // — and therefore different generated code — at other SFs), right
       // before its timed passes so the hot code is freshly compiled and
       // the session state matches isolation.
-      val warmErr = force(spark0, fn)
+      val warmErr = attempt(spark0, fn)
       reclaim(spark0)
       warmErr match {
         case Some(err) =>
           errors(name) = err
         case None =>
-          var times = (0 until iters).map(_ => timed(spark0, fn))
-          // Session-state tripwire (VERDICT r7 #3): if even the best timed
-          // pass is way off the typical run, the measurement is suspect —
-          // reclaim hard and give it one more chance, then queue it for the
-          // fresh-session retry below.
+          var times = (0 until Iters).map(_ => timed(spark0, fn))
+          // Session-state tripwire: if even the best timed pass is way off
+          // the typical run, the measurement is suspect — reclaim hard and
+          // give it one more chance, then queue it for the fresh-session
+          // retry below.
           if (times.min * 2 < times.max) {
             reclaim(spark0)
             times = times :+ timed(spark0, fn)
@@ -130,45 +140,29 @@ object Bench {
           results(name) = times.min
       }
     }
-    // Fresh-session retry (VERDICT r8 #2): a suspect's min can still carry
-    // accumulated-session inflation (generated classes, code-cache and
-    // broadcast pressure from the 100+ plans timed before it) that reclaim()
-    // can't give back. Re-measure each suspect in a BRAND-NEW SparkContext —
-    // the same state BenchOne isolation runs in — and report the best of
-    // both. A suspect whose fresh passes are stable (max < 2*min) is then a
-    // trusted measurement and leaves the suspect list; only queries that
-    // stay noisy in an isolated context remain flagged.
+    spark0.stop()
+    // Fresh-session retry: report the best of both runs. A suspect whose
+    // fresh passes are stable is then a trusted measurement and leaves the
+    // suspect list; only queries that stay noisy in an isolated context
+    // remain flagged. The flag is on the MEDIAN of the 3 fresh passes, so
+    // a single GC hiccup is absorbed and only a query that is slow in the
+    // majority of isolated passes stays flagged.
     val stillSuspect = scala.collection.mutable.ArrayBuffer[String]()
-    if (suspects.nonEmpty) {
-      spark0.stop()
-      suspects.sorted.foreach { name =>
-        val fn = SparkEntry.queries(name)
-        val s = makeSession()
-        force(s, fn) // warm: parquet footers, codegen, JIT for this plan only
-        reclaim(s)
-        // 3 passes, flag on the MEDIAN: with only 2, a single GC hiccup
-        // (one bad pass) read as instability; now one outlier is absorbed
-        // and only a query that is slow in the majority of isolated passes
-        // stays flagged.
-        val fresh = (0 until 3).map(_ => timed(s, fn))
-        s.stop()
-        results(name) = math.min(results(name), fresh.min)
-        if (fresh.min * 2 < fresh.sorted.apply(1)) stillSuspect += name
-      }
-    } else spark0.stop()
-    // Machine-contention guard (VERDICT r11 #1): the suspect machinery
-    // catches WITHIN-run instability, but a uniformly loaded machine
-    // inflates every pass equally and the committed record silently
-    // becomes useless as a regression base (round 11: the local record
-    // read 1.42x r10 on the 136 common queries while the driver's
-    // same-day run of the same queries was 0.99x flat). Local protocol:
-    // export SPARK_GRAFT_BENCH_BASELINE=<previous committed BENCH_LOCAL
-    // json>. Individually-regressed queries (>1.25x) get one
-    // fresh-context re-measure (the suspect recipe); if the common-query
-    // aggregate STILL exceeds 1.25x the baseline, the run fails (exit 2)
-    // — code didn't get uniformly slower, the machine did; re-record on
-    // a quiet box. The driver never sets the env var, so its record is
-    // unaffected.
+    suspects.sorted.foreach { name =>
+      val fresh = remeasureFresh(name)
+      results(name) = math.min(results(name), fresh.min)
+      if (fresh.min * 2 < fresh.sorted.apply(1)) stillSuspect += name
+    }
+    // Machine-contention guard: the suspect machinery catches WITHIN-run
+    // instability, but a uniformly loaded machine inflates every pass
+    // equally and the committed record silently becomes useless as a
+    // regression base. Local protocol: export
+    // SPARK_GRAFT_BENCH_BASELINE=<previous committed BENCH_LOCAL json>.
+    // Individually-regressed queries (>1.25x) get one fresh-context
+    // re-measure; if the common-query aggregate STILL exceeds 1.25x the
+    // baseline, the run fails (exit 2) — code didn't get uniformly
+    // slower, the machine did; re-record on a quiet box. Without the env
+    // var the guard is off.
     def parseQueries(path: String): Map[String, Double] = {
       val txt = {
         val src = scala.io.Source.fromFile(path)
@@ -179,36 +173,26 @@ object Bench {
     var contendedRatio: Option[Double] = None
     sys.env.get("SPARK_GRAFT_BENCH_BASELINE").foreach { bp =>
       val prev = parseQueries(bp)
-      val common = (results.keySet & prev.keySet).toSeq.sorted
-      def aggRatio: Double =
-        common.map(results).sum / math.max(common.map(prev).sum, 1e-9)
-      if (common.nonEmpty && aggRatio > 1.25) {
-        val regressed = common.filter(k => results(k) > prev(k) * 1.25)
+      aggregateRatio(results, prev).filter(_ > 1.25).foreach { ratio =>
+        val regressed = (results.keySet & prev.keySet).toSeq.sorted
+          .filter(k => results(k) > prev(k) * 1.25)
         System.err.println(
-          f"[bench] baseline guard: aggregate ${aggRatio}%.2fx vs $bp; " +
+          f"[bench] baseline guard: aggregate ${ratio}%.2fx vs $bp; " +
             s"re-measuring ${regressed.size} regressed queries in fresh " +
             "contexts")
         regressed.foreach { name =>
-          val fn = SparkEntry.queries(name)
-          val s = makeSession()
-          force(s, fn)
-          reclaim(s)
-          val fresh = (0 until 3).map(_ => timed(s, fn))
-          s.stop()
-          results(name) = math.min(results(name), fresh.min)
+          results(name) = math.min(results(name), remeasureFresh(name).min)
         }
-        if (aggRatio > 1.25) contendedRatio = Some(aggRatio)
+        contendedRatio = aggregateRatio(results, prev).filter(_ > 1.25)
       }
     }
-    // Driver-side drift adjudication (VERDICT r12 #8): the env-var guard
-    // above protects only local records; the driver never sets it, so a
-    // drifted host used to ship a silently-inflated BENCH_r*.json and the
-    // judge had to adjudicate q49-style moves by hand. Now every sf0.1
-    // run also self-compares against the latest committed BENCH_r*.json
-    // in the working directory and reports the common-query aggregate
-    // ratio plus the worst >1.25x per-query movers IN the record —
-    // informational (never an exit code: the driver record must ship),
-    // but the machine-vs-code question is answered in-run.
+    // Drift report: the env-var guard above protects only local records,
+    // so every sf0.1 run also self-compares against the latest committed
+    // BENCH_r*.json in the working directory and reports the common-query
+    // aggregate ratio plus the worst >1.25x per-query movers IN the
+    // record. Informational only (never an exit code: a run without a
+    // baseline must still ship its record), but the machine-vs-code
+    // question is answered in-run.
     val drift: String =
       if (!sfDir.endsWith("sf0.1")) ""
       else {
@@ -220,51 +204,44 @@ object Bench {
           val latest = files.maxBy(_.getName)
           val prev = try parseQueries(latest.getPath)
             catch { case _: Throwable => Map.empty[String, Double] }
-          val common = (results.keySet & prev.keySet).toSeq.sorted
-          if (common.isEmpty) ""
-          else {
-            val ratio =
-              common.map(results).sum / math.max(common.map(prev).sum, 1e-9)
-            val movers = common
+          aggregateRatio(results, prev).fold("") { ratio =>
+            val movers = (results.keySet & prev.keySet).toSeq.sorted
               .filter(k => results(k) > prev(k) * 1.25 &&
                 results(k) - prev(k) > 0.2)
               .sortBy(k => -(results(k) / prev(k))).take(10)
             val mstr = movers
-              .map(k => q(k) + ":" + f"${results(k) / prev(k)}%.2f")
+              .map(k => jsonString(k) + ":" + f"${results(k) / prev(k)}%.2f")
               .mkString("{", ",", "}")
             if (ratio > 1.25) System.err.println(
               f"[bench] drift: common-query aggregate $ratio%.2fx vs " +
                 s"${latest.getName} — environment drift; adjudicate " +
                 "against the per-query movers in the record")
-            s""","drift_vs":${q(latest.getName)},"drift_ratio":${
+            s""","drift_vs":${jsonString(latest.getName)},"drift_ratio":${
               f"$ratio%.3f"},"drift_queries":$mstr"""
           }
         }
       }
     val qs = results.toSeq.sortBy(_._1)
-      .map { case (k, v) => q(k) + ":" + v }.mkString("{", ",", "}")
+      .map { case (k, v) => jsonString(k) + ":" + v }.mkString("{", ",", "}")
     val errs = errors.toSeq.sortBy(_._1)
-      .map { case (k, v) => q(k) + ":" + q(v) }.mkString("{", ",", "}")
-    val susp = stillSuspect.sorted.map(q).mkString("[", ",", "]")
+      .map { case (k, v) => jsonString(k) + ":" + jsonString(v) }
+      .mkString("{", ",", "}")
+    val susp = stillSuspect.sorted.map(jsonString).mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val nCatalog = SparkEntry.queries.size
     val contended = contendedRatio.fold("")(r => s""","contended":$r""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"suspect":$susp,"n_queries":${results.size},"n_catalog":$nCatalog$contended$drift,"sf":"$sfDir"}""")
-    // Driver-record contract (VERDICT r16 #1/next-round #2): the full
-    // per-query line above is ~12 KB at 228 queries, which overflows the
-    // driver's 2000-char stdout tail — BENCH_r14/r15/r16 all recorded
-    // `parsed: null` and PERF had no machine-readable totals for three
-    // rounds. Print a compact (<1500-byte) summary line LAST so the tail
-    // always ends with a parseable record. Methodology and the full line
-    // are unchanged; local records keep committing the full per-query map.
+    // The full per-query line above is ~12 KB at 228 queries, which
+    // overflows a 2000-char stdout tail. Print a compact (<1500-byte)
+    // summary line LAST so the tail always ends with a parseable record.
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_catalog":$nCatalog,"n_errors":${errors.size},"n_suspect":${stillSuspect.size}$contended,"sf":"$sfDir"}""")
     if (errors.nonEmpty) {
       System.err.println(s"[bench] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     }
-    // Catalog-drift guard (VERDICT r10 #1): a bench record that covers
-    // fewer queries than the catalog must FAIL, not silently ship a
-    // partial timing file. Timed + errored must account for every
-    // catalog entry, and any error is itself a failure.
+    // Catalog-coverage guard: a bench record that covers fewer queries
+    // than the catalog must FAIL, not silently ship a partial timing
+    // file. Timed + errored must account for every catalog entry, and
+    // any error is itself a failure.
     if (results.size + errors.size != nCatalog || errors.nonEmpty) {
       System.err.println(
         s"[bench] GUARD: timed ${results.size} + failed ${errors.size} " +

@@ -25,6 +25,20 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     allQueries.map(q => q.name -> q.spark).toMap
 
+  /** Catalog names out of a comma-separated list: entries are trimmed and
+    * empty ones dropped. Throws IllegalArgumentException naming every
+    * entry absent from `known` (or when none is left), so a tool rejects a
+    * typo before it starts a session or times anything. */
+  def resolveQueries(list: String,
+      known: collection.Set[String] = queries.keySet): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty,
+      s"unknown catalog queries: ${unknown.mkString(", ")}")
+    require(names.nonEmpty, s"no query names in '$list'")
+    names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for engine-hash ops (MinHash/SimHash/
     * SRP-LSH) → driver records a rows-only check; those are covered by

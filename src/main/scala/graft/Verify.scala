@@ -1,25 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.Bench.{jsonString => q}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shared engine tuning (graft.core.SessionTuning): the oracle gate
-    // must verify the SAME plans the bench times
-    val spark = graft.core.SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // local-iteration filter (unset for the full correctness gate);
+    // resolved before the session starts so a typo fails at once instead
+    // of running nothing and writing an empty failures.json
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.resolveQueries(_).toSet)
+    // the shared session factory: the oracle gate verifies the SAME plans
+    // the bench times
+    val spark = graft.core.SessionTuning.local()
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (unset when the driver runs the full gate)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -34,27 +28,14 @@ object Verify {
       // the dedup/similarity operators persist narrow internal tables for
       // the life of the returned plan (documented contract) — release them
       // between queries, same hygiene as Bench
-      spark.catalog.clearCache()
+      Bench.dropCaches(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Failures file (VERDICT r7 next-round #2b): a crashed query used to
-    // leave only a stderr line and zero output — invisible in the round's
-    // artifacts. Always written, so "failures.json == {}" is positive
-    // evidence the whole catalog ran.
+    // Always written, even when empty: a crashed query otherwise leaves
+    // only a stderr line, so "failures.json == {}" is positive evidence
+    // that every selected query ran.
     val failJson = failures
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/failures.json"), failJson)

@@ -2,47 +2,43 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level session tuning (VERDICT r16 next-round #1; guide §9
-  * baseline + §3.1 join strategy), applied by the Bench / BenchOne /
-  * Verify mains from ONE place so the timing record and the oracle
-  * correctness gate always run the SAME plans.
+/** The one place a graft session is built. The oracle gate (`Verify`), the
+  * bench, the CLI, the tools and the tests all take their session from
+  * here, and Catalyst's rules read the session's SQLConf, so they all run
+  * the same plans.
   *
-  * Every knob is env-overridable (the brief's "keep scale-dependent
-  * settings parameterised"); the defaults are the r17 A/B WINNERS —
-  * which the measurements said are Spark's own defaults
-  * (OPTIMIZATION_r17.md "Session-config A/B", warm isolated mins at
-  * sf0.1 over 8 join-heavy queries):
-  *
-  *  - `preferSortMergeJoin=false` REJECTED: q98 6.72→8.39 s, q108
-  *    2.30→3.22 s, q89 +17%, q169 +13%. The engine already hints
-  *    shuffle_hash site-by-site where keys are provably uniform
-  *    (markDuplicates verdict join, clusterDuplicates rounds), and the
-  *    planner-wide flip replaces sort-merge joins that REUSE cached
-  *    sort orders (triangleCounts' pre-sorted oriented-edge cache, the
-  *    CC loops' checkpointed tables) with hash builds that don't.
-  *  - `maxShuffledHashJoinLocalMapThreshold=64m` (AQE SMJ→SHJ rewrite)
-  *    REJECTED: flat to slightly worse everywhere measured (q98 −2%,
-  *    q169 +18%, q89 +28% scatter) — no win to buy the rewrite risk.
-  *  - `spark.io.compression.codec=zstd` REJECTED locally: q40
-  *    1.83→3.15 s, q98 +12% — local[32] shuffles are CPU-bound with
-  *    zero network, so the better ratio buys nothing and the CPU is
-  *    pure loss (§2.3 "no universal answer — measure"). On a
-  *    bandwidth-bound cluster re-measure with SPARK_GRAFT_IO_CODEC=zstd.
+  * Join strategy, shuffle codec and cached-plan partitioning stay at
+  * Spark's defaults because the defaults measured best
+  * (OPTIMIZATION_r17.md). Set any of them with `--conf` or
+  * `spark-defaults.conf` (or a `-Dspark.…` JVM property outside
+  * spark-submit).
   */
 object SessionTuning {
 
-  def knobs: Seq[(String, String)] = Seq(
-    "spark.sql.join.preferSortMergeJoin" ->
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"),
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
-      sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0"),
-    "spark.io.compression.codec" ->
-      sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"),
-    // an empty value means "leave Spark's default"
-    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" ->
-      sys.env.getOrElse("SPARK_GRAFT_CACHE_PART", ""),
-  ).filter(_._2.nonEmpty)
-
+  /** The confs every graft session needs: UTC session time (calendar
+    * operators and the oracle compare assume it), TIMESTAMP(NANOS)
+    * parquet read as a long (converted back by [[Tables.normalizeTs]];
+    * Spark 4 cannot read it otherwise) and no UI. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    knobs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+    b.config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
+  /** Default session parallelism: `SPARK_GRAFT_CPUS`, else the machine's
+    * processor count. */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** A session on `local[cpus]` (or `SPARK_MASTER` when set) with one
+    * shuffle partition per core. Returns the active session if one is
+    * running. */
+  def local(cpus: Int = SessionTuning.cpus): SparkSession = {
+    val s = apply(SparkSession.builder())
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

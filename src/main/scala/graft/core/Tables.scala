@@ -21,9 +21,9 @@ object Tables {
 
   /** Normalize a `ts` column to TimestampType regardless of how the
     * parquet was generated: TIMESTAMP(NANOS) reads as LongType under
-    * spark.sql.legacy.parquet.nanosAsLong (set in Verify/Bench/Cli/test
-    * sessions); TIMESTAMP(MICROS, isAdjustedToUTC=false) reads natively
-    * as TIMESTAMP_NTZ in Spark 4. Downstream operators (unix_millis,
+    * spark.sql.legacy.parquet.nanosAsLong (set for every session by
+    * [[SessionTuning]]); TIMESTAMP(MICROS, isAdjustedToUTC=false) reads
+    * natively as TIMESTAMP_NTZ in Spark 4. Downstream operators (unix_millis,
     * windows, watermarks) require TimestampType — with the UTC session
     * timezone the NTZ→TZ cast is exact (same micros value
     * reinterpreted). Also used by the CLI so any user parquet works. */

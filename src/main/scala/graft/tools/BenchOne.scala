@@ -1,47 +1,29 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{Bench, SparkEntry}
+import graft.core.SessionTuning
 
 /** Time one or more catalog queries repeatedly and optionally print plans.
   * Usage: runMain graft.tools.BenchOne <name>[,<name>…] [sfDir] [reps] [explain]
-  * (comma-separated names share one session — the r17 config-A/B shape)
+  * (comma-separated names share one session)
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val names = SparkEntry.resolveQueries(args(0))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val doExplain = args.lift(3).contains("explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shared engine tuning — keep BenchOne isolation plans identical to
-    // the full bench's (graft.core.SessionTuning)
-    val spark = graft.core.SessionTuning(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionTuning.local()
     names.foreach { name =>
-      val fn = graft.SparkEntry.queries(name)
+      val fn = SparkEntry.queries(name)
       if (doExplain) fn(spark, sfDir).explain("formatted")
-      // drop caches between reps, as graft.Bench does — timings then match
-      // the driver's protocol (persisted intermediates are recomputed)
+      // same force and cache hygiene between reps as graft.Bench, so
+      // timings match the full bench's protocol
       (1 to reps).foreach { i =>
         val t0 = System.nanoTime()
-        // same force as graft.Bench: run the DECLARED plan (count() lets
-        // Catalyst prune projections / eliminate unique-key outer joins)
-        val df = fn(spark, sfDir)
-        val n = spark.sparkContext
-          .runJob(df.queryExecution.toRdd,
-            (it: Iterator[_]) => { var c = 0L
-              while (it.hasNext) { it.next(); c += 1 }; c })
-          .sum
+        val n = Bench.force(fn(spark, sfDir))
         println(f"RUN$i $name rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        spark.catalog.clearCache()
+        Bench.dropCaches(spark)
       }
     }
     spark.stop()

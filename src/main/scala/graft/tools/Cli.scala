@@ -41,21 +41,6 @@ object Cli {
   private implicit val gtEnc: org.apache.spark.sql.Encoder[Genotype] =
     Encoders.product[Genotype]
 
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   // ------------------------- loaders / savers -----------------------------
 
   /** Extension-dispatch alignment load (loadAlignments, AC:3643-3672). */
@@ -428,7 +413,7 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = graft.core.SessionTuning.local()
     try run(spark, args.toSeq) finally spark.stop()
   }
 
@@ -1834,16 +1819,16 @@ object Cli {
           .write.mode("overwrite").parquet(out)
         println(s"joinProbe: wrote $out")
 
-      // transitions <in> <out> [-key c] [-type c] [-ts c] [-id c] —
+      // transitionLatency <in> <out> [-key c] [-type c] [-ts c] [-id c] —
       //   per-transition latency percentiles
-      case "transitions" :: in :: out :: rest =>
+      case "transitionLatency" :: in :: out :: rest =>
         val fv = flagValue(rest) _
         graft.operators.Sessionize.transitionLatency(
-            spark.read.parquet(in), fv("-key", "user_id"),
+            readTs(spark, in, fv("-ts", "ts")), fv("-key", "user_id"),
             fv("-type", "event_type"), fv("-ts", "ts"),
             fv("-id", "event_id"))
           .write.mode("overwrite").parquet(out)
-        println(s"transitions: wrote $out")
+        println(s"transitionLatency: wrote $out")
 
       // robustScale <in> <out> -group c -value c -tie c — median/IQR
       //   scaling within each group
@@ -2170,7 +2155,7 @@ object Cli {
           "\n  robustScale <in.parquet> <out.parquet> -group c -value c -tie c" +
           "\n  skipgram <in.parquet> <out.parquet> [-id c] [-text c] [-window n] [-min n]" +
           "\n  joinProbe <a.parquet> <b.parquet> <out.parquet> -keyA c -keyB c" +
-          "\n  transitions <in.parquet> <out.parquet> [-key c] [-type c] [-ts c] [-id c]" +
+          "\n  transitionLatency <in.parquet> <out.parquet> [-key c] [-type c] [-ts c] [-id c]" +
           "\n  piiCensus <in.parquet> <out.parquet> [-text c] [-source c]" +
           "\n  splitAudit <in.parquet> <out.parquet> -split c -ts c -order a,b,c" +
           "\n  numProfile <in.parquet> <out.parquet> -cols a,b,c" +

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import graft.core._
 import graft.model._
 import graft.operators._
@@ -16,11 +16,7 @@ object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft-demo")
     new java.io.File(work).mkdirs()
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     // --- fixture SAM: one duplicate group at pos 100, one lone read ---

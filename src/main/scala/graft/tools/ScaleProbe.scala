@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Bench
 
 /** Scale probe: runs the five most expensive operators at ~sf1 (10x the
   * largest driver-provided testdata) and prints one JSON line per probe.
@@ -23,14 +24,6 @@ object ScaleProbe {
 
   private var only: Seq[String] = Nil
 
-  /** Honest full-compute force (the Bench convention): count() lets
-    * Catalyst prune every unreferenced projection — round 16 found the
-    * r15 trimmed-mean probe rows were measuring a COUNT-PRUNED plan
-    * (the decimal trim sums optimized away). toRdd materializes the
-    * query's own output columns, so every operator pays its real cost. */
-  private def force(df: org.apache.spark.sql.DataFrame): Long =
-    df.queryExecution.toRdd.count()
-
   private def timed(name: String)(body: => Long): Unit = {
     if (only.nonEmpty && !only.exists(name.contains)) return
     val t0 = System.nanoTime()
@@ -43,17 +36,11 @@ object ScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val work = args.lift(1).getOrElse("/tmp/graft-scaleprobe")
     only = args.lift(2).toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-probe")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionTuning.local()
+    // the probe's sf1-scale inputs are 10x the catalog's largest tables:
+    // 64 shuffle partitions keep each reduce task near sf0.1 task size,
+    // and the probe rows in SCALE.md were recorded with this setting
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
     import graft.operators.{DedupOps, RegionJoins, TextOps}
 
     // ---- synthesize sf1-scale inputs (10x sf0.1), materialized first ----
@@ -920,9 +907,9 @@ object ScaleProbe {
     }
     spark.catalog.clearCache()
     timed("json_key_profile_10x") {
-      // round 14 (VERDICT r13 missing #6): q198's shape at the 10x event
-      // count — the bounded key/type grid was always safe; the moving
-      // part is the per-row native from_json parse, measured here
+      // q198's shape at the 10x event count: the key/type grid is
+      // bounded, so the cost that scales is the per-row native
+      // from_json parse, measured here
       val js = ev.select(
         when(pmod(col("event_id"), lit(17L)) === 0, lit("{oops"))
           .otherwise(concat(
@@ -949,7 +936,7 @@ object ScaleProbe {
     }
     spark.catalog.clearCache()
     timed("bootstrap_ci_5m_b64") {
-      // round 15 (VERDICT r14 missing #1): q216's machinery at 5M rows
+      // q216's machinery at 5M rows
       // and b=64 — the (b+1)x map-side explode is the documented CPU
       // price (325M weighted rows pass the partial agg); the SHUFFLE
       // must stay grid-sized (1000 groups x 65 replicates), never 65x
@@ -963,7 +950,7 @@ object ScaleProbe {
     }
     spark.catalog.clearCache()
     timed("hardy_weinberg_5m_sites") {
-      // round 15 (VERDICT r14 missing #1): 25M genotypes over 5M
+      // 25M genotypes over 5M
       // distinct sites with a dominant hot site (20% of all rows) —
       // site cardinality is unbounded output, the hot key rides the
       // map-side partial agg (never a single-task sort or window)
@@ -977,7 +964,7 @@ object ScaleProbe {
     }
     spark.catalog.clearCache()
     timed("genotype_concordance_10m_hot_site") {
-      // round 15 (VERDICT r14 missing #1): two 10M-row callsets whose
+      // two 10M-row callsets whose
       // (site, sample) keys concentrate 20% of rows on ONE hot site —
       // the full-outer join keys on the COMPOSITE (site, sample), so
       // the hot site hashes across partitions and AQE sees no residual
@@ -1023,7 +1010,7 @@ object ScaleProbe {
           .as("g"),
         pmod(col("id") * 2654435761L, lit(1000000L)).as("v"),
         col("id").as("t"))
-      force(graft.operators.Stats.trimmedMeanByGroup(rows, "g", "v",
+      Bench.force(graft.operators.Stats.trimmedMeanByGroup(rows, "g", "v",
         "t"))
     }
     spark.catalog.clearCache()
@@ -1037,7 +1024,7 @@ object ScaleProbe {
           .as("g"),
         pmod(col("id") * 2654435761L, lit(1000000L)).as("v"),
         col("id").as("t"))
-      force(graft.operators.Stats.madByGroup(rows, "g", "v", "t"))
+      Bench.force(graft.operators.Stats.madByGroup(rows, "g", "v", "t"))
     }
     spark.catalog.clearCache()
     timed("trimmed_mean_5m_escalated") {
@@ -1055,7 +1042,7 @@ object ScaleProbe {
           .as("g"),
         pmod(col("id") * 2654435761L, lit(1000000L)).as("v"),
         col("id").as("t"))
-      force(graft.operators.Stats.trimmedMeanByGroup(rows, "g", "v",
+      Bench.force(graft.operators.Stats.trimmedMeanByGroup(rows, "g", "v",
         "t", escalateGroupRows = 500000L))
     }
     spark.catalog.clearCache()
@@ -1070,12 +1057,12 @@ object ScaleProbe {
           .as("g"),
         pmod(col("id") * 2654435761L, lit(1000000L)).as("v"),
         col("id").as("t"))
-      force(graft.operators.Stats.madByGroup(rows, "g", "v", "t",
+      Bench.force(graft.operators.Stats.madByGroup(rows, "g", "v", "t",
         escalateGroupRows = 500000L))
     }
     spark.catalog.clearCache()
     timed("conformal_coverage_5m_cal") {
-      // round 16 (VERDICT r15 missing #2): 5M calibration rows + 5M
+      // 5M calibration rows + 5M
       // eval rows, scores quantized to 100k distinct values — the rank
       // runs over the PERSISTED bounded score grid (<= 100k rows), not
       // the 5M raw rows; the corpus contributes only map-side-combined
@@ -1084,12 +1071,12 @@ object ScaleProbe {
         pmod(col("id") * 2654435761L, lit(100000L)).as("score"))
       val ev = spark.range(5000000L).select(
         pmod(col("id") * 40503L + 7L, lit(100000L)).as("score"))
-      force(graft.operators.LabelQaOps.conformalCoverage(cal, ev,
+      Bench.force(graft.operators.LabelQaOps.conformalCoverage(cal, ev,
         "score", alphaPermille = 100))
     }
     spark.catalog.clearCache()
     timed("inbreeding_f_5m_dominant_contig") {
-      // round 16 (VERDICT r15 missing #2): 5M genotype rows where ONE
+      // 5M genotype rows where ONE
       // contig-like hot site holds 20% of all rows — the AF join-back
       // keys on site, so the hot site's rows hash to ONE reducer side
       // but the join is still row-parallel (no window, no sort); the
@@ -1101,12 +1088,12 @@ object ScaleProbe {
         concat(lit("s"), pmod(col("id"), lit(1000L)).cast("string"))
           .as("sample_id"),
         pmod(col("id") * 48271L, lit(3L)).cast("int").as("gt"))
-      force(graft.operators.VariantQc.inbreedingF(rows, "sample_id",
+      Bench.force(graft.operators.VariantQc.inbreedingF(rows, "sample_id",
         "site", "gt"))
     }
     spark.catalog.clearCache()
     timed("confident_learning_5m_hot_cell") {
-      // round 16 (VERDICT r15 missing #2): 5M labeled rows where ONE
+      // 5M labeled rows where ONE
       // (given, predicted) cell holds 30% of the mass — thresholds are
       // a bounded per-class grid joined back BROADCAST, the cell census
       // map-side combines; no skew amplification
@@ -1118,10 +1105,10 @@ object ScaleProbe {
           .otherwise(concat(lit("c"), pmod(col("id") * 7L, lit(40L))
             .cast("string"))).as("pred"),
         pmod(col("id") * 2654435761L, lit(1001L)).as("conf"))
-      force(graft.operators.LabelQaOps.confidentLearningGrid(rows,
+      Bench.force(graft.operators.LabelQaOps.confidentLearningGrid(rows,
         "given", "pred", "conf"))
     }
-    // ---- IVF recall probe (r16, VERDICT r15 missing #4) ----
+    // ---- IVF recall probe: the approximate top-k's recall at scale ----
     // 1M synthetic 32-dim vectors in 20 soft clusters + noise; 40 query
     // vectors drawn from the same process. recall@10 of ivfTopKAgainst
     // vs the exact brute-force top-10 for nProbe x nCentroids.
@@ -1183,8 +1170,8 @@ object ScaleProbe {
       }
     }
 
-    // ---- co-occurrence hot-node skew probe (VERDICT r16 #6) ----
-    // The r16 single-exchange coOccurrenceEdges dedups (src, dst) pairs on
+    // ---- co-occurrence hot-node skew probe ----
+    // The single-exchange coOccurrenceEdges dedups (src, dst) pairs on
     // a HashPartitioning(src) exchange: a celebrity node's whole pair
     // fan-in lands in ONE aggregation task (AQE skew-split does not apply
     // to aggregates). Probe: a uniform market-basket incidence (~sf1

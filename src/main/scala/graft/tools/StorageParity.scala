@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import graft.core.GenomicDataset
 import graft.model.Alignment
 import graft.sources.{BamIO, CramIO, SamIO}
 
-/** Storage-parity audit (VERDICT r13 missing #3 / BASELINE.md rows
-  * 7-10): the reference publishes Parquet ~20 % smaller than BAM and
+/** Storage-parity audit (BASELINE.md rows 7-10): the reference publishes Parquet ~20 % smaller than BAM and
   * CRAM ~43 % smaller than BAM on real reads
   * (docs/benchmarks/storage.rst:15-31); this main writes the SAME reads
   * through our three alignment sinks with default codecs and prints the
@@ -49,13 +48,7 @@ object StorageParity {
     val reps = args.headOption.map(_.toInt).getOrElse(50)
     val work = args.lift(1).getOrElse("/tmp/graft-storage-parity")
     val res = "/root/reference/adam-core/src/test/resources"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-storage-parity")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionTuning.local()
 
     val na = SamIO.read(spark, s"$res/NA12878.sam")
     val bq = SamIO.read(spark, s"$res/bqsr1.sam")
@@ -128,14 +121,13 @@ object StorageParity {
     audit("real_1x", 1)
     audit(s"real_${reps}x", reps)
 
-    // codec WRITE/READ throughput (VERDICT r14 missing #4): size alone
-    // justified the r14 gzip default; at 100 TB ingest the codec's
-    // write and scan rates are first-order. Measured on the same
-    // replicated real-reads corpus (multi-partition, as a real ingest
-    // writes) and on the sf0.1 documents text corpus. MB/s is relative
-    // to a STABLE logical denominator (BAM bytes for reads, raw text
-    // bytes for documents), so codecs are comparable: "effective
-    // logical MB encoded/decoded per second".
+    // codec WRITE/READ throughput: size alone does not pick a codec; at
+    // 100 TB ingest the codec's write and scan rates are first-order.
+    // Measured on the same replicated real-reads corpus (multi-partition,
+    // as a real ingest writes) and on the sf0.1 documents text corpus.
+    // MB/s is relative to a STABLE logical denominator (BAM bytes for
+    // reads, raw text bytes for documents), so codecs are comparable:
+    // "effective logical MB encoded/decoded per second".
     def timeSec(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }

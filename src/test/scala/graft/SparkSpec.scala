@@ -6,17 +6,12 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all suites (one JVM; the session is
   * created once and reused — pattern of the reference's ADAMFunSuite /
-  * SparkFunSuite, adam-core/src/test/.../util/ADAMFunSuite.scala:24-37). */
+  * SparkFunSuite, adam-core/src/test/.../util/ADAMFunSuite.scala:24-37).
+  * Built by the engine's session factory, so the tests run the plans the
+  * oracle gate and the bench run. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.SessionTuning.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

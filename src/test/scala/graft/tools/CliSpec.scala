@@ -611,13 +611,18 @@ class CliSpec extends SparkSpec {
     assert(got == Seq("abcde", "defgh"))
   }
 
-  test("transitions and percentiles commands run on an events fixture") {
+  private def eventsFixture(): String = {
     import spark.implicits._
     val in = tmpDir() + "/ev.parquet"
     Seq((1L, 1L, "a", 10L, 1.0), (1L, 2L, "b", 20L, 2.0),
       (2L, 3L, "a", 5L, 3.0), (2L, 4L, "a", 6L, 4.0))
       .toDF("user_id", "event_id", "event_type", "ts", "value")
       .write.mode("overwrite").parquet(in)
+    in
+  }
+
+  test("transitions and percentiles commands run on an events fixture") {
+    val in = eventsFixture()
     val tOut = tmpDir() + "/trans.parquet"
     Cli.run(spark, Seq("transitions", in, tOut))
     val trans = spark.read.parquet(tOut).collect()
@@ -629,6 +634,15 @@ class CliSpec extends SparkSpec {
     val p = spark.read.parquet(pOut).collect()
       .map(r => r.getString(0) -> r.getDouble(2)).toMap
     assert(p == Map("a" -> 3.0, "b" -> 2.0))
+  }
+
+  test("transitionLatency command writes per-transition latency percentiles") {
+    val out = tmpDir() + "/lat.parquet"
+    Cli.run(spark, Seq("transitionLatency", eventsFixture(), out))
+    val lat = spark.read.parquet(out)
+    assert(lat.columns.toSeq == Seq("transition", "n", "p50", "p90", "p99"))
+    val n = lat.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(n == Map("a->b" -> 1L, "a->a" -> 1L))
   }
 
   test("ntile and skewReport commands") {
