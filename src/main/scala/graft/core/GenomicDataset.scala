@@ -165,8 +165,8 @@ case class GenomicDataset[T](ds: Dataset[T], meta: GenomicMetadata,
     * Default codec is GZIP — the reference's own saveAsParquet default
     * (ADAMContext CompressionCodecName.GZIP), and the setting behind its
     * published "Parquet 20 % smaller than BAM" claim. Measured on the
-    * real NA12878+bqsr1 reads (tools/StorageParity): gzip 0.70x BAM vs
-    * Spark's snappy default at 1.16x BAM — at 100 TB the write-side CPU
+    * real NA12878+bqsr1 reads (SCALE.md, storage parity): gzip 0.70x BAM
+    * vs Spark's snappy default at 1.16x BAM — at 100 TB the write-side CPU
     * is well spent. Round-15 throughput audit (SCALE.md "Parquet codec
     * decision"): gzip stays the default (smaller than zstd on the
     * non-replicated 1x real corpus, and like-for-like with the

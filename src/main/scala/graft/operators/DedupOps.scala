@@ -907,7 +907,7 @@ object DedupOps {
     // Shingles hash to 64-bit longs AT SHINGLE TIME (codegen xxhash64 in a
     // higher-order transform), so both verify joins shuffle narrow
     // array<bigint> columns instead of full string-shingle arrays — at
-    // 100 TB the string arrays dominated the exchange (VERDICT r7 #4).
+    // 100 TB string arrays would dominate the exchange.
     // Intersection/union cardinalities over the hashed sets equal the
     // string-set values unless two distinct shingles of the SAME candidate
     // pair collide in 64 bits (~n²/2⁶⁴ per doc — negligible, and

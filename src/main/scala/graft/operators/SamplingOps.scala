@@ -439,10 +439,10 @@ object SamplingOps {
     require(n > 0, s"bad quota: $n")
     import org.apache.spark.sql.expressions.Window
     val shards = 64
-    // hash uniform materialized ONCE as its own projection (the q216 CSE
-    // pattern, VERDICT r16 #7): both window sort keys previously inlined
-    // the full concat+FNV+scale tree — one hash per row instead of two,
-    // same values (the column is the identical expression)
+    // hash uniform materialized ONCE as its own projection: Catalyst does
+    // not share the concat+FNV+scale tree between the two window sort
+    // keys, so inlining it hashes every row twice; the projected column
+    // is the identical expression, so the values are the same
     val w1 = Window
       .partitionBy(col(strataCol),
         pmod(xxhash64(col(keyCol)), lit(shards)))
@@ -507,9 +507,9 @@ object SamplingOps {
     require(splits.nonEmpty && splits.forall(_._2 > 0.0) &&
       math.abs(splits.map(_._2).sum - 1.0) < 1e-9,
       s"split fractions must be positive and sum to 1: $splits")
-    // hash uniform materialized ONCE (the q216 CSE pattern, VERDICT r16
-    // #7): the branch chain previously inlined the concat+FNV+scale tree
-    // once per split bound — one hash per row, identical values
+    // hash uniform materialized ONCE: inlined in the branch chain, the
+    // concat+FNV+scale tree would be evaluated once per split bound; as
+    // one projected column it is one hash per row, identical values
     val u = col("__u")
     val assigned =
       if (splits.size == 1) lit(splits.head._1)

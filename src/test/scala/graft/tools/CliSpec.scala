@@ -845,4 +845,55 @@ class CliSpec extends SparkSpec {
       "-bits", "6"))
     assert(spark.read.parquet(out).count() == 1000L)
   }
+  test("statistics and QC commands write their documented columns") {
+    import spark.implicits._
+    def table(df: org.apache.spark.sql.DataFrame): String = {
+      val p = tmpDir() + "/in.parquet"
+      df.write.parquet(p)
+      p
+    }
+    val stats = table(Seq(("a", 1L, 1L), ("a", 4L, 2L), ("b", 5L, 3L))
+      .toDF("g", "v", "t"))
+    val gts = table(Seq(("s1", 1L, 0), ("s2", 1L, 1), ("s1", 2L, 2),
+      ("s2", 2L, 1)).toDF("s", "site", "gt"))
+    val alleles = table(Seq(("A", "T"), ("C", "CTT"), ("GA", "G"))
+      .toDF("referenceAllele", "alternateAllele"))
+    val labels = table(Seq(("x", "x", 900L, true, 10L),
+      ("x", "y", 300L, false, 40L), ("y", "y", 800L, true, 20L))
+      .toDF("given", "pred", "conf", "ok", "score"))
+    val groupValue = Seq("-group", "g", "-value", "v")
+    val cases = Seq(
+      Seq("atkinson", stats) ++ groupValue -> Seq("g", "n", "atkinson"),
+      Seq("mad", stats, "-tie", "t") ++ groupValue ->
+        Seq("g", "n", "median", "mad"),
+      Seq("trimmedMean", stats, "-tie", "t") ++ groupValue ->
+        Seq("g", "n", "n_kept", "trimmed_mean"),
+      Seq("callRate", gts, "-sample", "s", "-gt", "gt") ->
+        Seq("s", "n_total", "n_called", "n_het", "n_hom_ref", "n_hom_alt",
+          "n_other", "call_rate_permille", "het_permille"),
+      Seq("inbreeding", gts, "-sample", "s", "-site", "site", "-gt", "gt") ->
+        Seq("s", "n_called", "n_het", "exp_het", "f"),
+      Seq("kinship", gts, "-sample", "s", "-site", "site", "-gt", "gt") ->
+        Seq("sample_i", "sample_j", "n_shared", "n_both_het", "n_opp_hom",
+          "n_het_i", "n_het_j", "kinship"),
+      Seq("subMatrix", alleles) ->
+        Seq("ref_allele", "alt_allele", "n", "permille"),
+      Seq("indelSpectrum", alleles, "-maxLen", "5") ->
+        Seq("dlen", "n_indels"),
+      Seq("calibrationBins", labels, "-conf", "conf", "-correct", "ok") ->
+        Seq("bin", "n", "conf_permille", "acc_permille", "gap_permille",
+          "ece_permille"),
+      Seq("confidentLearning", labels, "-given", "given", "-pred", "pred",
+        "-conf", "conf") -> Seq("given_label", "pred_label", "n",
+          "n_confident"),
+      Seq("conformal", labels, labels, "-score", "score") ->
+        Seq("n_cal", "threshold", "n_eval", "n_covered", "coverage_permille"))
+    cases.foreach { case (args, columns) =>
+      val out = tmpDir() + s"/${args.head}.parquet"
+      Cli.run(spark, args :+ out)
+      val got = spark.read.parquet(out)
+      assert(got.columns.toSeq == columns, args.head)
+      assert(got.count() > 0, args.head)
+    }
+  }
 }
