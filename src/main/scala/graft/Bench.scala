@@ -233,8 +233,10 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"suspect":$susp,"n_queries":${results.size},"n_catalog":$nCatalog$contended$drift,"sf":"$sfDir"}""")
     // The full per-query line above is ~12 KB at 228 queries, which
     // overflows a 2000-char stdout tail. Print a compact (<1500-byte)
-    // summary line LAST so the tail always ends with a parseable record.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"n_catalog":$nCatalog,"n_errors":${errors.size},"n_suspect":${stillSuspect.size}$contended,"sf":"$sfDir"}""")
+    // summary line LAST so the tail always ends with a parseable record;
+    // its own metric name keeps parsers from mistaking it for the
+    // per-query record.
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n_queries":${results.size},"n_catalog":$nCatalog,"n_errors":${errors.size},"n_suspect":${stillSuspect.size}$contended,"sf":"$sfDir"}""")
     if (errors.nonEmpty) {
       System.err.println(s"[bench] ${errors.size} queries FAILED: ${errors.keys.mkString(", ")}")
     }

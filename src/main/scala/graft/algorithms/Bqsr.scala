@@ -1,7 +1,9 @@
 package graft.algorithms
 
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import graft.model.Alignment
 import graft.functions.GenomicFunctions
 
@@ -20,7 +22,12 @@ import graft.functions.GenomicFunctions
   * this broadcast (docs/benchmarks/algorithms.rst:17-23).
   *
   * Pass 2 (recalibrate): empirical quality per key via the standard
-  * phred-space Bayesian estimate, rewritten into the quality string.
+  * phred-space Bayesian estimate, rewritten into the quality string. It is
+  * a narrow column rewrite: only `qualityScores` is recomputed, from five
+  * input columns, so the other fields stay in Catalyst's binary rows. The
+  * driver resolves the observation table once into per-read-group maps
+  * over pass 1's packed covariate key, holding the final quality char, so
+  * executors evaluate no per-base `log10` and allocate nothing per base.
   */
 object Bqsr {
 
@@ -71,7 +78,12 @@ object Bqsr {
     * The 5'-most sequenced base (stored index 0 on +, last index on -) has
     * no previous base -> "NN", and a pair containing an 'N' collapses to
     * "NN" too (DinucCovariate.scala:66-74 — GATK CSV compatibility). */
-  private[algorithms] def dinucAt(seq: String, i: Int, negativeStrand: Boolean): String = {
+  private[algorithms] def dinucAt(seq: String, i: Int, negativeStrand: Boolean): String =
+    dinucString(dinucPair(seq, i, negativeStrand))
+
+  /** [[dinucAt]] without the String: the two chars packed into one Int,
+    * first char in the high half. Both kernels key on this form. */
+  @inline private def dinucPair(seq: String, i: Int, negativeStrand: Boolean): Int = {
     var d0 = 'N'; var d1 = 'N'
     if (negativeStrand) {
       if (i < seq.length - 1) {
@@ -81,8 +93,13 @@ object Bqsr {
       d0 = Character.toUpperCase(seq.charAt(i - 1))
       d1 = Character.toUpperCase(seq.charAt(i))
     }
-    if (d0 == 'N' || d1 == 'N') "NN" else s"$d0$d1"
+    if (d0 == 'N' || d1 == 'N') NN else d0 << 16 | d1
   }
+
+  private val NN: Int = 'N' << 16 | 'N'
+
+  private def dinucString(pair: Int): String =
+    new String(Array((pair >>> 16).toChar, pair.toChar))
 
   /** Sequencer cycle of stored index i (CycleCovariate semantics): first-
     * of-fragment reads get positive 1-based cycles counted from the 5'
@@ -180,13 +197,17 @@ object Bqsr {
 
   /** Packs (quality, cycle, dinuc chars) into one primitive key:
     * q in bits 0-7, cycle+2^19 in bits 8-27 (reads up to ~512 kb), the two
-    * UTF-16 dinuc chars in bits 28-59. Reads with length >= [[MaxPackedLen]]
-    * would overflow the cycle field into the dinuc bits (|cycle| <= len),
-    * so [[observationDF]] routes them through [[observeRead]] instead of
-    * this packed fast path — divergence is impossible, not just loud. */
-  @inline private def packKey(q: Int, cycle: Int, d0: Char, d1: Char): Long =
-    ((d0.toLong << 16 | d1.toLong) << 28) |
-      ((cycle + (1 << 19)).toLong << 8) | q.toLong
+    * UTF-16 dinuc chars ([[dinucPair]]) in bits 28-59. Only [[packable]]
+    * (q, cycle) pairs fit: reads with length >= [[MaxPackedLen]] would
+    * overflow the cycle field into the dinuc bits (|cycle| <= len), so
+    * [[observationDF]] routes them through [[observeRead]], and pass 2
+    * looks their out-of-range cycles up by tuple — divergence is
+    * impossible, not just loud. */
+  @inline private def packKey(q: Int, cycle: Int, dinuc: Int): Long =
+    (dinuc & 0xffffffffL) << 28 | (cycle + (1 << 19)).toLong << 8 | q.toLong
+
+  @inline private def packable(q: Int, cycle: Int): Boolean =
+    (q & ~0xff) == 0 && cycle > -MaxPackedLen && cycle < MaxPackedLen
 
   /** Longest read the packed covariate key can hold (~512 kb; ultra-long
     * nanopore reads beyond this take the unpacked [[observeRead]] path). */
@@ -265,28 +286,23 @@ object Bqsr {
                   if (q >= MinQuality && seq.charAt(readPos) != 'N' &&
                     !fn(refName, start + refOff)) {
                     val cycle = cycleAt(readPos, len, neg, second)
-                    // dinuc chars exactly as dinucAt computes them
-                    var d0 = 'N'; var d1 = 'N'
-                    if (neg) {
-                      if (readPos < len - 1) {
-                        d0 = complement(seq.charAt(readPos + 1))
-                        d1 = complement(seq.charAt(readPos))
-                      }
-                    } else if (readPos > 0) {
-                      d0 = Character.toUpperCase(seq.charAt(readPos - 1))
-                      d1 = Character.toUpperCase(seq.charAt(readPos))
-                    }
-                    if (d0 == 'N' || d1 == 'N') { d0 = 'N'; d1 = 'N' }
+                    val dinuc = dinucPair(seq, readPos, neg)
                     while (mi < mmOff.length && mmOff(mi) < mdOff) mi += 1
                     val mm = e.op match {
                       case 'X' => true
                       case '=' => false
                       case _   => mi < mmOff.length && mmOff(mi) == mdOff
                     }
-                    val cell = acc.getOrElseUpdate(
-                      packKey(q, cycle, d0, d1), new Array[Long](2))
-                    cell(0) += 1L
-                    if (mm) cell(1) += 1L
+                    if (packable(q, cycle)) {
+                      val cell = acc.getOrElseUpdate(
+                        packKey(q, cycle, dinuc), new Array[Long](2))
+                      cell(0) += 1L
+                      if (mm) cell(1) += 1L
+                    } else {
+                      // a reported quality above 255 does not fit the key
+                      overflow += Observation(r.rg, q, cycle,
+                        dinucString(dinuc), 1L, if (mm) 1L else 0L)
+                    }
                   }
                   readPos += 1; refOff += 1; mdOff += 1; k += 1
                 }
@@ -303,10 +319,8 @@ object Bqsr {
         rgEntry.getValue.iterator.map { case (key, cell) =>
           val q = (key & 0xffL).toInt
           val cycle = ((key >>> 8) & 0xfffffL).toInt - (1 << 19)
-          val chars = Array(((key >>> 44) & 0xffffL).toChar,
-            ((key >>> 28) & 0xffffL).toChar)
-          Observation(rgEntry.getKey, q, cycle, new String(chars),
-            cell(0), cell(1))
+          Observation(rgEntry.getKey, q, cycle,
+            dinucString((key >>> 28).toInt), cell(0), cell(1))
         }
       } ++ overflow.iterator
     }
@@ -334,38 +348,84 @@ object Bqsr {
     math.min(50, math.round(-10.0 * math.log10(p)).toInt)
   }
 
+  /** Pass 2's view of an observation table, built once on the driver:
+    * per read group, pass 1's packed covariate key ([[packKey]]) -> the
+    * output quality char of that cell (its [[empiricalQuality]] floored at
+    * 2, +33; 0 is never a cell). Cells whose (q, cycle) is not
+    * [[packable]] keep a tuple key in `wide`. Dinucleotides that are not
+    * two chars are dropped: pass 2 never forms them. */
+  private case class RecalTable(
+      packed: Map[String, scala.collection.mutable.LongMap[Int]],
+      wide: Map[(String, Int, Int, String), Int])
+
+  private object RecalTable {
+    def apply(table: Map[(String, Int, Int, String), (Long, Long)]): RecalTable = {
+      val packed = scala.collection.mutable.HashMap
+        .empty[String, scala.collection.mutable.LongMap[Int]]
+      val wide = Map.newBuilder[(String, Int, Int, String), Int]
+      table.foreach { case (key @ (rg, q, cycle, dinuc), (obs, mm)) =>
+        val out = math.max(2, empiricalQuality(obs, mm)) + 33
+        if (dinuc != null && dinuc.length == 2) {
+          if (packable(q, cycle))
+            packed.getOrElseUpdate(rg, new scala.collection.mutable.LongMap[Int]())
+              .update(packKey(q, cycle, dinuc.charAt(0) << 16 | dinuc.charAt(1)), out)
+          else wide += key -> out
+        }
+      }
+      RecalTable(packed.toMap, wide.result())
+    }
+  }
+
+  /** The recalibrated quality string of one mapped read with non-empty
+    * sequence and qualities: each base's cell char, or its reported
+    * quality floored at 2 when the table has no cell. */
+  private def recalibrateQuals(seq: String, quals: String, neg: Boolean,
+      second: Boolean, rg: String, t: RecalTable): String = {
+    val cells = t.packed.getOrElse(rg, null)
+    val out = new Array[Char](quals.length)
+    var i = 0
+    while (i < out.length) {
+      val q = quals.charAt(i) - 33
+      val cycle = cycleAt(i, seq.length, neg, second)
+      val dinuc = dinucPair(seq, i, neg)
+      val c =
+        if (packable(q, cycle)) {
+          if (cells == null) 0 else cells.getOrNull(packKey(q, cycle, dinuc))
+        } else t.wide.getOrElse((rg, q, cycle, dinucString(dinuc)), 0)
+      out(i) = if (c != 0) c.toChar else (math.max(2, q) + 33).toChar
+      i += 1
+    }
+    new String(out)
+  }
+
   /** Pass 2: rewrite quality strings via the broadcast table. Bases with no
-    * table entry keep their reported quality. */
+    * table entry keep their reported quality (floored at 2). Unmapped reads
+    * and reads with a missing or empty sequence or quality string are left
+    * as they are. Only the `qualityScores` column is rewritten, by a UDF
+    * over five columns; the output has [[Alignment]]'s schema. */
   def recalibrate(
       reads: Dataset[Alignment],
       table: Map[(String, Int, Int, String), (Long, Long)]): Dataset[Alignment] = {
-    val spark = reads.sparkSession
-    val tableB = spark.sparkContext.broadcast(table)
-    reads.map { r =>
-      val seq = r.sequence.getOrElse("")
-      val quals = r.qualityScores.getOrElse("")
-      if (!r.readMapped.getOrElse(false) || quals.isEmpty || seq.isEmpty) r
-      else {
-        val neg = r.readNegativeStrand.getOrElse(false)
-        val second = r.readInFragment.exists(_ != 0)
-        val rg = r.readGroupId.getOrElse("")
-        val t = tableB.value
-        val sb = new StringBuilder(quals.length)
-        var i = 0
-        while (i < quals.length) {
-          val q = quals.charAt(i) - 33
-          val cycle = cycleAt(i, seq.length, neg, second)
-          val dinuc = dinucAt(seq, i, neg)
-          val newQ = t.get((rg, q, cycle, dinuc)) match {
-            case Some((obs, mm)) => empiricalQuality(obs, mm)
-            case None => q
-          }
-          sb.append((math.max(2, newQ) + 33).toChar)
-          i += 1
-        }
-        r.copy(qualityScores = Some(sb.toString))
-      }
-    }
+    val tableB = reads.sparkSession.sparkContext.broadcast(RecalTable(table))
+    val recalU = udf((seq: String, quals: String, neg: Boolean,
+        second: Boolean, rg: String) =>
+      recalibrateQuals(seq, quals, neg, second, rg, tableB.value))
+    val quals = when(
+      coalesce(col("readMapped"), lit(false)) &&
+        length(col("sequence")) > 0 && length(col("qualityScores")) > 0,
+      recalU(col("sequence"), col("qualityScores"),
+        coalesce(col("readNegativeStrand"), lit(false)),
+        coalesce(col("readInFragment"), lit(0)) =!= 0,
+        coalesce(col("readGroupId"), lit(""))))
+      .otherwise(col("qualityScores"))
+    // Alignment's column order, types and nullability, as the encoder
+    // would write them: a non-nullable input column (a computed flag, say)
+    // would otherwise be written as a required parquet field
+    reads.toDF().select(alignEnc.schema.fields.toSeq.map { f =>
+      val c = (if (f.name == "qualityScores") quals else col(f.name))
+        .cast(f.dataType)
+      ColumnBridge.column(KnownNullable(ColumnBridge.expression(c))).as(f.name)
+    }: _*).as[Alignment]
   }
 
   /** Compact broadcastable known-sites mask: per-contig SORTED primitive

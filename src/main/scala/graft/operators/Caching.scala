@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Repo-wide cache-lifetime convention, so that repeated operator calls
   * neither leak cached blocks nor free a cache a caller still reads.
@@ -74,27 +75,41 @@ object Caching {
     * `sc.setCheckpointDir(...)`), iteration state is cut with a RELIABLE
     * checkpoint to that directory instead, so iterative operators survive
     * executor loss. Local defaults (flag unset) are byte-identical to the
-    * previous behavior. */
+    * previous behavior. A local cut is recorded so that
+    * [[freeSuperseded]] can later free it. */
   def cutLineage(df: DataFrame): DataFrame =
     if (df.sparkSession.conf
       .get("spark.graft.checkpoint.reliable", "false").toBoolean)
       df.checkpoint()
-    else df.localCheckpoint()
+    else {
+      val cut = df.localCheckpoint()
+      cut.queryExecution.analyzed.foreach {
+        case lr: LogicalRDD => cutRdds.put(lr.rdd, java.lang.Boolean.TRUE)
+        case _ => ()
+      }
+      cut
+    }
+
+  /** The RDDs behind the local checkpoints [[cutLineage]] made and
+    * [[freeSuperseded]] has not freed yet. Weak keys: an unfreed cut is
+    * forgotten with its RDD. */
+  private val cutRdds = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], java.lang.Boolean]())
 
   /** Free a SUPERSEDED iteration checkpoint's storage once its successor
     * is materialized (ADVICE r16: per-round checkpoint blocks otherwise
     * accumulate across rounds — up to 50 in clusterDuplicates — until the
     * ContextCleaner happens to run). Only call this on a checkpoint whose
     * every consumer has already been EAGERLY materialized: the blocks are
-    * deleted and, lineage being truncated, cannot be recomputed. No-op for
-    * reliable (directory-backed) checkpoints — their files are the
-    * fault-tolerance story — and for plans that are not checkpoint scans. */
+    * deleted and, lineage being truncated, cannot be recomputed. Frees
+    * only the local checkpoints that [[cutLineage]] made: any other
+    * persisted relation in the plan (a caller's own checkpoint, say)
+    * keeps its blocks, and reliable (directory-backed) checkpoints keep
+    * their files, which are the fault-tolerance story. Idempotent. */
   def freeSuperseded(df: Dataset[_]): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        if (lr.rdd.getStorageLevel !=
-          org.apache.spark.storage.StorageLevel.NONE)
-          lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD if cutRdds.remove(lr.rdd) != null =>
+        lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
 }

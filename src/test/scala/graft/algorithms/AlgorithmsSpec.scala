@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.core.ReferenceContigs
 import graft.model._
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 class SmithWatermanSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -155,13 +156,18 @@ class BqsrSpec extends SparkSpec {
       base.copy(readName = Some("x10"), mismatchingPositions = None),
       base.copy(readName = Some("x11"), cigar = None),
       base.copy(readName = Some("x12"), readMapped = None))
-    val ds = spark.createDataset(reads ++ excluded)
+    // reported quality 287 does not fit the packed key's 8 bits
+    val wideQ = reads(1).copy(readName = Some("wq"),
+      qualityScores = reads(1).qualityScores.map("\u0140\u0140" + _.drop(2)))
+    val all = reads ++ excluded :+ wideQ
+    val ds = spark.createDataset(all)
     val mask = Bqsr.SnpMask(Seq(("chr0", 100L), ("chr1", 200L)))
     val fn = (ref: String, pos: Long) => mask.contains(ref, pos)
     val fast = Bqsr.observationDF(ds, fn).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3)) ->
         (r.getLong(4), r.getLong(5))).toMap
-    val slow = (reads ++ excluded).flatMap(r => Bqsr.observeRead(r, fn))
+    assert(fast.keys.exists(_._2 == 287))
+    val slow = all.flatMap(r => Bqsr.observeRead(r, fn))
       .groupBy(o => (o.readGroupId, o.reportedQuality, o.cycle, o.dinuc))
       .view.mapValues(os =>
         (os.map(_.observations).sum, os.map(_.mismatches).sum)).toMap
@@ -244,6 +250,139 @@ class BqsrSpec extends SparkSpec {
     val viaMask = Bqsr(ds, Bqsr.SnpMask(Seq(("chr1", 104L)))).collect()
       .map(r => r.readName.get -> r.qualityScores.get).toMap
     assert(viaSet == viaMask)
+  }
+
+  test("recalibrate's column rewrite matches the per-read oracle field for field") {
+    import scala.util.Random
+    val rnd = new Random(53)
+    val bases = "ACGTNacgtn"
+    def str(len: Int, from: String) =
+      (0 until len).map(_ => from(rnd.nextInt(from.length))).mkString
+    // quality chars from '!' (q 0) up, so '!' and '"' are floored to 2
+    def quals(len: Int) = (0 until len).map(_ => (33 + rnd.nextInt(45)).toChar).mkString
+    val random = (0 until 300).map { i =>
+      val len = 5 + rnd.nextInt(40)
+      val mmAt = rnd.nextInt(len)
+      Alignment(readName = Some(f"r$i%03d"), referenceName = Some("chr1"),
+        start = Some(rnd.nextInt(2000).toLong), end = Some(3000L),
+        cigar = Some(s"${len}M"), sequence = Some(str(len, bases)),
+        qualityScores = Some(quals(len)), readMapped = Some(true),
+        mappingQuality = Some(60),
+        readNegativeStrand = if (i % 7 == 0) None else Some(rnd.nextBoolean()),
+        readPaired = Some(true),
+        readInFragment = if (i % 11 == 0) None else Some(rnd.nextInt(2)),
+        duplicateRead = Some(i % 13 == 0), mateReferenceName = Some("chr2"),
+        insertSize = Some(rnd.nextInt(500).toLong),
+        readGroupId = if (i % 17 == 0) None else Some("rg" + rnd.nextInt(4)),
+        mismatchingPositions = Some(s"${mmAt}A${len - mmAt - 1}"),
+        attributes = Map("NM" -> "1", "XR" -> s"v$i"))
+    }
+    val base = random(1)
+    val untouched = Seq(
+      base.copy(readName = Some("u1"), readMapped = None),
+      base.copy(readName = Some("u2"), readMapped = Some(false)),
+      base.copy(readName = Some("u3"), sequence = None),
+      base.copy(readName = Some("u4"), sequence = Some("")),
+      base.copy(readName = Some("u5"), qualityScores = None),
+      base.copy(readName = Some("u6"), qualityScores = Some("")))
+    val odd = Seq(
+      // quality string shorter than the sequence
+      base.copy(readName = Some("o1"),
+        qualityScores = base.qualityScores.map(_.drop(3))),
+      // longer than the sequence on the negative strand (dinuc "NN")
+      base.copy(readName = Some("o2"), readNegativeStrand = Some(true),
+        qualityScores = base.qualityScores.map(_ + "IIII")),
+      // q -1 at stored index 2 (cycle 3, "CG") and q 287 at index 4
+      // (cycle 5, "TA"): both outside the packed key's 8 bits
+      Alignment(readName = Some("w1"), referenceName = Some("chr1"),
+        start = Some(5L), cigar = Some("8M"), sequence = Some("ACGTACGT"),
+        qualityScores = Some("II I\u0140III"), readMapped = Some(true),
+        mappingQuality = Some(60), readGroupId = Some("rgW"),
+        mismatchingPositions = Some("8")))
+    val len = Bqsr.MaxPackedLen + 8
+    val long = Alignment(readName = Some("ultra"), referenceName = Some("chr1"),
+      start = Some(10L), cigar = Some(s"${len}M"),
+      sequence = Some(("ACGT" * (len / 4 + 1)).take(len)),
+      qualityScores = Some("I" * len), readMapped = Some(true),
+      mappingQuality = Some(60), readGroupId = Some("rgL"),
+      mismatchingPositions = Some(len.toString))
+    val all = random ++ untouched ++ odd :+ long
+
+    // the table sees half the reads, never rg3, and loses about a fifth
+    // of the short reads' cells, so absent read groups and keys without a
+    // cell both occur
+    val mask = Bqsr.SnpMask(Seq(("chr1", 700L), ("chr1", 1400L)))
+    val observed = Bqsr.observationTable(
+      spark.createDataset(random.take(150).filter(!_.readGroupId.contains("rg3")) :+ long),
+      (ref, pos) => mask.contains(ref, pos))
+    val table = observed.filter { case (k, _) =>
+      k._1 == "rgL" || (k.hashCode & 0x7fffffff) % 5 != 0 } ++ Map(
+        ("rgW", -1, 3, "CG") -> (10L, 9L), ("rgW", 287, 5, "TA") -> (100L, 0L))
+    assert(table.keys.exists(k => k._1 == "rgL" && k._3 >= Bqsr.MaxPackedLen))
+
+    val ds = spark.createDataset(all)
+    // the same reads behind a plan with reordered and extra columns and a
+    // non-nullable one
+    val reordered = ds.toDF().withColumn("extra", lit(1))
+      .withColumn("duplicateRead", coalesce(col("duplicateRead"), lit(false)))
+      .select((col("extra") +: ds.columns.reverse.toSeq.map(col)): _*)
+      .as[Alignment]
+    assert(!reordered.schema("duplicateRead").nullable)
+    Seq(ds, reordered).foreach { in =>
+      val got = Bqsr.recalibrate(in, table)
+      val want = BqsrSpec.recalibrateOracle(in, table)
+      assert(got.schema == want.schema)
+      val gotRows = got.toDF().collect().sortBy(_.getAs[String]("readName")).toSeq
+      val wantRows = want.toDF().collect().sortBy(_.getAs[String]("readName")).toSeq
+      assert(gotRows == wantRows)
+      val byName = got.collect().map(r => r.readName.get -> r).toMap
+      assert(byName == want.collect().map(r => r.readName.get -> r).toMap)
+      untouched.foreach(u => assert(byName(u.readName.get) == u))
+      // the wide cells were found: -1 -> (9+1)/(10+2) floors to 2, 287 -> 20
+      assert(byName("w1").qualityScores.contains("II#I5III"))
+      // the ultra-long read's cycles past the packed range hit their cells
+      assert(byName("ultra").qualityScores.get.takeRight(9).forall(_ != 'I'))
+      assert(random.count(r => byName(r.readName.get) != r) > 150)
+    }
+  }
+}
+
+object BqsrSpec {
+  private implicit val alignEnc: org.apache.spark.sql.Encoder[Alignment] =
+    Encoders.product[Alignment]
+
+  /** The per-read pass-2 body that `Bqsr.recalibrate` replaced: every read
+    * deserialized, each base keyed by tuple and dinucleotide String. */
+  def recalibrateOracle(
+      reads: org.apache.spark.sql.Dataset[Alignment],
+      table: Map[(String, Int, Int, String), (Long, Long)])
+      : org.apache.spark.sql.Dataset[Alignment] = {
+    val tableB = reads.sparkSession.sparkContext.broadcast(table)
+    reads.map { r =>
+      val seq = r.sequence.getOrElse("")
+      val quals = r.qualityScores.getOrElse("")
+      if (!r.readMapped.getOrElse(false) || quals.isEmpty || seq.isEmpty) r
+      else {
+        val neg = r.readNegativeStrand.getOrElse(false)
+        val second = r.readInFragment.exists(_ != 0)
+        val rg = r.readGroupId.getOrElse("")
+        val t = tableB.value
+        val sb = new StringBuilder(quals.length)
+        var i = 0
+        while (i < quals.length) {
+          val q = quals.charAt(i) - 33
+          val cycle = Bqsr.cycleAt(i, seq.length, neg, second)
+          val dinuc = Bqsr.dinucAt(seq, i, neg)
+          val newQ = t.get((rg, q, cycle, dinuc)) match {
+            case Some((obs, mm)) => Bqsr.empiricalQuality(obs, mm)
+            case None => q
+          }
+          sb.append((math.max(2, newQ) + 33).toChar)
+          i += 1
+        }
+        r.copy(qualityScores = Some(sb.toString))
+      }
+    }
   }
 }
 

@@ -75,6 +75,23 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(live <= 2, s"expected <=2 live blocks after pageRank, got $live")
   }
 
+  test("freeSuperseded frees only the checkpoints cutLineage made") {
+    def live = spark.sparkContext.getPersistentRDDs
+    def rddOf(d: org.apache.spark.sql.Dataset[_]) =
+      d.queryExecution.analyzed.collectFirst {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      }.get
+    // a caller's own checkpoint, embedded in the plan beside a cut
+    val theirs = graphEdges.localCheckpoint()
+    val ours = Caching.cutLineage(graphEdges.groupBy("src").count())
+    assert(live.contains(rddOf(theirs).id) && live.contains(rddOf(ours).id))
+    Caching.freeSuperseded(ours.join(theirs, "src"))
+    assert(!live.contains(rddOf(ours).id))
+    assert(live.contains(rddOf(theirs).id))
+    assert(theirs.count() == 8)
+    rddOf(theirs).unpersist(blocking = true)
+  }
+
   test("kCoreByMedianDegree: reliable path matches local path") {
     val local = GraphOps.kCoreByMedianDegree(graphEdges, rounds = 2)
       .orderBy("node").collect().toSeq.map(_.toString)

@@ -808,6 +808,36 @@ class TextDedupSpec extends SparkSpec {
     assert(got.toSet.subsetOf(wider))
   }
 
+  test("quotaSample and hashSplit leave a caller's own scratch-named columns alone") {
+    import spark.implicits._
+    val plain = (1L to 3000L).map(i => (i, if (i % 3 == 0) "a" else "b"))
+      .toDF("id", "s")
+    // the names the two operators use for their own scratch columns
+    val mine = plain
+      .withColumn("__u", concat(lit("mine-"), col("id").cast("string")))
+      .withColumn("__r1", lit(-1))
+    val sampled = SamplingOps.quotaSample(mine, "s", "id", n = 50)
+    assert(sampled.columns.toSeq == mine.columns.toSeq)
+    val got = sampled.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3)))
+    assert(got.forall { case (id, _, u, r1) => u == s"mine-$id" && r1 == -1 })
+    val want = SamplingOps.quotaSample(plain, "s", "id", n = 50).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(want.size == 100)
+    assert(got.map(t => (t._1, t._2)).toSet == want)
+
+    val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
+    val split = SamplingOps.hashSplit(mine, "id", splits)
+    assert(split.columns.toSeq == mine.columns.toSeq :+ "split")
+    val gotSplit = split.collect().map(r =>
+      (r.getLong(0), r.getAs[String]("__u"), r.getAs[String]("split")))
+    assert(gotSplit.forall { case (id, u, _) => u == s"mine-$id" })
+    val wantSplit = SamplingOps.hashSplit(plain, "id", splits)
+      .select("id", "split").collect().map(r => r.getLong(0) -> r.getString(1))
+    assert(gotSplit.map(t => t._1 -> t._3).toMap == wantSplit.toMap)
+    assert(wantSplit.map(_._2).distinct.length == 3)
+  }
+
   test("materializeEpochs repeats under-sized strata with tagged epochs") {
     import spark.implicits._
     val df = ((1L to 100L).map((_, "hot")) ++ (101L to 1100L).map((_, "cold"))
