@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import graft.model.Alignment
 import graft.functions.GenomicFunctions
+import graft.operators.Caching
 
 /** Base Quality Score Recalibration (SURVEY.md §2.5; reference
   * ds/read/recalibration/BaseQualityRecalibration.scala:58-120,
@@ -476,15 +477,28 @@ object Bqsr {
   }
 
   /** Full pipeline: observe (masking known sites) then recalibrate
-    * (recalibrateBaseQualities, AlignmentDataset.scala:1089-1163). */
+    * (recalibrateBaseQualities, AlignmentDataset.scala:1089-1163).
+    *
+    * The input's lineage is cut once, with [[Caching.cutLineage]], before
+    * pass 1: pass 1, pass 2 and every later action on the returned
+    * Dataset (a sort's range sampling, a parquet or BAM write) read that
+    * one materialization instead of re-running the upstream plan (a BAM
+    * decode and markdup's shuffles, say) per action. The blocks are local
+    * MEMORY_AND_DISK checkpoint blocks, or a reliable checkpoint when the
+    * deployment sets `spark.graft.checkpoint.reliable` (clusters, where a
+    * lost executor cannot recompute a local block). They belong to the
+    * returned result's RDD lineage, not to a cache-manager entry, so the
+    * ContextCleaner frees them once that result is unreferenced (tier 1 in
+    * [[Caching]]'s convention); a caller's own persisted input is left as
+    * it is. */
   def apply(
       reads: Dataset[Alignment],
       mask: SnpMask): Dataset[Alignment] = {
     val spark = reads.sparkSession
     val maskB = spark.sparkContext.broadcast(mask)
     val isKnown = (ref: String, pos: Long) => maskB.value.contains(ref, pos)
-    val table = observationTable(reads, isKnown)
-    recalibrate(reads, table)
+    val cut = Caching.cutLineage(reads.toDF()).as[Alignment]
+    recalibrate(cut, observationTable(cut, isKnown))
   }
 
   /** Set-based convenience overload (tests, small masks). */

@@ -235,6 +235,10 @@ object AlignmentOps {
     val libU = udf((rg: String) => libOfB.value.getOrElse(rg, rg))
 
     val df = reads.toDF()
+    // scratch names absent from the caller's frame: the verdict join and
+    // the final drop must not meet a caller column of the same name
+    val Seq(rgC, nameC, scoreSumC, endsC, isDupC) =
+      ScratchColumns.fresh(df, "__rg", "__name", "__scoreSum", "ends", "isDup")
     val isPrimary = coalesce(col("primaryAlignment"), lit(true)) &&
       !coalesce(col("secondaryAlignment"), lit(false)) &&
       !coalesce(col("supplementaryAlignment"), lit(false))
@@ -242,11 +246,11 @@ object AlignmentOps {
 
     val keyed = df
       .groupBy(
-        coalesce(col("readGroupId"), lit("")).as("__rg"),
-        coalesce(col("readName"), lit("")).as("__name"))
+        coalesce(col("readGroupId"), lit("")).as(rgC),
+        coalesce(col("readName"), lit("")).as(nameC))
       .agg(
         sum(when(isPrimary, scoreU(coalesce(col("qualityScores"), lit("")))))
-          .as("__scoreSum"),
+          .as(scoreSumC),
         // ends sorted by (ref, pos, strand) = keyOf's ReferencePosition order
         sort_array(collect_list(when(isPrimary && isMapped,
           struct(
@@ -255,32 +259,32 @@ object AlignmentOps {
               coalesce(col("cigar"), lit("*")),
               coalesce(col("readNegativeStrand"), lit(false))).as("p"),
             coalesce(col("readNegativeStrand"), lit(false)).as("n")))))
-          .as("ends"))
+          .as(endsC))
       .select(
-        col("__rg"), col("__name"),
-        libU(col("__rg")).as("library"),
-        when(size(col("ends")) === 0, lit("")).otherwise(col("ends")(0)("r")).as("leftRef"),
-        when(size(col("ends")) === 0, lit(-1L)).otherwise(col("ends")(0)("p")).as("leftPos"),
-        when(size(col("ends")) === 0, lit(false)).otherwise(col("ends")(0)("n")).as("leftStrand"),
-        when(size(col("ends")) <= 1, lit("")).otherwise(element_at(col("ends"), -1)("r")).as("rightRef"),
-        when(size(col("ends")) <= 1, lit(-1L)).otherwise(element_at(col("ends"), -1)("p")).as("rightPos"),
-        when(size(col("ends")) <= 1, lit(false)).otherwise(element_at(col("ends"), -1)("n")).as("rightStrand"),
-        coalesce(col("__scoreSum"), lit(0)).cast("int").as("score"),
-        col("__name").as("name"))
+        col(rgC), col(nameC),
+        libU(col(rgC)).as("library"),
+        when(size(col(endsC)) === 0, lit("")).otherwise(col(endsC)(0)("r")).as("leftRef"),
+        when(size(col(endsC)) === 0, lit(-1L)).otherwise(col(endsC)(0)("p")).as("leftPos"),
+        when(size(col(endsC)) === 0, lit(false)).otherwise(col(endsC)(0)("n")).as("leftStrand"),
+        when(size(col(endsC)) <= 1, lit("")).otherwise(element_at(col(endsC), -1)("r")).as("rightRef"),
+        when(size(col(endsC)) <= 1, lit(-1L)).otherwise(element_at(col(endsC), -1)("p")).as("rightPos"),
+        when(size(col(endsC)) <= 1, lit(false)).otherwise(element_at(col(endsC), -1)("n")).as("rightStrand"),
+        coalesce(col(scoreSumC), lit(0)).cast("int").as("score"),
+        col(nameC).as("name"))
 
     val verdict = DupKeying.flagDuplicates(keyed)
-      .select(col("__rg"), col("__name"), col("isDup"))
+      .select(col(rgC), col(nameC), col("isDup").as(isDupC))
 
     // shuffle-hash: (rg, name) keys are uniform and the verdict side is
     // narrow — avoids sorting the full-record side in a sort-merge join
     df.join(verdict.hint("shuffle_hash"),
-        coalesce(df("readGroupId"), lit("")) === verdict("__rg") &&
-          coalesce(df("readName"), lit("")) === verdict("__name"))
+        coalesce(df("readGroupId"), lit("")) === verdict(rgC) &&
+          coalesce(df("readName"), lit("")) === verdict(nameC))
       .withColumn("duplicateRead",
         // secondary/supplementary reads inherit the fragment's duplicate flag
         when(col("readMapped") === true || col("readPaired") === true,
-          col("isDup")).otherwise(lit(false)))
-      .drop("__rg", "__name", "isDup")
+          col(isDupC)).otherwise(lit(false)))
+      .drop(rgC, nameC, isDupC)
       .as[Alignment]
   }
 

@@ -19,6 +19,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * where they found it. Use it only when the result is bounded (collect-
   * safe scale: top-k rows, day counts, group grids) or already
   * materialized — never to checkpoint a corpus-sized output.
+  * A corpus-sized input that several actions read is cut with
+  * [[Caching.cutLineage]] instead, which adds no CacheManager entry:
+  * [[graft.algorithms.Bqsr.apply]] cuts its reads once so that both BQSR
+  * passes and every action on its result share one materialization,
+  * whose blocks the ContextCleaner frees with the result.
   *
   * '''Tier 2 — plan-owned cache (the documented exception).''' When the
   * RETURNED corpus-sized plan must re-read one materialization of a

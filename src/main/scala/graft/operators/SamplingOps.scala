@@ -443,7 +443,7 @@ object SamplingOps {
     // not share the concat+FNV+scale tree between the two window sort
     // keys, so inlining it hashes every row twice; the projected column
     // is the identical expression, so the values are the same
-    val Seq(u, r1, r2) = scratchNames(df, "__u", "__r1", "__r2")
+    val Seq(u, r1, r2) = ScratchColumns.fresh(df, "__u", "__r1", "__r2")
     val w1 = Window
       .partitionBy(col(strataCol),
         pmod(xxhash64(col(keyCol)), lit(shards)))
@@ -456,20 +456,6 @@ object SamplingOps {
       .withColumn(r2, row_number().over(w2))
       .filter(col(r2) <= n)
       .drop(r1, r2, u)
-  }
-
-  /** Scratch column names absent from `df`'s schema, one per base: the
-    * base itself, else the base with the smallest free numeric suffix, so
-    * a caller's own column of that name is never overwritten and dropped.
-    * Compared case-insensitively, as Spark resolves columns. */
-  private[operators] def scratchNames(df: DataFrame, bases: String*): Seq[String] = {
-    val taken = scala.collection.mutable.Set(df.columns.map(_.toLowerCase): _*)
-    bases.map { b =>
-      val name = Iterator.from(0).map(i => if (i == 0) b else s"${b}_$i")
-        .find(n => !taken(n.toLowerCase)).get
-      taken += name.toLowerCase
-      name
-    }
   }
 
   /** Weighted sampling WITHOUT replacement (Efraimidis-Spirakis
@@ -525,7 +511,7 @@ object SamplingOps {
     // hash uniform materialized ONCE: inlined in the branch chain, the
     // concat+FNV+scale tree would be evaluated once per split bound; as
     // one projected column it is one hash per row, identical values
-    val Seq(uName) = scratchNames(df, "__u")
+    val Seq(uName) = ScratchColumns.fresh(df, "__u")
     val u = col(uName)
     val assigned =
       if (splits.size == 1) lit(splits.head._1)

@@ -483,9 +483,12 @@ object BamIO {
       u8((hi << 4) | lo)
       i += 2
     }
+    // exactly l_seq quality bytes (SAM spec §4.2): a quality string of any
+    // other length is written as missing (0xff), or the reader would take
+    // tag bytes for qualities
     r.qualityScores match {
-      case Some(q) => q.foreach(c => u8(c - 33))
-      case None => (0 until seq.length).foreach(_ => u8(0xff))
+      case Some(q) if q.length == seq.length => q.foreach(c => u8(c - 33))
+      case _ => (0 until seq.length).foreach(_ => u8(0xff))
     }
     // tags: keep string/int-typed attributes
     r.attributes.toSeq.sortBy(_._1).foreach { case (tag, tv) =>

@@ -345,6 +345,39 @@ class BqsrSpec extends SparkSpec {
       assert(random.count(r => byName(r.readName.get) != r) > 150)
     }
   }
+
+  test("Bqsr reads its input once and matches the two passes on the uncut input") {
+    val rnd = new scala.util.Random(71)
+    val reads = (0 until 200).map { i =>
+      val seq = (0 until 30).map(_ => "ACGT"(rnd.nextInt(4))).mkString
+      val quals = (0 until 30).map(_ => (48 + rnd.nextInt(30)).toChar).mkString
+      val mm = rnd.nextInt(30)
+      read(f"b$i%03d", rnd.nextInt(1000).toLong, seq, quals,
+        s"${mm}A${29 - mm}", rg = "rg" + (i % 3))
+        .copy(readNegativeStrand = Some(i % 2 == 0),
+          readInFragment = Some(i % 4 / 2))
+    }
+    val mask = Bqsr.SnpMask(Seq(("chr1", 120L), ("chr1", 500L)))
+    val upstream = spark.createDataset(reads).repartition(3)
+    val seen = spark.sparkContext.longAccumulator("bqsr-input-rows")
+    val counted = upstream.map { r => seen.add(1L); r }
+
+    val out = Bqsr(counted, mask)
+    assert(out.count() == reads.size)
+    out.write.parquet(tmpDir() + "/recal")
+    assert(seen.value == reads.size,
+      s"${seen.value} input rows computed for ${reads.size} reads")
+
+    // the same output, schema included, as both passes on the uncut input
+    val want = Bqsr.recalibrate(upstream,
+      Bqsr.observationTable(upstream, (ref, pos) => mask.contains(ref, pos)))
+    assert(out.schema == want.schema)
+    val byName = (ds: org.apache.spark.sql.Dataset[Alignment]) =>
+      ds.toDF().collect().sortBy(_.getAs[String]("readName")).toSeq
+    assert(byName(out) == byName(want))
+    assert(byName(out).map(_.getAs[String]("qualityScores")) !=
+      reads.sortBy(_.readName.get).map(_.qualityScores.get))
+  }
 }
 
 object BqsrSpec {

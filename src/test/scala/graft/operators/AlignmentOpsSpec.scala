@@ -136,6 +136,38 @@ class AlignmentOpsSpec extends SparkSpec {
     assert(res("lone") == false)
   }
 
+  test("markDuplicates leaves a caller's own scratch-named columns alone") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val reads = spark.createDataset(Seq(
+      read("low", start = 100L, qual = "##########"),
+      read("high", start = 100L, qual = "IIIIIIIIII"),
+      read("p", start = 300L, paired = true, fragIdx = 0),
+      read("p", start = 500L, paired = true, fragIdx = 1, negative = true),
+      read("q", start = 300L, paired = true, fragIdx = 0, qual = "5555555555"),
+      read("q", start = 500L, paired = true, fragIdx = 1, negative = true,
+        qual = "5555555555"),
+      read("um", mapped = false)))
+    def flags(ds: org.apache.spark.sql.Dataset[Alignment]) =
+      ds.collect().map(r => (r.readName.get, r.readInFragment.get) -> r.duplicateRead.get).toMap
+    val plain = flags(AlignmentOps.markDuplicates(reads))
+    assert(plain.count(_._2) == 3) // low and both q reads
+    val extra = reads.toDF()
+      .withColumn("isDup", col("readName") === "high")
+      .withColumn("__rg", concat(lit("caller-"), col("readName")))
+      .as[Alignment]
+    val marked = AlignmentOps.markDuplicates(extra)
+    assert(flags(marked) == plain)
+    assert(marked.columns.count(_ == "isDup") == 1)
+    assert(marked.columns.count(_ == "__rg") == 1)
+    val kept = marked.toDF()
+      .select(col("readName"), col("readInFragment"), col("isDup"), col("__rg"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getBoolean(2), r.getString(3)))
+    val want = extra.toDF()
+      .select(col("readName"), col("readInFragment"), col("isDup"), col("__rg"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getBoolean(2), r.getString(3)))
+    assert(kept.sorted.toSeq == want.sorted.toSeq)
+  }
+
   test("markDuplicateFragments: shuffle-free path agrees with read path") {
     val dup1 = read("low", start = 100L, qual = "##########")
     val dup2 = read("high", start = 100L, qual = "IIIIIIIIII")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.algorithms.Bqsr
+import graft.model.Alignment
 
 /** Pins the repo-wide cache-lifetime convention (operators/Caching.scala).
   *
@@ -37,6 +39,13 @@ class CacheLifetimeSpec extends SparkSpec {
     }
     persistedCount <= base
   }
+
+  private def bqsrReads: Seq[Alignment] = (0 until 20).map(i =>
+    Alignment(readName = Some(s"r$i"), referenceName = Some("chr1"),
+      start = Some(100L + i), end = Some(110L + i), cigar = Some("10M"),
+      sequence = Some("ACGTACGTAC"), qualityScores = Some("IIIII55555"),
+      readMapped = Some(true), mappingQuality = Some(60),
+      readGroupId = Some("rg1"), mismatchingPositions = Some(s"${i % 10}A${9 - i % 10}")))
 
   test("tier 1: dropped results leave no caches behind (3 repeated calls)") {
     import spark.implicits._
@@ -82,6 +91,8 @@ class CacheLifetimeSpec extends SparkSpec {
       Stats.ksDrift(docs.select((col("id") % 2 === 0).as("side"),
           col("k").as("v")), "side", "v")
         .queryExecution.toRdd.count()
+      // Bqsr's lineage cut of its input backs only its result
+      Bqsr(bqsrReads.toDS(), Set(("chr1", 103L))).queryExecution.toRdd.count()
     }
     for (_ <- 1 to 3) runOnce()
     // all results are out of scope: ContextCleaner must drain the
@@ -90,6 +101,25 @@ class CacheLifetimeSpec extends SparkSpec {
     assert(awaitReclaim(base),
       s"caches outlived their dropped results: $base -> $persistedCount: " +
         spark.sparkContext.getPersistentRDDs.values.map(_.name).mkString(", "))
+    cleanSlate()
+  }
+
+  test("tier 1: Bqsr leaves a caller's persisted reads persisted") {
+    import spark.implicits._
+    cleanSlate()
+    val base = persistedCount
+    val reads = bqsrReads.toDS().persist()
+    reads.count()
+    val withReads = persistedCount
+    assert(withReads == base + 1)
+    for (_ <- 1 to 3)
+      Bqsr(reads, Set(("chr1", 103L))).queryExecution.toRdd.count()
+    assert(awaitReclaim(withReads),
+      s"Bqsr's cut outlived its dropped results: $withReads -> $persistedCount")
+    assert(persistedCount == withReads)
+    assert(reads.storageLevel ==
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    reads.unpersist(blocking = true)
     cleanSlate()
   }
 

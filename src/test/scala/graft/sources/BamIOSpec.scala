@@ -105,6 +105,43 @@ class BamIOSpec extends SparkSpec {
     assert(back.head.end.contains(20L))
   }
 
+  test("BAM write stores exactly l_seq quality bytes, missing when lengths differ") {
+    val path = tmpDir() + "/quals.bam"
+    val attrs = Map("RG" -> "Z:rg1", "MD" -> "Z:10", "NM" -> "i:0")
+    def rec(name: String, seq: Option[String], quals: Option[String]) =
+      Alignment(readName = Some(name), referenceName = Some("chr1"),
+        start = Some(100L), end = Some(110L), cigar = Some("10M"),
+        sequence = seq, qualityScores = quals, mappingQuality = Some(60),
+        readMapped = Some(true), readPaired = Some(false),
+        readNegativeStrand = Some(false), mateNegativeStrand = Some(false),
+        primaryAlignment = Some(true), secondaryAlignment = Some(false),
+        supplementaryAlignment = Some(false), duplicateRead = Some(false),
+        failedVendorQualityChecks = Some(false), mateMapped = Some(true),
+        readGroupId = Some("rg1"), attributes = attrs)
+    val seq = Some("ACGTACGTAC")
+    val recs = Seq(
+      rec("match", seq, Some("IIII#IIII5")),
+      rec("empty", seq, Some("")),
+      rec("short", seq, Some("IIII")),
+      rec("long", seq, Some("IIIIIIIIIIIIIIII")),
+      rec("noSeq", None, Some("IIIIIIIIII")))
+    BamIO.write(GenomicDataset(spark.createDataset(recs), meta), path,
+      asSingleFile = true)
+    val back = BamIO.read(spark, path).ds.collect()
+      .map(r => r.readName.get -> r).toMap
+    assert(back.keySet == recs.map(_.readName.get).toSet)
+    recs.foreach { r =>
+      val b = back(r.readName.get)
+      assert(b.attributes == attrs, s"${r.readName.get}: tags ${b.attributes}")
+      assert(b.sequence == r.sequence)
+      assert(b.cigar.contains("10M"))
+    }
+    assert(back("match").qualityScores.contains("IIII#IIII5"))
+    Seq("empty", "short", "long", "noSeq").foreach { n =>
+      assert(back(n).qualityScores.isEmpty, s"$n: ${back(n).qualityScores}")
+    }
+  }
+
   test("BAM distributed part-files round trip") {
     val path = tmpDir() + "/parts.bam"
     val gd = GenomicDataset(
