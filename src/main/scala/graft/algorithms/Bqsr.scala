@@ -1,5 +1,7 @@
 package graft.algorithms
 
+import scala.collection.mutable
+import scala.collection.mutable.LongMap
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.functions._
@@ -16,11 +18,15 @@ import graft.operators.Caching
   * Pass 1 (observe): per base, a covariate key (readGroup, reported
   * quality, cycle, dinucleotide) + whether the base mismatches the
   * reference (bases at known-variant sites are masked out). Aggregated to
-  * (observations, mismatches) per key — a plain groupBy/agg; the reference
-  * uses `reduceByKeyLocally` and collects to the driver, and so do we, but
+  * (observations, mismatches) per key; the reference uses
+  * `reduceByKeyLocally` and collects to the driver, and so do we, but
   * through a bounded AGGREGATED table (|readGroups| × |quals| × |cycles| ×
   * 16 keys, not per-base data) — the reference's own scaling bottleneck is
-  * this broadcast (docs/benchmarks/algorithms.rst:17-23).
+  * this broadcast (docs/benchmarks/algorithms.rst:17-23). Pass 1 is one
+  * Spark job: each partition's packed counts are merged by a
+  * `treeAggregate`, with no shuffle of per-partition rows
+  * ([[observationTable]]); [[observationDF]] is the same counts as a
+  * groupBy DataFrame.
   *
   * Pass 2 (recalibrate): empirical quality per key via the standard
   * phred-space Bayesian estimate, rewritten into the quality string. It is
@@ -135,7 +141,7 @@ object Bqsr {
   }
 
   /** The reference observeRead walk over already-extracted narrow fields —
-    * shared by [[observeRead]] and [[observationDF]]'s overflow path so the
+    * shared by [[observeRead]] and [[observePartition]]'s long-read path so the
     * packed fast path and the long-read path cannot diverge. Callers have
     * already applied [[includeRead]] + non-empty gates. */
   private def walkObserve(
@@ -183,7 +189,7 @@ object Bqsr {
     out.result()
   }
 
-  /** Narrow kernel input row for [[observationDF]] — the 9 fields the
+  /** Narrow kernel input row for [[observePartition]] — the 9 fields the
     * covariate walk actually reads, of [[Alignment]]'s 34 (guide §2.3
     * project-before-opaque-ops / §1.2 per-task work): deserializing the
     * full Alignment costs ~30 Option allocations + a map column per row
@@ -201,7 +207,7 @@ object Bqsr {
     * UTF-16 dinuc chars ([[dinucPair]]) in bits 28-59. Only [[packable]]
     * (q, cycle) pairs fit: reads with length >= [[MaxPackedLen]] would
     * overflow the cycle field into the dinuc bits (|cycle| <= len), so
-    * [[observationDF]] routes them through [[observeRead]], and pass 2
+    * [[observePartition]] routes them through [[observeRead]]'s walk, and pass 2
     * looks their out-of-range cycles up by tuple — divergence is
     * impossible, not just loud. */
   @inline private def packKey(q: Int, cycle: Int, dinuc: Int): Long =
@@ -214,26 +220,72 @@ object Bqsr {
     * nanopore reads beyond this take the unpacked [[observeRead]] path). */
   private[algorithms] val MaxPackedLen: Int = 1 << 19
 
-  /** Pass 1 as a DataFrame: per-base observation with a PARTITION-LOCAL
-    * combine before the covariate-space aggregation — the same idea as the
-    * reference's reduceByKeyLocally pass-1
-    * (BaseQualityRecalibration.scala:58-120). The inner loop is
-    * allocation-free: one specialized LongMap per (partition, readGroup),
-    * keys packed primitives — a per-base tuple-keyed HashMap (measured)
-    * spends the whole query re-hashing the readGroup string and boxing.
-    * Walk semantics are IDENTICAL to [[observeRead]] (spec asserts
-    * agreement); this is the driver-gate surface (q49) and feeds
-    * [[observationTable]]. */
-  def observationDF(
-      reads: Dataset[Alignment],
-      isKnownSite: (String, Long) => Boolean): org.apache.spark.sql.DataFrame = {
-    val fn = isKnownSite
-    // Inclusion gate + 9-field projection DECLARATIVELY before the kernel
-    // (guide §2.3 / §1.2): the predicates are includeRead + the non-empty
-    // gates verbatim (mappingQuality > 0 is NULL for a NULL quality —
-    // exists(_ > 0) semantics), in codegen and prunable at the scan; the
-    // kernel then deserializes 9 narrow fields instead of all 34.
-    val narrow = reads.toDF()
+  /** Pass 1's covariate counts: per read group, the [[packable]] cells by
+    * [[packKey]], and every other cell (a reported quality above 255, a
+    * cycle past [[MaxPackedLen]]) by tuple in `wide`. Each cell is
+    * `Array(observations, mismatches)`. A cell lives in exactly one of the
+    * two maps, so [[observations]] lists each covariate key once. One
+    * instance is one partition's counts, or the merge of several. */
+  private final class ObsCounts extends Serializable {
+    val packed = new java.util.HashMap[String, LongMap[Array[Long]]]()
+    val wide = mutable.HashMap.empty[(String, Int, Int, String), Array[Long]]
+
+    def cells(rg: String): LongMap[Array[Long]] =
+      packed.computeIfAbsent(rg, _ => new LongMap[Array[Long]]())
+
+    def add(rg: String, q: Int, cycle: Int, dinuc: String, obs: Long, mm: Long): Unit = {
+      val cell =
+        if (packable(q, cycle) && dinuc != null && dinuc.length == 2)
+          cells(rg).getOrElseUpdate(
+            packKey(q, cycle, dinuc.charAt(0) << 16 | dinuc.charAt(1)), new Array[Long](2))
+        else wide.getOrElseUpdate((rg, q, cycle, dinuc), new Array[Long](2))
+      cell(0) += obs
+      cell(1) += mm
+    }
+
+    def isEmpty: Boolean = packed.isEmpty && wide.isEmpty
+
+    /** Sums `other`'s cells into this one's (or returns `other` when this
+      * one is empty). */
+    def merge(other: ObsCounts): ObsCounts =
+      if (isEmpty) other
+      else {
+        other.packed.forEach { (rg, m) =>
+          val mine = cells(rg)
+          m.foreachEntry { (key, c) =>
+            val cell = mine.getOrElseUpdate(key, new Array[Long](2))
+            cell(0) += c(0)
+            cell(1) += c(1)
+          }
+        }
+        other.wide.foreach { case ((rg, q, cycle, dinuc), c) =>
+          add(rg, q, cycle, dinuc, c(0), c(1)) }
+        this
+      }
+
+    def observations: Iterator[Observation] = {
+      import scala.jdk.CollectionConverters._
+      packed.entrySet().iterator().asScala.flatMap { rgEntry =>
+        rgEntry.getValue.iterator.map { case (key, cell) =>
+          val q = (key & 0xffL).toInt
+          val cycle = ((key >>> 8) & 0xfffffL).toInt - (1 << 19)
+          Observation(rgEntry.getKey, q, cycle,
+            dinucString((key >>> 28).toInt), cell(0), cell(1))
+        }
+      } ++ wide.iterator.map { case ((rg, q, cycle, dinuc), c) =>
+        Observation(rg, q, cycle, dinuc, c(0), c(1)) }
+    }
+  }
+
+  /** The kernel input: the reads pass 1 includes, narrowed to the 9 fields
+    * the covariate walk reads. The inclusion gate and the projection are
+    * declarative, ahead of the kernel (guide §2.3 / §1.2): the predicates
+    * are [[includeRead]] and the non-empty gates verbatim
+    * (mappingQuality > 0 is NULL for a NULL quality — exists(_ > 0)
+    * semantics), in codegen and prunable at the scan, and the kernel then
+    * deserializes 9 narrow fields instead of all 34. */
+  private def observedReads(reads: Dataset[Alignment]): Dataset[ObsIn] =
+    reads.toDF()
       .filter(
         coalesce(col("readMapped"), lit(false)) &&
           coalesce(col("primaryAlignment"), lit(true)) &&
@@ -251,96 +303,120 @@ object Bqsr {
         (coalesce(col("readInFragment"), lit(0)) =!= 0).as("second"),
         coalesce(col("readGroupId"), lit("")).as("rg"))
       .as[ObsIn]
-    narrow.mapPartitions { it =>
-      val byRg = new java.util.HashMap[String, scala.collection.mutable.LongMap[Array[Long]]]()
-      // reads too long for the packed covariate key (ultra-long nanopore)
-      // take the reference observeRead walk — identical semantics, no
-      // silent key corruption; downstream groupBy merges both paths
-      val overflow = scala.collection.mutable.ArrayBuffer.empty[Observation]
-      it.foreach { r =>
-        val seq = r.seq
-        val quals = r.quals
-        if (seq.length >= MaxPackedLen) {
-          overflow ++= walkObserve(seq, quals,
-            GenomicFunctions.mdMismatchOffsets(r.md).toSet, r.cigar,
-            r.ref, r.start, r.neg, r.second, r.rg, fn)
-        } else {
-          // increasing reference-space offsets -> pointer walk, no Set
-          val mmOff = GenomicFunctions.mdMismatchOffsets(r.md).toArray
-          var mi = 0
-          val refName = r.ref
-          val start = r.start
-          val neg = r.neg
-          val second = r.second
-          val acc = byRg.computeIfAbsent(r.rg,
-            _ => new scala.collection.mutable.LongMap[Array[Long]]())
-          val len = seq.length
-          var readPos = 0
-          var refOff = 0L
-          var mdOff = 0L
-          graft.model.Cigar.parse(r.cigar).foreach { e =>
-            e.op match {
-              case 'M' | '=' | 'X' =>
-                var k = 0
-                while (k < e.length) {
-                  val q = quals.charAt(readPos) - 33
-                  if (q >= MinQuality && seq.charAt(readPos) != 'N' &&
-                    !fn(refName, start + refOff)) {
-                    val cycle = cycleAt(readPos, len, neg, second)
-                    val dinuc = dinucPair(seq, readPos, neg)
-                    while (mi < mmOff.length && mmOff(mi) < mdOff) mi += 1
-                    val mm = e.op match {
-                      case 'X' => true
-                      case '=' => false
-                      case _   => mi < mmOff.length && mmOff(mi) == mdOff
-                    }
-                    if (packable(q, cycle)) {
-                      val cell = acc.getOrElseUpdate(
-                        packKey(q, cycle, dinuc), new Array[Long](2))
-                      cell(0) += 1L
-                      if (mm) cell(1) += 1L
-                    } else {
-                      // a reported quality above 255 does not fit the key
-                      overflow += Observation(r.rg, q, cycle,
-                        dinucString(dinuc), 1L, if (mm) 1L else 0L)
-                    }
+
+  /** Pass 1's kernel over one partition: a PARTITION-LOCAL combine, the
+    * same idea as the reference's reduceByKeyLocally pass 1
+    * (BaseQualityRecalibration.scala:58-120). The inner loop is
+    * allocation-free: one specialized LongMap per read group, keys packed
+    * primitives — a per-base tuple-keyed HashMap (measured) spends the
+    * whole query re-hashing the readGroup string and boxing. Walk
+    * semantics are IDENTICAL to [[observeRead]] (spec asserts agreement). */
+  private def observePartition(
+      it: Iterator[ObsIn], fn: (String, Long) => Boolean): ObsCounts = {
+    val counts = new ObsCounts
+    it.foreach { r =>
+      val seq = r.seq
+      val quals = r.quals
+      if (seq.length >= MaxPackedLen) {
+        // reads too long for the packed covariate key (ultra-long
+        // nanopore) take the reference observeRead walk — identical
+        // semantics, no silent key corruption
+        walkObserve(seq, quals,
+          GenomicFunctions.mdMismatchOffsets(r.md).toSet, r.cigar,
+          r.ref, r.start, r.neg, r.second, r.rg, fn).foreach { o =>
+          counts.add(o.readGroupId, o.reportedQuality, o.cycle, o.dinuc,
+            o.observations, o.mismatches)
+        }
+      } else {
+        // increasing reference-space offsets -> pointer walk, no Set
+        val mmOff = GenomicFunctions.mdMismatchOffsets(r.md).toArray
+        var mi = 0
+        val refName = r.ref
+        val start = r.start
+        val neg = r.neg
+        val second = r.second
+        val acc = counts.cells(r.rg)
+        val len = seq.length
+        var readPos = 0
+        var refOff = 0L
+        var mdOff = 0L
+        graft.model.Cigar.parse(r.cigar).foreach { e =>
+          e.op match {
+            case 'M' | '=' | 'X' =>
+              var k = 0
+              while (k < e.length) {
+                val q = quals.charAt(readPos) - 33
+                if (q >= MinQuality && seq.charAt(readPos) != 'N' &&
+                  !fn(refName, start + refOff)) {
+                  val cycle = cycleAt(readPos, len, neg, second)
+                  val dinuc = dinucPair(seq, readPos, neg)
+                  while (mi < mmOff.length && mmOff(mi) < mdOff) mi += 1
+                  val mm = e.op match {
+                    case 'X' => true
+                    case '=' => false
+                    case _   => mi < mmOff.length && mmOff(mi) == mdOff
                   }
-                  readPos += 1; refOff += 1; mdOff += 1; k += 1
+                  if (packable(q, cycle)) {
+                    val cell = acc.getOrElseUpdate(
+                      packKey(q, cycle, dinuc), new Array[Long](2))
+                    cell(0) += 1L
+                    if (mm) cell(1) += 1L
+                  } else {
+                    // a reported quality above 255 does not fit the key
+                    counts.add(r.rg, q, cycle, dinucString(dinuc), 1L,
+                      if (mm) 1L else 0L)
+                  }
                 }
-              case 'I' | 'S' => readPos += e.length
-              case 'D' => refOff += e.length; mdOff += e.length
-              case 'N' => refOff += e.length
-              case _ =>
-            }
+                readPos += 1; refOff += 1; mdOff += 1; k += 1
+              }
+            case 'I' | 'S' => readPos += e.length
+            case 'D' => refOff += e.length; mdOff += e.length
+            case 'N' => refOff += e.length
+            case _ =>
           }
         }
       }
-      import scala.jdk.CollectionConverters._
-      byRg.entrySet().iterator().asScala.flatMap { rgEntry =>
-        rgEntry.getValue.iterator.map { case (key, cell) =>
-          val q = (key & 0xffL).toInt
-          val cycle = ((key >>> 8) & 0xfffffL).toInt - (1 << 19)
-          Observation(rgEntry.getKey, q, cycle,
-            dinucString((key >>> 28).toInt), cell(0), cell(1))
-        }
-      } ++ overflow.iterator
     }
+    counts
+  }
+
+  /** Pass 1 as a DataFrame: [[observePartition]]'s per-partition counts,
+    * aggregated over the covariate space by a groupBy. This is the
+    * driver-gate surface (q49); [[Bqsr.apply]] and [[observationTable]]
+    * merge the same per-partition counts without the groupBy. */
+  def observationDF(
+      reads: Dataset[Alignment],
+      isKnownSite: (String, Long) => Boolean): org.apache.spark.sql.DataFrame = {
+    val fn = isKnownSite
+    observedReads(reads)
+      .mapPartitions(it => observePartition(it, fn).observations)
       .groupBy("readGroupId", "reportedQuality", "cycle", "dinuc")
       .agg(sum("observations").as("observations"), sum("mismatches").as("mismatches"))
   }
 
-  /** Pass 1: distributed observation + aggregation; the table collects to
-    * the driver (bounded: covariate-space-sized). */
+  /** Pass 1 as one Spark job: each partition's [[observePartition]] counts
+    * are merged by `treeAggregate` (depth 2) on the executors, so at most
+    * ⌈√P⌉ covariate-space partials reach the driver for P input
+    * partitions (P itself when P ≤ 5, where the tree has no inner level).
+    * Each partial is bounded by the covariate space, not by the reads. */
+  private def observeCounts(
+      reads: Dataset[Alignment],
+      isKnownSite: (String, Long) => Boolean): ObsCounts = {
+    val fn = isKnownSite
+    observedReads(reads).rdd
+      .mapPartitions(it => Iterator.single(observePartition(it, fn)))
+      .treeAggregate(new ObsCounts)(_ merge _, _ merge _)
+  }
+
+  /** Pass 1: distributed observation and aggregation in one job; the table
+    * (bounded: covariate-space-sized) is assembled on the driver. Equal to
+    * [[observationDF]]'s rows. */
   def observationTable(
       reads: Dataset[Alignment],
-      isKnownSite: (String, Long) => Boolean): Map[(String, Int, Int, String), (Long, Long)] = {
-    observationDF(reads, isKnownSite)
-      .collect()
-      .map { row =>
-        (row.getString(0), row.getInt(1), row.getInt(2), row.getString(3)) ->
-          (row.getLong(4), row.getLong(5))
-      }.toMap
-  }
+      isKnownSite: (String, Long) => Boolean): Map[(String, Int, Int, String), (Long, Long)] =
+    observeCounts(reads, isKnownSite).observations.map { o =>
+      (o.readGroupId, o.reportedQuality, o.cycle, o.dinuc) -> (o.observations, o.mismatches)
+    }.toMap
 
   /** Empirical quality with the standard +1/+2 smoothing
     * (RecalibrationTable semantics). */
@@ -356,24 +432,26 @@ object Bqsr {
     * [[packable]] keep a tuple key in `wide`. Dinucleotides that are not
     * two chars are dropped: pass 2 never forms them. */
   private case class RecalTable(
-      packed: Map[String, scala.collection.mutable.LongMap[Int]],
+      packed: Map[String, LongMap[Int]],
       wide: Map[(String, Int, Int, String), Int])
 
   private object RecalTable {
     def apply(table: Map[(String, Int, Int, String), (Long, Long)]): RecalTable = {
-      val packed = scala.collection.mutable.HashMap
-        .empty[String, scala.collection.mutable.LongMap[Int]]
-      val wide = Map.newBuilder[(String, Int, Int, String), Int]
-      table.foreach { case (key @ (rg, q, cycle, dinuc), (obs, mm)) =>
-        val out = math.max(2, empiricalQuality(obs, mm)) + 33
-        if (dinuc != null && dinuc.length == 2) {
-          if (packable(q, cycle))
-            packed.getOrElseUpdate(rg, new scala.collection.mutable.LongMap[Int]())
-              .update(packKey(q, cycle, dinuc.charAt(0) << 16 | dinuc.charAt(1)), out)
-          else wide += key -> out
-        }
-      }
-      RecalTable(packed.toMap, wide.result())
+      val counts = new ObsCounts
+      table.foreach { case ((rg, q, cycle, dinuc), (obs, mm)) =>
+        counts.add(rg, q, cycle, dinuc, obs, mm) }
+      apply(counts)
+    }
+
+    def apply(counts: ObsCounts): RecalTable = {
+      import scala.jdk.CollectionConverters._
+      def out(cell: Array[Long]): Int = math.max(2, empiricalQuality(cell(0), cell(1))) + 33
+      RecalTable(
+        counts.packed.asScala.map { case (rg, cells) => rg -> cells.mapValuesNow(out) }.toMap,
+        counts.wide.iterator.collect {
+          case (key @ (_, _, _, dinuc), cell) if dinuc != null && dinuc.length == 2 =>
+            key -> out(cell)
+        }.toMap)
     }
   }
 
@@ -406,8 +484,11 @@ object Bqsr {
     * over five columns; the output has [[Alignment]]'s schema. */
   def recalibrate(
       reads: Dataset[Alignment],
-      table: Map[(String, Int, Int, String), (Long, Long)]): Dataset[Alignment] = {
-    val tableB = reads.sparkSession.sparkContext.broadcast(RecalTable(table))
+      table: Map[(String, Int, Int, String), (Long, Long)]): Dataset[Alignment] =
+    recalibrate(reads, RecalTable(table))
+
+  private def recalibrate(reads: Dataset[Alignment], table: RecalTable): Dataset[Alignment] = {
+    val tableB = reads.sparkSession.sparkContext.broadcast(table)
     val recalU = udf((seq: String, quals: String, neg: Boolean,
         second: Boolean, rg: String) =>
       recalibrateQuals(seq, quals, neg, second, rg, tableB.value))
@@ -490,7 +571,11 @@ object Bqsr {
     * returned result's RDD lineage, not to a cache-manager entry, so the
     * ContextCleaner frees them once that result is unreferenced (tier 1 in
     * [[Caching]]'s convention); a caller's own persisted input is left as
-    * it is. */
+    * it is.
+    *
+    * Pass 1 is one job over the cut, and its merged packed counts go to
+    * pass 2's table directly, without the tuple-keyed map
+    * [[observationTable]] returns. */
   def apply(
       reads: Dataset[Alignment],
       mask: SnpMask): Dataset[Alignment] = {
@@ -498,7 +583,7 @@ object Bqsr {
     val maskB = spark.sparkContext.broadcast(mask)
     val isKnown = (ref: String, pos: Long) => maskB.value.contains(ref, pos)
     val cut = Caching.cutLineage(reads.toDF()).as[Alignment]
-    recalibrate(cut, observationTable(cut, isKnown))
+    recalibrate(cut, RecalTable(observeCounts(cut, isKnown)))
   }
 
   /** Set-based convenience overload (tests, small masks). */

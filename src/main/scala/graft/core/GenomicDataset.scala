@@ -1,7 +1,11 @@
 package graft.core
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ExecutionBridge
 import graft.model._
 import graft.operators.RegionJoins
 
@@ -17,12 +21,45 @@ import graft.operators.RegionJoins
   * `referenceName: string, start: long, end: long` (the coordinate contract,
   * GenomicDataset.getReferenceRegions GD:1018). Types whose coordinates are
   * nested (Fragment, Genotype.variant) expose a flattened view first.
+  *
+  * Sinks share one execution. Every sink ([[saveAsParquet]],
+  * [[saveAsPartitionedParquet]], the BAM/SAM/CRAM writers in
+  * `graft.sources`) reads [[executed]], the rows of `ds`'s own physical
+  * plan, instead of planning `ds` again. Each action on a Dataset plans and
+  * runs its own query, so two sinks of one sorted dataset would sort it
+  * twice; over [[executed]], the second sink's job skips the stages whose
+  * shuffle output the first one wrote. No rows are cached and no
+  * cache-manager entry is made: the shuffle files live as long as this
+  * dataset's plan is referenced, the normal RDD lifetime, and the
+  * ContextCleaner removes them after that.
   */
 case class GenomicDataset[T](ds: Dataset[T], meta: GenomicMetadata,
     sorted: Boolean = false)(implicit enc: Encoder[T]) {
 
   def spark: SparkSession = ds.sparkSession
   def toDF: DataFrame = ds.toDF()
+
+  /** `ds`'s rows as its one physical plan produces them (Catalyst rows in
+    * `ds.queryExecution.analyzed`'s column order). Held by `ds`'s
+    * QueryExecution, so every sink of this dataset, and of copies sharing
+    * `ds`, reads the same RDD. */
+  private[graft] lazy val executed: RDD[InternalRow] = ds.queryExecution.toRdd
+
+  /** [[executed]] deserialized with `ds`'s encoder on the executors: one new
+    * record object per row, safe to collect (the Catalyst row buffers
+    * behind [[executed]] may be reused row to row). */
+  private[graft] def records: RDD[T] = {
+    val bound = encoderFor(ds.encoder).resolveAndBind(ds.queryExecution.analyzed.output)
+    executed.mapPartitions { rows =>
+      val fromRow = bound.createDeserializer()
+      rows.map(fromRow)
+    }(bound.clsTag)
+  }
+
+  /** A DataFrame over [[executed]] with `ds`'s analyzed schema, nullability
+    * included. */
+  private def executedDF: DataFrame =
+    ExecutionBridge.dataFrame(spark, executed, ds.queryExecution.analyzed.schema)
 
   /** User-function transform re-attaching metadata — the key invariant:
     * metadata flows around the Catalyst plan, not through it
@@ -172,9 +209,9 @@ case class GenomicDataset[T](ds: Dataset[T], meta: GenomicMetadata,
     * non-replicated 1x real corpus, and like-for-like with the
     * reference's published parity row); zstd is the measured opt-in for
     * codec-bound ingest (2.2x write / 3.2x read throughput vs gzip).
-    * Pass "snappy"/"zstd" to override. */
+    * Pass "snappy"/"zstd" to override. Writes [[executed]]. */
   def saveAsParquet(path: String, codec: String = "gzip"): Unit = {
-    toDF.write.mode("overwrite").option("compression", codec).parquet(path)
+    executedDF.write.mode("overwrite").option("compression", codec).parquet(path)
     Sidecars.write(spark, path, meta)
     if (sorted) Sidecars.writeSortedFlag(spark, path)
   }
@@ -191,10 +228,11 @@ case class GenomicDataset[T](ds: Dataset[T], meta: GenomicMetadata,
     *    task.
     *  - sortWithinPartitions on start: parquet row-group min/max stats
     *    become tight, so start-range scans prune row groups inside each
-    *    bin file, not just whole partitions. */
+    *    bin file, not just whole partitions.
+    * Reads [[executed]]. */
   def saveAsPartitionedParquet(path: String, binSize: Long = 1000000L,
       codec: String = "gzip"): Unit = {
-    toDF
+    executedDF
       .withColumn("positionBin", floor(col("start") / binSize))
       .repartition(col("referenceName"), col("positionBin"))
       .sortWithinPartitions(col("referenceName"), col("positionBin"), col("start"))

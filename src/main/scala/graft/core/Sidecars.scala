@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ExecutionBridge
 import graft.model._
 
 /** Metadata sidecar persistence (SURVEY.md §1.3). The reference writes
@@ -9,7 +10,10 @@ import graft.model._
   * (GenomicDataset.scala:475-487, 3464-3497, 3289-3299). We write the same
   * content as parquet under `_`-prefixed subdirectories — hidden from
   * Spark's file index (like `_SUCCESS`), readable on any Hadoop filesystem,
-  * no extra JSON codec needed. All data is bounded driver-side metadata.
+  * no extra codec needed. All data is bounded driver-side metadata, so
+  * [[Sidecars.write]] writes each sidecar's one file on the driver and
+  * launches no Spark job; [[Sidecars.read]] reads them with
+  * `spark.read.parquet`.
   */
 /** One saved VCF/SAM header line. Top-level (not nested in [[Sidecars]])
   * so the generated encoder code compiles under Janino — object-nested
@@ -20,12 +24,15 @@ private[core] case class HeaderRow(raw: String)
 
 object Sidecars {
 
+  /** Writes each non-empty sidecar as one parquet file, from the driver,
+    * with the schema and footer metadata `createDataset(rows).write.parquet`
+    * would give it (see [[ExecutionBridge.writeParquetDir]]). */
   def write(spark: SparkSession, path: String, meta: GenomicMetadata): Unit = {
     import spark.implicits._
     def put[A](sub: String, rows: Seq[A])(implicit e: org.apache.spark.sql.Encoder[A]): Unit =
       if (rows.nonEmpty)
-        spark.createDataset(rows).coalesce(1)
-          .write.mode("overwrite").parquet(s"$path/_graft_$sub")
+        ExecutionBridge.writeParquetDir(spark,
+          new org.apache.hadoop.fs.Path(s"$path/_graft_$sub"), rows, e)
     put("sequences", meta.sequences.records)
     put("readGroups", meta.readGroups.readGroups)
     put("samples", meta.samples)

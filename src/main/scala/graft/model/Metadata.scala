@@ -4,7 +4,8 @@ package graft.model
   * §1.1, §1.3): sequence dictionary, read groups, samples, processing
   * lineage, header lines. The reference persists these as Avro sidecars
   * (_references.avro etc., GenomicDataset.scala:475-487, 3464-3497); we
-  * persist the same content as JSON sidecar files next to the parquet
+  * persist the same content as one-file parquet sidecars next to the
+  * parquet payload, written on the driver without a Spark job
   * (graft.core.Sidecars) — bounded driver-side data, never shuffled.
   */
 

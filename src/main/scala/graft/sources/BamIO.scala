@@ -518,7 +518,9 @@ object BamIO {
     * binary-concatenated with the header member and EOF marker) unless
     * `writeIndex` is set, which needs globally-ordered virtual offsets and
     * therefore streams through the driver while building `<path>.bai`
-    * (meaningful for coordinate-sorted records). */
+    * (meaningful for coordinate-sorted records). Every branch reads
+    * `gd.records`, so a dataset already written by another sink is not
+    * planned or shuffled again. */
   def write(gd: GenomicDataset[Alignment], path: String,
       asSingleFile: Boolean = true, writeIndex: Boolean = false): Unit = {
     val meta = gd.meta
@@ -553,7 +555,7 @@ object BamIO {
       val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs0.mkdirs(dir)
       val confB = spark.sparkContext.broadcast(HadoopConf(spark))
-      gd.ds.rdd.mapPartitionsWithIndex { (pid, it) =>
+      gd.records.mapPartitionsWithIndex { (pid, it) =>
         if (it.isEmpty) Iterator.empty
         else {
           val part = new Path(dir, f"part-$pid%05d")
@@ -590,7 +592,7 @@ object BamIO {
         else None
       try {
         writeHeaderTo(out)
-        gd.ds.toLocalIterator().forEachRemaining { r =>
+        gd.records.toLocalIterator.foreach { r =>
           val rec = encodeRecord(r, refIndex)
           val vStart = out.virtualOffset
           val sz = new Array[Byte](4)
@@ -621,7 +623,7 @@ object BamIO {
       val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs0.mkdirs(dir)
       val confB = spark.sparkContext.broadcast(HadoopConf(spark))
-      gd.ds.rdd.mapPartitionsWithIndex { (pid, it) =>
+      gd.records.mapPartitionsWithIndex { (pid, it) =>
         val part = new Path(dir, f"part-$pid%05d.bam")
         val fs = part.getFileSystem(confB.value.value)
         val out = new Bgzf.BgzfOutputStream(fs.create(part, true))

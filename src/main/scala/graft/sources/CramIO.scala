@@ -905,6 +905,17 @@ object CramIO {
       case _ => r
     }
 
+  /** A mapped read without bases (SEQ '*') is stored as CF 0x8 (unknown
+    * bases) over 'N's, RL long as its CIGAR reads, so the read features
+    * still carry the CIGAR; the reader drops the bases again. */
+  private def basesUnknown(r: Alignment): Boolean =
+    r.readMapped.getOrElse(false) && r.sequence.forall(_.isEmpty) &&
+      r.cigar.exists(Cigar.readLength(_) > 0)
+
+  private def storedSeq(r: Alignment): String =
+    if (basesUnknown(r)) "N" * Cigar.readLength(r.cigar.get).toInt
+    else r.sequence.getOrElse("")
+
   private def encodeContainer(
       records0: Seq[Alignment], refIndex: Map[String, Int],
       rgIndex: Map[String, Int], counterStart: Long,
@@ -930,9 +941,9 @@ object CramIO {
     val recFeats: Seq[Option[Seq[Feat]]] = records.map { r =>
       if (r.readMapped.getOrElse(false))
         refForWrite match {
-          case Some(ref) if r.referenceName.isDefined =>
+          case Some(ref) if r.referenceName.isDefined && !basesUnknown(r) =>
             Some(buildFeaturesRef(r, r.sequence.getOrElse(""), ref))
-          case _ => Some(buildFeatures(r, r.sequence.getOrElse("")))
+          case _ => Some(buildFeatures(r, storedSeq(r)))
         }
       else None
     }
@@ -941,7 +952,7 @@ object CramIO {
       var e = defaultEncodings
       if (profile.core) {
         val allFeats = recFeats.flatten.flatten
-        val maxRL = records.map(_.sequence.map(_.length).getOrElse(0)).maxOption.getOrElse(1)
+        val maxRL = records.map(storedSeq(_).length).maxOption.getOrElse(1)
         val maxFN = recFeats.flatten.map(_.length).maxOption.getOrElse(1)
         val maxFP = allFeats.map(_.pos).maxOption.getOrElse(1)
         val fcAlphabet = allFeats.map(_.code.toInt).distinct
@@ -1018,11 +1029,12 @@ object CramIO {
           val attached = pointee.contains(i)
           w.itf8("BF", bamFlags(r))
           val cf = 1 | // qualities preserved
-            (if (downstream) 4 else if (attached) 0 else 2)
+            (if (downstream) 4 else if (attached) 0 else 2) |
+            (if (basesUnknown(r)) 8 else 0)
           w.itf8("CF", cf)
           if (sliceRefId == -2)
             w.itf8("RI", r.referenceName.flatMap(refIndex.get).getOrElse(-1))
-          val seq = r.sequence.getOrElse("")
+          val seq = storedSeq(r)
           w.itf8("RL", seq.length)
           val apValue = r.start.map(_ + 1).getOrElse(0L).toInt
           if (profile.apDelta) {
@@ -1076,12 +1088,12 @@ object CramIO {
             case None =>
               w.bytes("BA", seq.getBytes("UTF-8"))
           }
-          val quals = r.qualityScores.getOrElse("")
-          val qb = new Array[Byte](seq.length)
-          var qi = 0
-          while (qi < seq.length) {
-            qb(qi) = if (qi < quals.length) (quals(qi) - 33).toByte else 0xff.toByte
-            qi += 1
+          // exactly RL quality bytes, all 0xff (missing) unless the
+          // quality string is exactly as long as the stored sequence
+          val qb = r.qualityScores match {
+            case Some(q) if q.length == seq.length && !basesUnknown(r) =>
+              q.map(c => (c - 33).toByte).toArray
+            case _ => Array.fill(seq.length)(0xff.toByte)
           }
           w.bytes("QS", qb)
         }
@@ -1236,7 +1248,7 @@ object CramIO {
 
       var counter = 0L
       val craiLines = Seq.newBuilder[String]
-      val it = gd.ds.toLocalIterator()
+      val it = gd.records.toLocalIterator
       val buf = scala.collection.mutable.ArrayBuffer.empty[Alignment]
       def flush(): Unit = if (buf.nonEmpty) {
         val containerOffset = out.getPos

@@ -150,8 +150,10 @@ object SamIO {
     },
     r.mateAlignmentStart.map(s => (s + 1).toString).getOrElse("0"),
     r.insertSize.map(_.toString).getOrElse("0"),
-    r.sequence.getOrElse("*"),
-    r.qualityScores.getOrElse("*")
+    r.sequence.filter(_.nonEmpty).getOrElse("*"),
+    // SAM §1.4: QUAL is '*' or exactly as long as SEQ
+    r.qualityScores.filter(q => q.nonEmpty && r.sequence.exists(_.length == q.length))
+      .getOrElse("*")
   ).mkString("\t") + {
     val tags = r.attributes.toSeq.sortBy(_._1)
       .map { case (k, tv) => s"$k:$tv" }
@@ -178,9 +180,9 @@ object SamIO {
     * [[FileMerger.mergeToSingleFile]] when a single file is requested. */
   def write(gd: GenomicDataset[Alignment], path: String,
       asSingleFile: Boolean = false): Unit = {
-    implicit val stringEnc: org.apache.spark.sql.Encoder[String] = Encoders.STRING
     val body = s"$path.body"
-    gd.ds.map(toSamLine).write.mode("overwrite").text(body)
+    gd.spark.createDataset(gd.records.map(toSamLine))(Encoders.STRING)
+      .write.mode("overwrite").text(body)
     if (asSingleFile)
       FileMerger.mergeToSingleFile(gd.spark, body, path,
         header = Some(headerLines(gd.meta, gd.sorted).mkString("", "\n", "\n")))

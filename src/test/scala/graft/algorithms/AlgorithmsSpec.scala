@@ -201,6 +201,41 @@ class BqsrSpec extends SparkSpec {
     assert(fast.keys.exists(k => k._1 == "rgL" && k._3 == len))
   }
 
+  test("observationTable runs one job and equals observationDF's rows") {
+    val rnd = new scala.util.Random(83)
+    val reads = (0 until 240).map { i =>
+      val len = 20 + rnd.nextInt(20)
+      val seq = (0 until len).map(_ => "ACGTN"(rnd.nextInt(5))).mkString
+      val quals = (0 until len).map(_ => (35 + rnd.nextInt(40)).toChar).mkString
+      val mm = rnd.nextInt(len)
+      read(f"t$i%03d", rnd.nextInt(3000).toLong, seq, quals,
+        s"${mm}A${len - mm - 1}", rg = "rg" + (i % 4))
+        .copy(readNegativeStrand = Some(i % 2 == 0),
+          readInFragment = Some(i % 3 % 2))
+    }
+    // reported quality 287 does not fit the packed key's 8 bits
+    val wideQ = read("wq", 40L, "ACGTACGT", "II\u0140IIIII", "8")
+    val len = Bqsr.MaxPackedLen + 8
+    val long = read("ultra", 10L, ("ACGT" * (len / 4 + 1)).take(len), "I" * len,
+      len.toString, rg = "rg1")
+    val ds = spark.createDataset(reads :+ wideQ :+ long).repartition(6)
+    val mask = Bqsr.SnpMask(Seq(("chr1", 120L), ("chr1", 777L)))
+    val fn = (ref: String, pos: Long) => mask.contains(ref, pos)
+    val cut = graft.operators.Caching.cutLineage(ds.toDF()).as[Alignment]
+
+    var table = Map.empty[(String, Int, Int, String), (Long, Long)]
+    assert(jobsDuring { table = Bqsr.observationTable(cut, fn) } == 1)
+    val viaDF = Bqsr.observationDF(cut, fn).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3)) ->
+        (r.getLong(4), r.getLong(5))).toMap
+    assert(table == viaDF)
+    assert(table.keys.exists(k => k._1 == "rg1" && k._2 == 287))
+    assert(table.keys.exists(k => k._1 == "rg1" && k._3 == len))
+    // cycles of the ultra-long read inside the packed range merge with the
+    // short reads' cells of the same key
+    assert(table.keys.exists(k => k._1 == "rg1" && k._3 == 5))
+  }
+
   test("recalibration moves quality toward empirical rate") {
     // all bases quality 40 ('I') but half the reads mismatch everywhere:
     // empirical quality should drop well below 40
