@@ -12,8 +12,8 @@ import graft.model._
   * Spark's file index (like `_SUCCESS`), readable on any Hadoop filesystem,
   * no extra codec needed. All data is bounded driver-side metadata, so
   * [[Sidecars.write]] writes each sidecar's one file on the driver and
-  * launches no Spark job; [[Sidecars.read]] reads them with
-  * `spark.read.parquet`.
+  * launches no Spark job; [[Sidecars.read]] reads them back on the driver
+  * and launches none either (see [[ExecutionBridge.readParquetDir]]).
   */
 /** One saved VCF/SAM header line. Top-level (not nested in [[Sidecars]])
   * so the generated encoder code compiles under Janino — object-nested
@@ -42,12 +42,9 @@ object Sidecars {
 
   def read(spark: SparkSession, path: String): GenomicMetadata = {
     import spark.implicits._
-    def get[A](sub: String)(implicit e: org.apache.spark.sql.Encoder[A]): Seq[A] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_graft_$sub")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) spark.read.parquet(p.toString).as[A].collect().toSeq
-      else Seq.empty
-    }
+    def get[A](sub: String)(implicit e: org.apache.spark.sql.Encoder[A]): Seq[A] =
+      ExecutionBridge.readParquetDir(spark,
+        new org.apache.hadoop.fs.Path(s"$path/_graft_$sub"), e)
     GenomicMetadata(
       SequenceDictionary(get[SequenceRecord]("sequences")),
       ReadGroupDictionary(get[ReadGroup]("readGroups")),

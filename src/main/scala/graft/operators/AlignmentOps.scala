@@ -101,8 +101,6 @@ object AlignmentOps {
     Encoders.product[Fragment]
   private implicit val stringEnc: org.apache.spark.sql.Encoder[String] =
     Encoders.STRING
-  private implicit val string2Enc: org.apache.spark.sql.Encoder[(String, String)] =
-    Encoders.tuple(Encoders.STRING, Encoders.STRING)
 
   // ------------------------------ flagstat --------------------------------
 

@@ -121,7 +121,6 @@ object MultimodalOps {
     * formats still go through [[StubDecoder]] (no media libraries in this
     * container). */
   def extractImageFeatures(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     implicit val enc: org.apache.spark.sql.Encoder[MediaFeatureRow] =
       Encoders.product[MediaFeatureRow]
     val ds = media.select("media_id", "payload", "meta.width", "meta.height")
@@ -156,7 +155,6 @@ object MultimodalOps {
     * sum_gray), all integers, so an external oracle can replay the math
     * bit-exactly. bin = gray / 16 over the decoder's integer luma. */
   def imageStats(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     implicit val enc: org.apache.spark.sql.Encoder[ImageStatsRow] =
       Encoders.product[ImageStatsRow]
     Parallelism.fanOut(media.select("media_id", "payload"),

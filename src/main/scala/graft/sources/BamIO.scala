@@ -1,6 +1,7 @@
 package graft.sources
 
-import java.io.{DataInputStream, EOFException, InputStream}
+import java.io.{ByteArrayOutputStream, EOFException, InputStream, OutputStream}
+import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import graft.core.GenomicDataset
@@ -24,6 +25,7 @@ import graft.model._
   * is driver-side, record decoding runs in executors.
   */
 object BamIO {
+  import SamIO.le32
 
   private implicit val alignEnc: org.apache.spark.sql.Encoder[Alignment] =
     Encoders.product[Alignment]
@@ -78,134 +80,64 @@ object BamIO {
     (meta, refs.map(_._1))
   }
 
+  private def readHeader(fs: org.apache.hadoop.fs.FileSystem,
+      file: Path): (GenomicMetadata, Array[String]) = {
+    val in = Bgzf.inputStream(fs.open(file))
+    try readHeader(in) finally in.close()
+  }
+
   /** Decode one alignment record given its byte block. */
   def decodeRecord(b: Array[Byte], refNames: Array[String]): Alignment = {
-    val refId = i32(b, 0)
-    val pos = i32(b, 4)
     val lReadName = b(8) & 0xff
-    val mapq = b(9) & 0xff
     val nCigar = u16(b, 12)
-    val flag = u16(b, 14)
     val lSeq = i32(b, 16)
-    val nextRefId = i32(b, 20)
-    val nextPos = i32(b, 24)
-    val tlen = i32(b, 28)
     var o = 32
-    val readName = new String(b, o, lReadName - 1, "UTF-8"); o += lReadName
-    val cigarSb = new StringBuilder
+    val readName = new String(b, o, lReadName - 1, UTF_8); o += lReadName
+    val sb = new java.lang.StringBuilder
     var refLen = 0L
     var k = 0
     while (k < nCigar) {
       val v = i32(b, o); o += 4
       val opLen = v >>> 4
       val op = CigarOps.charAt(v & 0xf)
-      cigarSb.append(opLen).append(op)
+      sb.append(opLen).append(op)
       if (op == 'M' || op == 'D' || op == 'N' || op == '=' || op == 'X')
         refLen += opLen
       k += 1
     }
-    val seqSb = new StringBuilder(lSeq)
+    val cigar = sb.toString
+    val seq = new Array[Char](lSeq)
     var i = 0
     while (i < lSeq) {
       val byte = b(o + i / 2) & 0xff
-      val nib = if (i % 2 == 0) byte >> 4 else byte & 0xf
-      seqSb.append(SeqChars.charAt(nib))
+      seq(i) = SeqChars.charAt(if (i % 2 == 0) byte >> 4 else byte & 0xf)
       i += 1
     }
     o += (lSeq + 1) / 2
-    val qualRaw = b.slice(o, o + lSeq); o += lSeq
-    val quals =
-      if (lSeq == 0 || (qualRaw.nonEmpty && (qualRaw(0) & 0xff) == 0xff)) None
-      else Some(qualRaw.map(q => ((q & 0xff) + 33).toChar).mkString)
+    val quals = SamIO.readQuality(b, o, lSeq); o += lSeq
 
-    // tags
     val attrs = Map.newBuilder[String, String]
     while (o < b.length) {
-      val tag = new String(b, o, 2, "ISO-8859-1"); o += 2
-      val typ = b(o).toChar; o += 1
-      def readVal(t: Char): String = t match {
-        case 'A' => val v = b(o).toChar.toString; o += 1; v
-        case 'c' => val v = b(o).toString; o += 1; v
-        case 'C' => val v = (b(o) & 0xff).toString; o += 1; v
-        case 's' => val v = u16(b, o).toShort.toString; o += 2; v
-        case 'S' => val v = u16(b, o).toString; o += 2; v
-        case 'i' | 'I' => val v = i32(b, o).toString; o += 4; v
-        case 'f' =>
-          val v = java.lang.Float.intBitsToFloat(i32(b, o)).toString; o += 4; v
-        case 'Z' | 'H' =>
-          val e = { var j = o; while (b(j) != 0) j += 1; j }
-          val v = new String(b, o, e - o, "UTF-8"); o = e + 1; v
-        case 'B' =>
-          val sub = b(o).toChar; o += 1
-          val n = i32(b, o); o += 4
-          val vals = (0 until n).map(_ => readVal(sub))
-          s"$sub,${vals.mkString(",")}"
-        case other => throw new IllegalStateException(s"tag type $other")
-      }
-      val tchar = typ match {
-        case 'c' | 'C' | 's' | 'S' | 'I' => 'i'
-        case t => t
-      }
-      attrs += (tag -> s"$tchar:${readVal(typ)}")
+      val tag = new String(b, o, 2, ISO_8859_1)
+      sb.setLength(0)
+      o = SamIO.readTag(b(o + 2).toChar, b, o + 3, sb)
+      attrs += (tag -> sb.toString)
     }
-    val attributes = attrs.result()
-
-    def bit(m: Int): Boolean = (flag & m) != 0
-    val mapped = !bit(0x4) && refId >= 0
-    Alignment(
-      readName = Some(readName),
-      referenceName = if (refId >= 0) Some(refNames(refId)) else None,
-      start = if (mapped) Some(pos.toLong) else None,
-      end = if (mapped) Some(pos.toLong + refLen) else None,
-      mappingQuality = if (mapq == 255) None else Some(mapq),
-      cigar = if (nCigar > 0) Some(cigarSb.toString) else None,
-      mateReferenceName = if (nextRefId >= 0) Some(refNames(nextRefId)) else None,
-      mateAlignmentStart = if (nextPos >= 0 && bit(0x1)) Some(nextPos.toLong) else None,
-      insertSize = if (tlen != 0) Some(tlen.toLong) else None,
-      sequence = if (lSeq > 0) Some(seqSb.toString) else None,
-      qualityScores = quals,
-      readPaired = Some(bit(0x1)), properPair = Some(bit(0x2)),
-      readMapped = Some(mapped), mateMapped = Some(!bit(0x8)),
-      readNegativeStrand = Some(bit(0x10)), mateNegativeStrand = Some(bit(0x20)),
-      readInFragment = Some(if (bit(0x80)) 1 else 0),
-      secondaryAlignment = Some(bit(0x100)),
-      failedVendorQualityChecks = Some(bit(0x200)),
-      duplicateRead = Some(bit(0x400)),
-      supplementaryAlignment = Some(bit(0x800)),
-      primaryAlignment = Some(!bit(0x100) && !bit(0x800)),
-      readGroupId = attributes.get("RG").map(_.drop(2)),
-      mismatchingPositions = attributes.get("MD").map(_.drop(2)),
-      attributes = attributes)
+    def refName(id: Int): String = if (id >= 0) refNames(id) else null
+    SamIO.alignment(name = readName, flag = u16(b, 14), referenceName = refName(i32(b, 0)),
+      pos = i32(b, 4), refLen = refLen, mapq = b(9) & 0xff, cigar = cigar,
+      mateReferenceName = refName(i32(b, 20)), matePos = i32(b, 24), tlen = i32(b, 28),
+      sequence = new String(seq), quality = quals, attributes = attrs.result())
   }
 
-  private def recordIterator(in: InputStream, refNames: Array[String]): Iterator[Alignment] =
+  /** Records read from `in` while `more` holds before each one, up to the
+    * end of the stream; closes `in` after the last. */
+  private def records(in: InputStream, refNames: Array[String],
+      more: => Boolean): Iterator[Alignment] =
     new Iterator[Alignment] {
-      private var nextRec: Alignment = advance()
-      private def advance(): Alignment = {
-        val szb = new Array[Byte](4)
-        var off = 0
-        while (off < 4) {
-          val r = in.read(szb, off, 4 - off)
-          if (r < 0) { if (off == 0) return null
-            else throw new EOFException("truncated BAM record header") }
-          off += r
-        }
-        val blockSize = i32(szb, 0)
-        decodeRecord(readFully(in, blockSize), refNames)
-      }
-      def hasNext: Boolean = nextRec != null
-      def next(): Alignment = { val r = nextRec; nextRec = advance(); r }
-    }
-
-  /** Iterate records but stop before the first record whose initial byte
-    * belongs to a block at/after `end` — the split-ownership rule. */
-  private def boundedRecordIterator(
-      in: Bgzf.BgzfBlockInput, refNames: Array[String],
-      end: Long): Iterator[Alignment] =
-    new Iterator[Alignment] {
-      private var nextRec: Alignment = advance()
-      private def advance(): Alignment = {
-        if (in.nextByteBlockStart >= end) { in.close(); return null }
+      private var nextRec: Array[Byte] = advance()
+      private def advance(): Array[Byte] = {
+        if (!more) { in.close(); return null }
         val szb = new Array[Byte](4)
         var off = 0
         while (off < 4) {
@@ -214,10 +146,12 @@ object BamIO {
             else throw new EOFException("truncated BAM record header") }
           off += r
         }
-        decodeRecord(readFully(in, i32(szb, 0)), refNames)
+        readFully(in, i32(szb, 0))
       }
       def hasNext: Boolean = nextRec != null
-      def next(): Alignment = { val r = nextRec; nextRec = advance(); r }
+      def next(): Alignment = {
+        val r = decodeRecord(nextRec, refNames); nextRec = advance(); r
+      }
     }
 
   /** Is offset `o` in `b` a plausible BAM record start? Field-range checks
@@ -284,7 +218,7 @@ object BamIO {
     if (start == 0) {
       val in = new Bgzf.BgzfBlockInput(fs.open(p), 0L)
       val (_, names) = readHeader(in)
-      boundedRecordIterator(in, names, end)
+      records(in, names, in.nextByteBlockStart < end)
     } else {
       val fileSize = fs.getFileStatus(p).getLen
       val raw = fs.open(p)
@@ -317,7 +251,7 @@ object BamIO {
         if (offset < 0) { in.close(); Iterator.empty }
         else {
           in.skipFully(offset.toLong)
-          boundedRecordIterator(in, refNames, end)
+          records(in, refNames, in.nextByteBlockStart < end)
         }
       }
     }
@@ -341,10 +275,7 @@ object BamIO {
           .sortBy(_._1).toIndexedSeq
       else Seq((path, fs.getFileStatus(p).getLen))
 
-    val (meta, refNames) = {
-      val in = Bgzf.inputStream(fs.open(new Path(files.head._1)))
-      try readHeader(in) finally in.close()
-    }
+    val (meta, refNames) = readHeader(fs, new Path(files.head._1))
 
     val splits: Seq[(String, Long, Long)] = files.flatMap { case (f, len) =>
       if (len <= splitSize + splitSize / 2) Seq((f, 0L, len))
@@ -381,10 +312,7 @@ object BamIO {
       spark.sparkContext.hadoopConfiguration)
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
-    val (meta, refNames) = {
-      val in = Bgzf.inputStream(fs.open(p))
-      try readHeader(in) finally in.close()
-    }
+    val (meta, refNames) = readHeader(fs, p)
     val index = {
       val in = fs.open(new Path(path + ".bai"))
       try Bai.read(in) finally in.close()
@@ -419,32 +347,13 @@ object BamIO {
         raw.seek(coffset)
         val in = new Bgzf.BgzfBlockInput(raw, coffset)
         in.skipFully(chunk.beg & 0xffffL)
-        val names = refNamesB.value
         val rs = regionsB.value
-        new Iterator[Alignment] {
-          private var nextRec: Alignment = advance()
-          private def advance(): Alignment = {
-            while (in.virtualPos < chunk.end) {
-              val szb = new Array[Byte](4)
-              var off = 0
-              var eof = false
-              while (off < 4 && !eof) {
-                val r = in.read(szb, off, 4 - off)
-                if (r < 0) eof = true else off += r
-              }
-              if (eof) { in.close(); return null }
-              val rec = decodeRecord(readFully(in, i32(szb, 0)), names)
-              val hit = (rec.referenceName, rec.start, rec.end) match {
-                case (Some(rn), Some(s), Some(e)) =>
-                  rs.exists(rr => rr.referenceName == rn && s < rr.end && rr.start < e)
-                case _ => false
-              }
-              if (hit) return rec
-            }
-            in.close(); null
+        records(in, refNamesB.value, in.virtualPos < chunk.end).filter { rec =>
+          (rec.referenceName, rec.start, rec.end) match {
+            case (Some(rn), Some(s), Some(e)) =>
+              rs.exists(rr => rr.referenceName == rn && s < rr.end && rr.start < e)
+            case _ => false
           }
-          def hasNext: Boolean = nextRec != null
-          def next(): Alignment = { val r = nextRec; nextRec = advance(); r }
         }
       }
     GenomicDataset(spark.createDataset(rdd), meta)
@@ -452,63 +361,53 @@ object BamIO {
 
   // ------------------------------- write ----------------------------------
 
-  private def encodeRecord(r: Alignment, refIndex: Map[String, Int]): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def w16(v: Int): Unit = { u8(v); u8(v >> 8) }
-    def w32(v: Int): Unit = { u8(v); u8(v >> 8); u8(v >> 16); u8(v >> 24) }
-
+  /** One record, length prefix first (SAM spec §4.2); `buf` is scratch
+    * space reused across records. */
+  private def writeRecord(out: OutputStream, r: Alignment,
+      refIndex: Map[String, Int], buf: ByteArrayOutputStream): Unit = {
+    buf.reset()
+    def w16(v: Int): Unit = { buf.write(v); buf.write(v >> 8) }
     val name = r.readName.getOrElse("*")
     val cigar = Cigar.parse(r.cigar.getOrElse(""))
     val seq = r.sequence.getOrElse("")
-    val flag = SamIO.flagOf(r)
-    w32(r.referenceName.flatMap(refIndex.get).getOrElse(-1))
-    w32(r.start.map(_.toInt).getOrElse(-1))
-    u8(name.length + 1)
-    u8(r.mappingQuality.getOrElse(255))
+    le32(buf, r.referenceName.flatMap(refIndex.get).getOrElse(-1))
+    le32(buf, r.start.map(_.toInt).getOrElse(-1))
+    buf.write(name.length + 1)
+    buf.write(r.mappingQuality.getOrElse(255))
     w16(0) // bin (unused by our reader)
     w16(cigar.length)
-    w16(flag)
-    w32(seq.length)
-    w32(r.mateReferenceName.flatMap(refIndex.get).getOrElse(-1))
-    w32(r.mateAlignmentStart.map(_.toInt).getOrElse(-1))
-    w32(r.insertSize.map(_.toInt).getOrElse(0))
-    out.write(name.getBytes("UTF-8")); u8(0)
-    cigar.foreach(e => w32((e.length << 4) | CigarOps.indexOf(e.op)))
+    w16(SamIO.flagOf(r))
+    le32(buf, seq.length)
+    le32(buf, r.mateReferenceName.flatMap(refIndex.get).getOrElse(-1))
+    le32(buf, r.mateAlignmentStart.map(_.toInt).getOrElse(-1))
+    le32(buf, r.insertSize.map(_.toInt).getOrElse(0))
+    buf.write(name.getBytes(UTF_8)); buf.write(0)
+    cigar.foreach(e => le32(buf, (e.length << 4) | CigarOps.indexOf(e.op)))
     var i = 0
     while (i < seq.length) {
       val hi = SeqChars.indexOf(Character.toUpperCase(seq.charAt(i))) max 0
       val lo = if (i + 1 < seq.length)
         SeqChars.indexOf(Character.toUpperCase(seq.charAt(i + 1))) max 0 else 0
-      u8((hi << 4) | lo)
+      buf.write((hi << 4) | lo)
       i += 2
     }
-    // exactly l_seq quality bytes (SAM spec §4.2): a quality string of any
-    // other length is written as missing (0xff), or the reader would take
-    // tag bytes for qualities
-    r.qualityScores match {
-      case Some(q) if q.length == seq.length => q.foreach(c => u8(c - 33))
-      case _ => (0 until seq.length).foreach(_ => u8(0xff))
-    }
-    // tags: keep string/int-typed attributes
-    r.attributes.toSeq.sortBy(_._1).foreach { case (tag, tv) =>
-      if (tag.length == 2 && tv.length > 2 && tv(1) == ':') {
-        val typ = tv(0); val v = tv.drop(2)
-        typ match {
-          case 'i' =>
-            out.write(tag.getBytes("ISO-8859-1")); u8('i')
-            w32(v.toInt)
-          case 'Z' =>
-            out.write(tag.getBytes("ISO-8859-1")); u8('Z')
-            out.write(v.getBytes("UTF-8")); u8(0)
-          case 'A' =>
-            out.write(tag.getBytes("ISO-8859-1")); u8('A'); u8(v.head)
-          case 'f' =>
-            out.write(tag.getBytes("ISO-8859-1")); u8('f')
-            w32(java.lang.Float.floatToIntBits(v.toFloat))
-          case _ => // drop H/B on write (round-trip subset)
-        }
-      }
+    SamIO.writeQuality(r, seq.length, buf)
+    r.attributes.toSeq.sortBy(_._1).foreach { case (tag, tv) => SamIO.writeTag(tag, tv, buf) }
+    le32(out, buf.size)
+    buf.writeTo(out)
+  }
+
+  /** The BAM header: magic, SAM header text and reference list. */
+  private def headerBytes(meta: GenomicMetadata, sorted: Boolean): Array[Byte] = {
+    val out = new ByteArrayOutputStream()
+    out.write(BamMagic)
+    val text = SamIO.headerLines(meta, sorted).mkString("", "\n", "\n").getBytes(UTF_8)
+    le32(out, text.length); out.write(text)
+    le32(out, meta.sequences.records.length)
+    meta.sequences.records.foreach { r =>
+      val name = r.name.getBytes(UTF_8)
+      le32(out, name.length + 1); out.write(name); out.write(0)
+      le32(out, r.length.toInt)
     }
     out.toByteArray
   }
@@ -526,127 +425,60 @@ object BamIO {
     val meta = gd.meta
     val refIndex = meta.sequences.records.zipWithIndex
       .map { case (r, i) => r.name -> i }.toMap
-    val headerText = SamIO.headerLines(meta, gd.sorted).mkString("", "\n", "\n")
-
-    def writeHeaderTo(out: java.io.OutputStream): Unit = {
-      def w32(v: Int): Unit = {
-        out.write(v & 0xff); out.write((v >> 8) & 0xff)
-        out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-      }
-      out.write(BamMagic)
-      val ht = headerText.getBytes("UTF-8")
-      w32(ht.length); out.write(ht)
-      w32(meta.sequences.records.length)
-      meta.sequences.records.foreach { r =>
-        val nb = (r.name.getBytes("UTF-8") :+ 0.toByte)
-        w32(nb.length); out.write(nb)
-        w32(r.length.toInt)
-      }
-    }
-
-    if (asSingleFile && !writeIndex) {
-      // Distributed single-file write: executors emit records-only BGZF
-      // fragments; the merge concatenates header member + parts + EOF
-      // marker (BGZF is valid under concatenation). No driver streaming.
-      val spark = gd.spark
+    val header = headerBytes(meta, gd.sorted)
+    val spark = gd.spark
+    if (asSingleFile && writeIndex) {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = new Bgzf.BgzfOutputStream(fs.create(p, true))
+      val bai = new Bai.Builder(meta.sequences.records.length,
+        meta.sequences.records.map(_.length))
+      try {
+        out.write(header)
+        val buf = new ByteArrayOutputStream()
+        gd.records.toLocalIterator.foreach { r =>
+          val vStart = out.virtualOffset
+          writeRecord(out, r, refIndex, buf)
+          (r.referenceName.flatMap(refIndex.get), r.start) match {
+            case (Some(ri), Some(s)) =>
+              bai.add(ri, s, r.end.getOrElse(s + 1), vStart, out.virtualOffset)
+            case _ =>
+          }
+        }
+      } finally out.close()
+      val baiOut = fs.create(new Path(path + ".bai"), true)
+      try Bai.write(bai.result(), baiOut) finally baiOut.close()
+    } else {
+      // executors write BGZF parts: whole part-BAMs, or records-only
+      // fragments that the merge concatenates after a header member and
+      // before the EOF marker (BGZF is valid under concatenation)
+      val dirName = if (asSingleFile) path + "._parts" else path
+      val dir = new Path(dirName)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(dir)
       val refIndexB = spark.sparkContext.broadcast(refIndex)
-      val partsDir = path + "._parts"
-      val dir = new Path(partsDir)
-      val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs0.mkdirs(dir)
       val confB = spark.sparkContext.broadcast(HadoopConf(spark))
       gd.records.mapPartitionsWithIndex { (pid, it) =>
-        if (it.isEmpty) Iterator.empty
+        if (asSingleFile && it.isEmpty) Iterator.empty
         else {
-          val part = new Path(dir, f"part-$pid%05d")
-          val fs = part.getFileSystem(confB.value.value)
-          val out = new Bgzf.BgzfOutputStream(fs.create(part, true),
-            writeEofOnClose = false)
-          try it.foreach { r =>
-            val rec = encodeRecord(r, refIndexB.value)
-            val sz = Array[Byte](
-              (rec.length & 0xff).toByte, ((rec.length >> 8) & 0xff).toByte,
-              ((rec.length >> 16) & 0xff).toByte, ((rec.length >> 24) & 0xff).toByte)
-            out.write(sz); out.write(rec)
+          val part = new Path(dir, if (asSingleFile) f"part-$pid%05d" else f"part-$pid%05d.bam")
+          val out = new Bgzf.BgzfOutputStream(
+            part.getFileSystem(confB.value.value).create(part, true),
+            writeEofOnClose = !asSingleFile)
+          try {
+            if (!asSingleFile) out.write(header)
+            val buf = new ByteArrayOutputStream()
+            it.foreach(r => writeRecord(out, r, refIndexB.value, buf))
           } finally out.close()
           Iterator.single(1)
         }
       }.count()
-      val headerBytes = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val hout = new Bgzf.BgzfOutputStream(bos, writeEofOnClose = false)
-        writeHeaderTo(hout)
+      if (asSingleFile) {
+        val member = new ByteArrayOutputStream()
+        val hout = new Bgzf.BgzfOutputStream(member, writeEofOnClose = false)
+        hout.write(header)
         hout.close()
-        bos.toByteArray
+        FileMerger.mergeBinary(spark, dirName, path, member.toByteArray, Bgzf.EofMarker)
       }
-      FileMerger.mergeBinary(spark, partsDir, path, headerBytes, Bgzf.EofMarker)
-    } else if (asSingleFile) {
-      val conf = gd.spark.sparkContext.hadoopConfiguration
-      val p = new Path(path)
-      val fs = p.getFileSystem(conf)
-      val out = new Bgzf.BgzfOutputStream(fs.create(p, true))
-      val baiB =
-        if (writeIndex)
-          Some(new Bai.Builder(meta.sequences.records.length,
-            meta.sequences.records.map(_.length)))
-        else None
-      try {
-        writeHeaderTo(out)
-        gd.records.toLocalIterator.foreach { r =>
-          val rec = encodeRecord(r, refIndex)
-          val vStart = out.virtualOffset
-          val sz = new Array[Byte](4)
-          sz(0) = (rec.length & 0xff).toByte
-          sz(1) = ((rec.length >> 8) & 0xff).toByte
-          sz(2) = ((rec.length >> 16) & 0xff).toByte
-          sz(3) = ((rec.length >> 24) & 0xff).toByte
-          out.write(sz); out.write(rec)
-          baiB.foreach { b =>
-            (r.referenceName.flatMap(refIndex.get), r.start) match {
-              case (Some(ri), Some(s)) =>
-                b.add(ri, s, r.end.getOrElse(s + 1), vStart, out.virtualOffset)
-              case _ =>
-            }
-          }
-        }
-      } finally out.close()
-      baiB.foreach { b =>
-        val baiOut = fs.create(new Path(path + ".bai"), true)
-        try Bai.write(b.result(), baiOut) finally baiOut.close()
-      }
-    } else {
-      val spark = gd.spark
-      val refIndexB = spark.sparkContext.broadcast(refIndex)
-      val headerB = spark.sparkContext.broadcast(
-        (headerText, meta.sequences.records.map(r => (r.name, r.length))))
-      val dir = new Path(path)
-      val fs0 = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs0.mkdirs(dir)
-      val confB = spark.sparkContext.broadcast(HadoopConf(spark))
-      gd.records.mapPartitionsWithIndex { (pid, it) =>
-        val part = new Path(dir, f"part-$pid%05d.bam")
-        val fs = part.getFileSystem(confB.value.value)
-        val out = new Bgzf.BgzfOutputStream(fs.create(part, true))
-        try {
-          val (ht, refs) = headerB.value
-          def w32(v: Int): Unit = {
-            out.write(v & 0xff); out.write((v >> 8) & 0xff)
-            out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-          }
-          out.write(BamMagic)
-          val hb = ht.getBytes("UTF-8"); w32(hb.length); out.write(hb)
-          w32(refs.length)
-          refs.foreach { case (n, l) =>
-            val nb = (n.getBytes("UTF-8") :+ 0.toByte)
-            w32(nb.length); out.write(nb); w32(l.toInt)
-          }
-          it.foreach { r =>
-            val rec = encodeRecord(r, refIndexB.value)
-            w32(rec.length); out.write(rec)
-          }
-        } finally out.close()
-        Iterator.single(1)
-      }.count()
     }
   }
 }

@@ -183,13 +183,32 @@ object CramIO {
     writeItf8(hdr, b.contentId)
     writeItf8(hdr, payload.length)
     writeItf8(hdr, b.data.length)
-    val body = hdr.toByteArray ++ payload
-    out.write(body, 0, body.length)
+    withCrc(out, hdr.toByteArray ++ payload)
+  }
+
+  /** `b` and then its CRC32 (a block, or a container header). */
+  private def withCrc(out: ByteArrayOutputStream, b: Array[Byte]): Unit = {
+    out.write(b, 0, b.length)
     val crc = new CRC32
-    crc.update(body)
-    val c = crc.getValue
-    out.write((c & 0xff).toInt); out.write(((c >> 8) & 0xff).toInt)
-    out.write(((c >> 16) & 0xff).toInt); out.write(((c >> 24) & 0xff).toInt)
+    crc.update(b)
+    SamIO.le32(out, crc.getValue.toInt)
+  }
+
+  /** A container: its header (alignment start and span 0) and `body`. */
+  private def container(body: Array[Byte], refSeqId: Int, nRecords: Int,
+      counter: Long, bases: Long, nBlocks: Int, landmarks: Seq[Int]): Array[Byte] = {
+    val hdr = new ByteArrayOutputStream()
+    SamIO.le32(hdr, body.length)
+    writeItf8(hdr, refSeqId); writeItf8(hdr, 0); writeItf8(hdr, 0)
+    writeItf8(hdr, nRecords)
+    writeLtf8(hdr, counter); writeLtf8(hdr, bases)
+    writeItf8(hdr, nBlocks)
+    writeItf8(hdr, landmarks.length)
+    landmarks.foreach(writeItf8(hdr, _))
+    val out = new ByteArrayOutputStream()
+    withCrc(out, hdr.toByteArray)
+    out.write(body, 0, body.length)
+    out.toByteArray
   }
 
   private def readBlock(in: InputStream): Block = {
@@ -494,9 +513,7 @@ object CramIO {
   private def writeCompressionHeader(
       tagLines: IndexedSeq[Seq[TagDef]],
       encodings: Map[String, SeriesEnc],
-      readNames: Boolean = true,
-      apDelta: Boolean = false,
-      refRequired: Boolean = false): Block = {
+      readNames: Boolean, apDelta: Boolean, refRequired: Boolean): Block = {
     val out = new ByteArrayOutputStream()
     // preservation map: RN, AP(delta), RR, TD=dictionary
     val pm = new ByteArrayOutputStream()
@@ -779,46 +796,6 @@ object CramIO {
       HuffEnc(sorted, Array.fill(sorted.length)(len))
     }
 
-  private def bamFlags(r: Alignment): Int = SamIO.flagOf(r)
-
-  private def parseTag(k: String, v: String): Option[(TagDef, String)] =
-    if (k.length == 2 && v.length > 2 && v(1) == ':' && "AifZBH".contains(v(0)))
-      Some((TagDef(k(0), k(1), v(0)), v.drop(2)))
-    else None
-
-  private def le32(x: Int): Array[Byte] =
-    Array((x & 0xff).toByte, ((x >> 8) & 0xff).toByte,
-      ((x >> 16) & 0xff).toByte, ((x >> 24) & 0xff).toByte)
-
-  private def tagValueBytes(t: TagDef, v: String): Array[Byte] = t.typ match {
-    case 'A' => Array(v.head.toByte)
-    case 'i' => le32(v.toInt)
-    case 'f' => le32(java.lang.Float.floatToIntBits(v.toFloat))
-    case 'B' =>
-      // SAM text array: <subtype>,v1,v2,... -> subtype + i32 count + elems
-      val parts = v.split(",")
-      val sub = parts(0).head
-      val elems = parts.tail
-      val bos = new ByteArrayOutputStream()
-      bos.write(sub)
-      le32(elems.length).foreach(b => bos.write(b & 0xff))
-      elems.foreach { e =>
-        sub match {
-          case 'c' | 'C' => bos.write(e.toInt & 0xff)
-          case 's' | 'S' =>
-            val x = e.toInt; bos.write(x & 0xff); bos.write((x >> 8) & 0xff)
-          case 'i' => le32(e.toInt).foreach(b => bos.write(b & 0xff))
-          case 'I' => le32(e.toLong.toInt).foreach(b => bos.write(b & 0xff))
-          case 'f' => le32(java.lang.Float.floatToIntBits(e.toFloat))
-            .foreach(b => bos.write(b & 0xff))
-          case other => throw new UnsupportedOperationException(
-            s"B-array subtype '$other' not supported")
-        }
-      }
-      bos.toByteArray
-    case _ => v.getBytes("UTF-8") :+ 0.toByte // Z and H: NUL-terminated
-  }
-
   /** Writer behavior knobs. The default profile matches round-2 output
     * byte-for-byte; the other switches exercise spec features that
     * external writers use (so the reader's envelope is testable without
@@ -919,13 +896,20 @@ object CramIO {
   private def encodeContainer(
       records0: Seq[Alignment], refIndex: Map[String, Int],
       rgIndex: Map[String, Int], counterStart: Long,
-      profile: WriteProfile = WriteProfile()): Array[Byte] = {
+      profile: WriteProfile): Array[Byte] = {
     val records = records0.map(preserveEqX)
 
-    // tag dictionary for this container
-    val recTags: Seq[Seq[(TagDef, String)]] = records.map { r =>
-      r.attributes.toSeq.sortBy(_._1)
-        .flatMap { case (k, v) => parseTag(k, v) }
+    // tag dictionary for this container; each tag's BAM bytes are its
+    // key, its type and then the value bytes the tag's block stores
+    val recTags: Seq[Seq[(TagDef, Array[Byte])]] = records.map { r =>
+      val bam = new ByteArrayOutputStream()
+      r.attributes.toSeq.sortBy(_._1).flatMap { case (k, v) =>
+        bam.reset()
+        if (SamIO.writeTag(k, v, bam)) {
+          val b = bam.toByteArray
+          Some((TagDef(k(0), k(1), b(2).toChar), b))
+        } else None
+      }
     }
     val tagLines: IndexedSeq[Seq[TagDef]] =
       recTags.map(_.map(_._1)).distinct.toIndexedSeq
@@ -1024,10 +1008,10 @@ object CramIO {
 
         var prevAp = sliceAlignStart
         sliceRecs.zipWithIndex.foreach { case (((r, tags), featsOpt), i) =>
-          val mapped = r.readMapped.getOrElse(false)
           val downstream = pairOf.contains(i)
           val attached = pointee.contains(i)
-          w.itf8("BF", bamFlags(r))
+          val bf = SamIO.flagOf(r)
+          w.itf8("BF", bf)
           val cf = 1 | // qualities preserved
             (if (downstream) 4 else if (attached) 0 else 2) |
             (if (basesUnknown(r)) 8 else 0)
@@ -1046,10 +1030,8 @@ object CramIO {
           if (profile.readNames) w.byteArray("RN", nameBytes)
           if ((cf & 2) != 0) {
             // detached mate info
-            var mf = 0
-            if (r.mateNegativeStrand.getOrElse(false)) mf |= 1
-            if (!r.mateMapped.getOrElse(false)) mf |= 2
-            w.itf8("MF", mf)
+            w.itf8("MF", (if ((bf & SamIO.MateReverse.bit) != 0) 1 else 0) |
+              (if ((bf & SamIO.MateUnmapped.bit) != 0) 2 else 0))
             if (!profile.readNames) w.byteArray("RN", nameBytes)
             w.itf8("NS", r.mateReferenceName.flatMap(refIndex.get).getOrElse(-1))
             w.itf8("NP", r.mateAlignmentStart.map(_ + 1).getOrElse(0L).toInt)
@@ -1058,10 +1040,9 @@ object CramIO {
             w.itf8("NF", pairOf(i) - i - 1)
           }
           w.itf8("TL", lineIdx(tags.map(_._1)))
-          tags.foreach { case (t, v) =>
-            val st = tagStreams.getOrElseUpdate(t.contentId, new ByteArrayOutputStream())
-            val vb = tagValueBytes(t, v)
-            st.write(vb, 0, vb.length)
+          tags.foreach { case (t, b) =>
+            tagStreams.getOrElseUpdate(t.contentId, new ByteArrayOutputStream())
+              .write(b, 3, b.length - 3)
           }
 
           featsOpt match {
@@ -1088,14 +1069,9 @@ object CramIO {
             case None =>
               w.bytes("BA", seq.getBytes("UTF-8"))
           }
-          // exactly RL quality bytes, all 0xff (missing) unless the
-          // quality string is exactly as long as the stored sequence
-          val qb = r.qualityScores match {
-            case Some(q) if q.length == seq.length && !basesUnknown(r) =>
-              q.map(c => (c - 33).toByte).toArray
-            case _ => Array.fill(seq.length)(0xff.toByte)
-          }
-          w.bytes("QS", qb)
+          val qb = new ByteArrayOutputStream(seq.length)
+          SamIO.writeQuality(r, seq.length, qb)
+          w.bytes("QS", qb.toByteArray)
         }
 
         val coreData = w.core.result()
@@ -1154,33 +1130,9 @@ object CramIO {
       }
       totalBlocks += 2 + extBlocks.length
     }
-    val body = payload.toByteArray
-
-    val hdr = new ByteArrayOutputStream()
-    def w32(v: Int): Unit = {
-      hdr.write(v & 0xff); hdr.write((v >> 8) & 0xff)
-      hdr.write((v >> 16) & 0xff); hdr.write((v >> 24) & 0xff)
-    }
-    w32(body.length)
-    writeItf8(hdr, -2)
-    writeItf8(hdr, 0); writeItf8(hdr, 0)
-    writeItf8(hdr, records.length)
-    writeLtf8(hdr, counterStart)
-    writeLtf8(hdr, records.map(_.sequence.map(_.length.toLong).getOrElse(0L)).sum)
-    writeItf8(hdr, totalBlocks)
-    val lms = landmarks.result()
-    writeItf8(hdr, lms.length)
-    lms.foreach(writeItf8(hdr, _))
-    val hb = hdr.toByteArray
-    val crc = new CRC32
-    crc.update(hb)
-    val out = new ByteArrayOutputStream()
-    out.write(hb, 0, hb.length)
-    val c = crc.getValue
-    out.write((c & 0xff).toInt); out.write(((c >> 8) & 0xff).toInt)
-    out.write(((c >> 16) & 0xff).toInt); out.write(((c >> 24) & 0xff).toInt)
-    out.write(body, 0, body.length)
-    out.toByteArray
+    container(payload.toByteArray, -2, records.length, counterStart,
+      records.map(_.sequence.map(_.length.toLong).getOrElse(0L)).sum, totalBlocks,
+      landmarks.result())
   }
 
   /** Write with a `.crai` index sidecar (gzipped text, spec columns:
@@ -1218,32 +1170,13 @@ object CramIO {
 
       // header container: one raw block holding i32 length + SAM text
       {
-        val hdrBytes = {
-          val b = new ByteArrayOutputStream()
-          val t = headerText.getBytes("UTF-8")
-          b.write(t.length & 0xff); b.write((t.length >> 8) & 0xff)
-          b.write((t.length >> 16) & 0xff); b.write((t.length >> 24) & 0xff)
-          b.write(t, 0, t.length)
-          b.toByteArray
-        }
+        val text = new ByteArrayOutputStream()
+        val t = headerText.getBytes("UTF-8")
+        SamIO.le32(text, t.length)
+        text.write(t, 0, t.length)
         val payload = new ByteArrayOutputStream()
-        writeBlock(payload, Block(0, 0, hdrBytes), MethodRaw)
-        val body = payload.toByteArray
-        val hdr = new ByteArrayOutputStream()
-        hdr.write(body.length & 0xff); hdr.write((body.length >> 8) & 0xff)
-        hdr.write((body.length >> 16) & 0xff); hdr.write((body.length >> 24) & 0xff)
-        writeItf8(hdr, 0); writeItf8(hdr, 0); writeItf8(hdr, 0)
-        writeItf8(hdr, 0)
-        writeLtf8(hdr, 0L); writeLtf8(hdr, 0L)
-        writeItf8(hdr, 1)
-        writeItf8(hdr, 0)
-        val hb = hdr.toByteArray
-        val crc = new CRC32; crc.update(hb)
-        out.write(hb)
-        val c = crc.getValue
-        out.write((c & 0xff).toInt); out.write(((c >> 8) & 0xff).toInt)
-        out.write(((c >> 16) & 0xff).toInt); out.write(((c >> 24) & 0xff).toInt)
-        out.write(body)
+        writeBlock(payload, Block(0, 0, text.toByteArray), MethodRaw)
+        out.write(container(payload.toByteArray, 0, 0, 0L, 0L, 1, Nil))
       }
 
       var counter = 0L
@@ -1478,66 +1411,12 @@ object CramIO {
       case Some(e: StopEnc) => byteArrayEnc(s"tag ${t.key}", e)
       case _ =>
         t.typ match {
-          case 'A' | 'c' | 'C' => tagBytes(t.contentId, 1)
-          case 's' | 'S' => tagBytes(t.contentId, 2)
-          case 'i' | 'I' | 'f' => tagBytes(t.contentId, 4)
           case 'Z' | 'H' => tagUntilNul(t.contentId)
           case 'B' =>
             val head = tagBytes(t.contentId, 5)
-            val count = (head(1) & 0xff) | ((head(2) & 0xff) << 8) |
-              ((head(3) & 0xff) << 16) | ((head(4) & 0xff) << 24)
-            val elemSize = (head(0).toChar: @unchecked) match {
-              case 'c' | 'C' => 1
-              case 's' | 'S' => 2
-              case 'i' | 'I' | 'f' => 4
-            }
-            head ++ tagBytes(t.contentId, count * elemSize)
-          case other => throw new UnsupportedOperationException(
-            s"tag ${t.key} has unsupported BAM type '$other'")
+            head ++ tagBytes(t.contentId, SamIO.le(head, 1, 4) * SamIO.width(head(0).toChar))
+          case typ => tagBytes(t.contentId, SamIO.width(typ))
         }
-    }
-  }
-
-  /** BAM-typed value bytes -> (SAM text type, SAM text value). Integer
-    * widths c/C/s/S/i/I all render as SAM 'i'. */
-  private def formatTagValue(typ: Char, v: Array[Byte]): (Char, String) = {
-    def u8(o: Int) = v(o) & 0xff
-    def i16(o: Int) = ((u8(o) | (u8(o + 1) << 8)).toShort).toInt
-    def u16(o: Int) = u8(o) | (u8(o + 1) << 8)
-    def i32(o: Int) = u8(o) | (u8(o + 1) << 8) | (u8(o + 2) << 16) | (u8(o + 3) << 24)
-    def u32(o: Int) = i32(o).toLong & 0xffffffffL
-    typ match {
-      case 'A' => ('A', v(0).toChar.toString)
-      case 'c' => ('i', v(0).toInt.toString)
-      case 'C' => ('i', u8(0).toString)
-      case 's' => ('i', i16(0).toString)
-      case 'S' => ('i', u16(0).toString)
-      case 'i' => ('i', i32(0).toString)
-      case 'I' => ('i', u32(0).toString)
-      case 'f' => ('f', java.lang.Float.intBitsToFloat(i32(0)).toString)
-      case 'Z' =>
-        val end = v.indexOf(0.toByte) match { case -1 => v.length; case x => x }
-        ('Z', new String(v, 0, end, "UTF-8"))
-      case 'H' =>
-        val end = v.indexOf(0.toByte) match { case -1 => v.length; case x => x }
-        ('H', new String(v, 0, end, "UTF-8"))
-      case 'B' =>
-        val sub = v(0).toChar
-        val count = i32(1)
-        val vals = (0 until count).map { k =>
-          sub match {
-            case 'c' => v(5 + k).toInt.toString
-            case 'C' => u8(5 + k).toString
-            case 's' => i16(5 + 2 * k).toString
-            case 'S' => u16(5 + 2 * k).toString
-            case 'i' => i32(5 + 4 * k).toString
-            case 'I' => u32(5 + 4 * k).toString
-            case 'f' => java.lang.Float.intBitsToFloat(i32(5 + 4 * k)).toString
-          }
-        }
-        ('B', (sub.toString +: vals).mkString(","))
-      case other => throw new UnsupportedOperationException(
-        s"BAM tag type '$other' not supported")
     }
   }
 
@@ -1696,7 +1575,7 @@ object CramIO {
       blocks: Map[Int, Array[Byte]], core: Array[Byte],
       refNames: Array[String], rgIds: Array[String],
       reference: Option[graft.core.ReferenceSource],
-      harvested: Option[HarvestedRefs] = None): Seq[Alignment] = {
+      harvested: Option[HarvestedRefs]): Seq[Alignment] = {
     val r = new SeriesReader(blocks, ch, core)
 
     // reference bases provider (0-based absolute position on the contig):
@@ -1780,16 +1659,17 @@ object CramIO {
 
       val tl = r.itf8("TL")
       val attrs = Map.newBuilder[String, String]
+      val sb = new java.lang.StringBuilder
       ch.tagLines(tl).foreach { t =>
-        val raw = r.tagValue(t)
-        val (samType, v) = formatTagValue(t.typ, raw)
-        attrs += t.key -> s"$samType:$v"
+        sb.setLength(0)
+        SamIO.readTag(t.typ, r.tagValue(t), 0, sb)
+        attrs += t.key -> sb.toString
       }
       val mapped = (bf & 0x4) == 0
 
       var seq = ""
-      var cigar: Option[String] = None
-      var mapq: Option[Int] = None
+      var cigar: String = null
+      var mapq = 255
       var refLen = 0L
       var featQuals: Array[Byte] = null
       def qualAt(p1: Int, q: Int): Unit = {
@@ -1885,56 +1765,33 @@ object CramIO {
         }
         fillGap(rl + 1) // trailing match gap to the end of the read
         if (lastOp != ' ') cig.append(lastLen).append(lastOp)
-        mapq = Some(r.itf8("MQ")).filter(_ != 255)
-        cigar = Some(cig.toString).filter(_.nonEmpty)
+        mapq = r.itf8("MQ")
+        cigar = cig.toString
         seq = if (basesUnknown) "" else sb.toString
       } else if (!basesUnknown) {
         seq = new String(r.bytes("BA", rl), "UTF-8")
       }
 
       val quals =
-        if (qualsStored) {
-          val qb = r.bytes("QS", rl)
-          if (rl == 0 || (qb.nonEmpty && (qb(0) & 0xff) == 0xff)) None
-          else Some(qb.map(q => ((q & 0xff) + 33).toChar).mkString)
-        } else if (featQuals != null)
+        if (qualsStored) SamIO.readQuality(r.bytes("QS", rl), 0, rl)
+        else if (featQuals != null)
           Some(featQuals.map(q => ((q & 0xff) + 33).toChar).mkString)
         else None
 
-      def bit(m: Int): Boolean = (bf & m) != 0
       val attributes0 = attrs.result()
       // restore an '='/'X'-preserving CIGAR stashed by [[preserveEqX]]
       // and strip the local-use tag
       val attributes = attributes0 - "zC"
-      attributes0.get("zC").foreach(v => cigar = Some(v.drop(2)))
-      recs += Alignment(
-        readName = Some(name).filter(_.nonEmpty),
-        referenceName = if (ri >= 0 && ri < refNames.length) Some(refNames(ri)) else None,
-        start = if (mapped && ap > 0) Some(ap - 1L) else None,
-        end = if (mapped && ap > 0) Some(ap - 1L + refLen) else None,
-        mappingQuality = mapq,
-        cigar = cigar,
-        sequence = Some(seq).filter(_.nonEmpty),
-        qualityScores = quals,
-        mateReferenceName =
-          if (ns >= 0 && ns < refNames.length) Some(refNames(ns)) else None,
-        mateAlignmentStart = if (np > 0 && bit(0x1)) Some(np - 1L) else None,
-        insertSize = Some(ts.toLong).filter(_ != 0L),
-        readPaired = Some(bit(0x1)), properPair = Some(bit(0x2)),
-        readMapped = Some(mapped),
-        mateMapped = Some(!bit(0x8) && (mf & 2) == 0),
-        readNegativeStrand = Some(bit(0x10)),
-        mateNegativeStrand = Some(bit(0x20) || (mf & 1) != 0),
-        readInFragment = Some(if (bit(0x80)) 1 else 0),
-        secondaryAlignment = Some(bit(0x100)),
-        failedVendorQualityChecks = Some(bit(0x200)),
-        duplicateRead = Some(bit(0x400)),
-        supplementaryAlignment = Some(bit(0x800)),
-        primaryAlignment = Some(!bit(0x100) && !bit(0x800)),
-        readGroupId = if (rg >= 0 && rg < rgIds.length) Some(rgIds(rg))
-          else attributes.get("RG").map(_.drop(2)),
-        mismatchingPositions = attributes.get("MD").map(_.drop(2)),
-        attributes = attributes)
+      attributes0.get("zC").foreach(v => cigar = v.drop(2))
+      def refName(i: Int): String = if (i >= 0 && i < refNames.length) refNames(i) else null
+      // detached mate bits (MF) count as the flag's own mate bits
+      val flag = bf | (if ((mf & 1) != 0) SamIO.MateReverse.bit else 0) |
+        (if ((mf & 2) != 0) SamIO.MateUnmapped.bit else 0)
+      recs += SamIO.alignment(name = name, flag = flag, referenceName = refName(ri),
+        pos = ap - 1L, refLen = refLen, mapq = mapq, cigar = cigar,
+        mateReferenceName = refName(ns), matePos = np - 1L, tlen = ts, sequence = seq,
+        quality = quals, attributes = attributes,
+        readGroup = if (rg >= 0 && rg < rgIds.length) rgIds(rg) else null)
       idx += 1
     }
 

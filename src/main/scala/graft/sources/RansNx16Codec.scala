@@ -488,7 +488,6 @@ object RansNx16Codec {
     val nStates = if ((flags & X32) != 0) 32 else 4
     // transform pipeline: RLE first, then PACK, then entropy
     var work = data
-    var meta = new ByteArrayOutputStream()
     var outFlags = flags & (Order1 | X32 | Rle | Pack)
     var rleMeta: Array[Byte] = null
     var packMeta: Array[Byte] = null

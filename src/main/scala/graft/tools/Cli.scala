@@ -422,27 +422,10 @@ object Cli {
 
   /** Per-bit predicate Columns for each SAM flag bit set in `n`, in the
     * `matchValue = true` sense (reference View.getFilters,
-    * adam-cli/.../View.scala:121-156). The 0x8 subtlety is preserved: the
-    * record model stores mate MAPPED, and "mate unmapped" is only
-    * meaningful for paired reads, so 0x8 = paired && !mateMapped. */
-  private def bitPredicates(n: Int): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions.coalesce
-    def b(c: org.apache.spark.sql.Column) = coalesce(c, lit(false))
-    val preds = Seq(
-      0x1 -> b(col("readPaired")),
-      0x2 -> b(col("properPair")),
-      0x4 -> !b(col("readMapped")),
-      0x8 -> (b(col("readPaired")) && !coalesce(col("mateMapped"), lit(true))),
-      0x10 -> b(col("readNegativeStrand")),
-      0x20 -> b(col("mateNegativeStrand")),
-      0x40 -> (coalesce(col("readInFragment"), lit(-1)) === 0),
-      0x80 -> (coalesce(col("readInFragment"), lit(-1)) === 1),
-      0x100 -> !coalesce(col("primaryAlignment"), lit(true)),
-      0x200 -> b(col("failedVendorQualityChecks")),
-      0x400 -> b(col("duplicateRead")),
-      0x800 -> b(col("supplementaryAlignment")))
-    preds.collect { case (bit, p) if (n & bit) > 0 => p }
-  }
+    * adam-cli/.../View.scala:121-156): each holds exactly when the flag
+    * [[SamIO.flagOf]] writes has that bit. */
+  private def bitPredicates(n: Int): Seq[org.apache.spark.sql.Column] =
+    SamIO.FlagTable.filter(e => (n & e.bit) != 0).map(SamIO.isSet)
 
   /** `view` — the reference's samtools-style record viewer
     * (adam-cli/.../View.scala): -f N (ALL bits match), -F N (NO bit
@@ -651,8 +634,6 @@ object Cli {
             SequenceIO.writePairedFastq(gd.ds, out1, out2, strict = false)
             a.wrote(s"$out1 + $out2")
           case None =>
-            implicit val rdE: org.apache.spark.sql.Encoder[Read] =
-              Encoders.product[Read]
             SequenceIO.writeFastq(Conversions.alignmentsToReads(gd.ds), out1)
             a.wrote(out1)
         }

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -10,13 +10,13 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Same-package shim (like [[ColumnBridge]]) for the two session internals
   * graft's sinks need: a DataFrame over rows a plan has already produced,
-  * and Spark's own parquet row writer run on the driver. */
+  * and Spark's own parquet row writer and reader run on the driver. */
 object ExecutionBridge {
 
   /** A DataFrame whose plan is a scan of `rows`. An action on it runs only
@@ -61,6 +61,39 @@ object ExecutionBridge {
     val toRow = exprEnc.createSerializer()
     try rows.foreach(r => writer.write(toRow(r)))
     finally writer.close()
+  }
+
+  /** The rows of the parquet files in directory `dir` (none when it does
+    * not exist; `_`/`.`-prefixed files skipped, as Spark's file index
+    * skips them), read on the driver with Spark's `ParquetReadSupport`
+    * asking for the encoder's schema, then turned into `A` by the
+    * encoder's deserializer. Launches no job: for bounded rows such as
+    * those [[writeParquetDir]] writes. */
+  def readParquetDir[A](spark: SparkSession, dir: Path, enc: Encoder[A]): Seq[A] = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val sqlConf = session.sessionState.conf
+    val conf = session.sessionState.newHadoopConf()
+    val exprEnc = encoderFor(enc)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, exprEnc.schema.json)
+    // session settings the reader's schema converter takes from the conf,
+    // set as Spark's parquet file format sets them
+    conf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+    conf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, sqlConf.isParquetBinaryAsString)
+    conf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, sqlConf.isParquetINT96AsTimestamp)
+    conf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+      sqlConf.parquetInferTimestampNTZEnabled)
+    conf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, sqlConf.legacyParquetNanosAsLong)
+    val fromRow = exprEnc.resolveAndBind().createDeserializer()
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) return Seq.empty
+    fs.listStatus(dir).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .sortBy(_.getName).toSeq
+      .flatMap { file =>
+        val reader = ParquetReader.builder(new ParquetReadSupport(), file).withConf(conf).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null).map(fromRow).toVector
+        finally reader.close()
+      }
   }
 
   private final class RowWriterBuilder(file: HadoopOutputFile)

@@ -10,7 +10,7 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 /** Sinks of one GenomicDataset share one execution, and sidecars are
-  * written without a Spark job. */
+  * written and read without a Spark job. */
 class SinkExecutionSpec extends SparkSpec {
 
   private implicit val alignEnc: org.apache.spark.sql.Encoder[Alignment] =
@@ -141,10 +141,25 @@ class SinkExecutionSpec extends SparkSpec {
       assert(footer(d).getKeyValueMetaData == footer(s).getKeyValueMetaData, sub)
     }
 
+    // Sidecars.read reads the Spark writer's files too
+    assert(Sidecars.read(spark, s"$dir/spark") == meta)
+
     // an empty sidecar is not written; rewriting replaces the old file
     Sidecars.write(spark, s"$dir/driver", meta.copy(samples = Seq(Sample("s9"))))
     assert(Sidecars.read(spark, s"$dir/driver").samples == Seq(Sample("s9")))
     Sidecars.write(spark, s"$dir/empty", GenomicMetadata.empty)
     assert(!new java.io.File(s"$dir/empty/_graft_sequences").exists())
+  }
+
+  test("Sidecars.read runs no Spark job and reads back what was written") {
+    val dir = tmpDir()
+    val written = meta.copy(samples = Seq(Sample("s1", Some("one"), Map("k" -> "v")), Sample("s2")))
+    Sidecars.write(spark, dir, written)
+    var back = GenomicMetadata.empty
+    assert(jobsDuring { back = Sidecars.read(spark, dir) } == 0)
+    assert(back == written)
+    // sidecar directories that do not exist read as empty
+    assert(jobsDuring { back = Sidecars.read(spark, s"$dir/absent") } == 0)
+    assert(back == GenomicMetadata.empty)
   }
 }

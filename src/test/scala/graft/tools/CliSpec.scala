@@ -112,13 +112,37 @@ class CliSpec extends SparkSpec {
     assert(viewNames("-g", "1028") == Set("p2", "u1"))
     // -G 1028: NOT (duplicate AND unmapped) — at least one bit mismatches
     assert(viewNames("-G", "1028") == Set("p1", "p2", "u1", "s1"))
-    // hex accepted like samtools. Reference parity quirk: the reference's
-    // 0x40 filter is `readInFragment == 0` with NO paired check
-    // (View.scala:147; Avro defaults unpaired reads to fragment 0), so
-    // unpaired u1/s1 match too — samtools would return only p1.
-    assert(viewNames("-f", "0x40") == Set("p1", "u1", "s1"))
+    // hex accepted like samtools; 0x40 counts only on paired reads, as in
+    // the flag the SAM/BAM/CRAM writers write
+    assert(viewNames("-f", "0x40") == Set("p1"))
     // -q 30: mapq >= 30 (u1 has mapq 0, s1 mapq 10)
     assert(viewNames("-q", "30") == Set("p1", "p2"))
+  }
+
+  test("view -f/-F keep exactly the records whose written flag has all/none of the bits") {
+    import graft.core.GenomicDataset
+    import graft.model.Alignment
+    import graft.sources.{AlignmentGen, SamIO}
+    import spark.implicits._
+    // every third record leaves some flag fields unset
+    val recs = AlignmentGen.batch(200, seed = 3L).zipWithIndex.map { case (r, i) =>
+      if (i % 3 == 0)
+        r.copy(readMapped = None, mateMapped = None, readInFragment = None, duplicateRead = None)
+      else r
+    }
+    val in = tmpDir() + "/g.parquet"
+    GenomicDataset(spark.createDataset(recs), AlignmentGen.meta).saveAsParquet(in)
+    def kept(filter: String, n: Int): Set[Int] = {
+      val out = tmpDir() + "/v.parquet"
+      Cli.run(spark, Seq("view", in, out, filter, n.toString))
+      GenomicDataset.loadParquet[Alignment](spark, out).ds.collect()
+        .map(AlignmentGen.index).toSet
+    }
+    val flags = recs.map(r => AlignmentGen.index(r) -> SamIO.flagOf(r))
+    (SamIO.FlagTable.map(_.bit) ++ Seq(0x41, 0x81, 0x28, 0x900)).foreach { n =>
+      assert(kept("-f", n) == flags.collect { case (i, f) if (f & n) == n => i }.toSet, s"-f $n")
+      assert(kept("-F", n) == flags.collect { case (i, f) if (f & n) == 0 => i }.toSet, s"-F $n")
+    }
   }
 
   test("view -c prints the count; stdout prints SAM with header") {
