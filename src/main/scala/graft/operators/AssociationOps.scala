@@ -40,32 +40,30 @@ object AssociationOps {
   def associationRules(
       incidence: DataFrame, keyCol: String, itemCol: String,
       minPairSupport: Long = 2L, maxBasketSize: Long = 10000L): DataFrame = {
-    // exactly ONE cached incidence projection survives this block (`inc`);
-    // the scaffolding caches (raw, sizes) are dropped once inc is
-    // materialized. The RETURNED plan reads inc, so it depends on that
-    // cache until the caller's session drops it (Bench reclaims between
-    // queries).
+    // exactly ONE cached incidence projection outlives the scope (`inc`):
+    // the RETURNED plan reads it, so it depends on that cache until the
+    // caller's session drops it (Bench reclaims between queries)
     val raw = incidence
       .select(col(keyCol).as("k"), col(itemCol).as("item"))
       .distinct()
       .persist()
-    val sizes = raw.groupBy("k").agg(count(lit(1)).as("bsz")).persist()
-    val keepKeys = sizes.filter(col("bsz") <= maxBasketSize).select("k")
-    val nBaskets = keepKeys.count()
-    val nDropped = sizes.count() - nBaskets
-    if (nDropped > 0)
-      logger.warn(
-        s"associationRules: dropped $nDropped basket(s) with more than " +
-          s"$maxBasketSize distinct items (quadratic pair fan-out guard)")
-    val inc =
-      if (nDropped == 0) raw
+    val (inc, nBaskets) = Caching.scope { s =>
+      val sizes = s.persist(raw.groupBy("k").agg(count(lit(1)).as("bsz")))
+      val keepKeys = sizes.filter(col("bsz") <= maxBasketSize).select("k")
+      val nBaskets = keepKeys.count()
+      val nDropped = sizes.count() - nBaskets
+      if (nDropped > 0)
+        logger.warn(
+          s"associationRules: dropped $nDropped basket(s) with more than " +
+            s"$maxBasketSize distinct items (quadratic pair fan-out guard)")
+      if (nDropped == 0) (raw, nBaskets)
       else {
         val filtered = raw.join(keepKeys, Seq("k"), "left_semi").persist()
-        filtered.count() // materialize before dropping the upstream caches
-        raw.unpersist(blocking = false)
-        filtered
+        filtered.count() // materialize before the scope drops raw
+        s.own(raw)
+        (filtered, nBaskets)
       }
-    sizes.unpersist(blocking = false)
+    }
     val itemSupp = inc.groupBy("item").agg(count(lit(1)).as("n_item"))
     val pairs = inc.as("x")
       .join(inc.as("y"),

@@ -1,29 +1,37 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Repo-wide cache-lifetime convention, so that repeated operator calls
   * neither leak cached blocks nor free a cache a caller still reads.
-  * Operators that `persist()` internal scaffolding fall into exactly two
-  * tiers:
+  * Every operator-side `unpersist` and local checkpoint lives here
+  * (CacheScopeScanSpec). Operators that cache internal state fall into
+  * exactly two tiers:
   *
-  * '''Tier 1 — release-before-return (the default).''' If the operator's
-  * returned plan no longer needs the scaffolding cache — because the
-  * result is bounded (top-k, per-day, per-group grids) or its lineage
-  * was already cut by an eager `localCheckpoint` (the Pregel loops) —
-  * the operator MUST release every internal cache before returning.
-  * [[Caching.materializeAndRelease]] is the house helper: it lineage-cuts
-  * the result with an eager local checkpoint, then unpersists the
-  * scaffolding, so repeated calls leave `sc.getPersistentRDDs` exactly
-  * where they found it. Use it only when the result is bounded (collect-
-  * safe scale: top-k rows, day counts, group grids) or already
-  * materialized — never to checkpoint a corpus-sized output.
-  * A corpus-sized input that several actions read is cut with
-  * [[Caching.cutLineage]] instead, which adds no CacheManager entry:
+  * '''Tier 1 — release-before-return (the default).''' The operator
+  * releases every internal cache its returned plan no longer needs:
+  *
+  *  - A bounded result (top-k, per-day, per-group grids) ends with
+  *    [[Caching.materializeAndRelease]]: an eager local checkpoint of the
+  *    result, then the scaffolding unpersisted, so repeated calls leave
+  *    `sc.getPersistentRDDs` where they found it. Never use it to
+  *    checkpoint a corpus-sized output.
+  *  - An iterative operator (the Pregel loops, connected components, BPE
+  *    training), or any call holding caches across several actions, runs
+  *    in one [[Caching.scope]]. The scope persists the scaffolding
+  *    ([[Scope.persist]]), makes each round's eager cut ([[Scope.cut]]),
+  *    frees the cuts the live state no longer reads ([[Scope.keepOnly]])
+  *    and releases the scaffolding when the call returns. It frees only
+  *    what it made: a caller's own checkpoint or cache keeps its blocks.
+  *    The cuts the result reads belong to its RDD lineage, not to a
+  *    cache-manager entry, so the ContextCleaner frees them with it.
+  *
+  * A corpus-sized input that several actions read is cut once with
+  * [[Caching.cutLineage]], which adds no CacheManager entry:
   * [[graft.algorithms.Bqsr.apply]] cuts its reads once so that both BQSR
-  * passes and every action on its result share one materialization,
-  * whose blocks the ContextCleaner frees with the result.
+  * passes and every action on its result share one materialization.
   *
   * '''Tier 2 — plan-owned cache (the documented exception).''' When the
   * RETURNED corpus-sized plan must re-read one materialization of a
@@ -64,57 +72,57 @@ object Caching {
     out
   }
 
-  /** Release caches whose consumers are already fully materialized
-    * (e.g. after a Pregel loop whose state was localCheckpointed). */
-  def release(scaffolding: Dataset[_]*): Unit =
-    scaffolding.foreach(_.unpersist(blocking = false))
-
-  /** Eager lineage cut for per-iteration state (Pregel loops, pointer
-    * jumping, BPE rounds). Local by default — `localCheckpoint` blocks are
+  /** Eager lineage cut. Local by default — `localCheckpoint` blocks are
     * executor-local and non-replicated, which is exactly right on
     * `local[*]` — but on a real cluster a single lost executor kills the
     * job once lineage is truncated, because nothing can recompute the
-    * lost blocks. When
-    * the deployment sets a checkpoint directory
+    * lost blocks. When the deployment sets a checkpoint directory
     * (`spark.graft.checkpoint.reliable=true` plus
-    * `sc.setCheckpointDir(...)`), iteration state is cut with a RELIABLE
-    * checkpoint to that directory instead, so iterative operators survive
-    * executor loss. Local defaults (flag unset) are byte-identical to the
-    * previous behavior. A local cut is recorded so that
-    * [[freeSuperseded]] can later free it. */
+    * `sc.setCheckpointDir(...)`), the cut is a RELIABLE checkpoint to that
+    * directory instead, so the state survives executor loss. */
   def cutLineage(df: DataFrame): DataFrame =
     if (df.sparkSession.conf
       .get("spark.graft.checkpoint.reliable", "false").toBoolean)
       df.checkpoint()
-    else {
-      val cut = df.localCheckpoint()
-      cut.queryExecution.analyzed.foreach {
-        case lr: LogicalRDD => cutRdds.put(lr.rdd, java.lang.Boolean.TRUE)
-        case _ => ()
-      }
-      cut
+    else df.localCheckpoint()
+
+  /** The caches of one operator call: the scaffolding it persists and the
+    * lineage cuts it makes. Open one with [[Caching.scope]]; a handle
+    * whose caches outlive the call that made it closes its own. */
+  final class Scope private[operators] () {
+    private val scaffolding = scala.collection.mutable.ArrayBuffer[Dataset[_]]()
+    private var cuts = Vector.empty[RDD[_]]
+
+    /** Persist `ds` (MEMORY_AND_DISK) until the scope closes. */
+    def persist[T](ds: Dataset[T]): Dataset[T] = own(ds.persist())
+
+    /** Release the already persisted `ds` when the scope closes. */
+    def own[T](ds: Dataset[T]): Dataset[T] = { scaffolding += ds; ds }
+
+    /** [[Caching.cutLineage]] of `df`, which [[keepOnly]] may later free. */
+    def cut(df: DataFrame): DataFrame = { val c = cutLineage(df); cuts ++= rdds(c); c }
+
+    /** Free every cut this scope made that no `live` dataset reads. Call it
+      * only once every consumer of those cuts is EAGERLY materialized (a
+      * successor cut): lineage being truncated, freed blocks cannot be
+      * recomputed. A reliable cut keeps its checkpoint files. */
+    def keepOnly(live: Dataset[_]*): Unit = {
+      val (kept, dead) = cuts.partition(live.flatMap(rdds).toSet)
+      dead.foreach(_.unpersist(blocking = false))
+      cuts = kept
     }
 
-  /** The RDDs behind the local checkpoints [[cutLineage]] made and
-    * [[freeSuperseded]] has not freed yet. Weak keys: an unfreed cut is
-    * forgotten with its RDD. */
-  private val cutRdds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.rdd.RDD[_], java.lang.Boolean]())
+    /** Release the scaffolding; the cuts left are the ones the result reads. */
+    def close(): Unit = scaffolding.foreach(_.unpersist(blocking = false))
+  }
 
-  /** Free a SUPERSEDED iteration checkpoint's storage once its successor
-    * is materialized (ADVICE r16: per-round checkpoint blocks otherwise
-    * accumulate across rounds — up to 50 in clusterDuplicates — until the
-    * ContextCleaner happens to run). Only call this on a checkpoint whose
-    * every consumer has already been EAGERLY materialized: the blocks are
-    * deleted and, lineage being truncated, cannot be recomputed. Frees
-    * only the local checkpoints that [[cutLineage]] made: any other
-    * persisted relation in the plan (a caller's own checkpoint, say)
-    * keeps its blocks, and reliable (directory-backed) checkpoints keep
-    * their files, which are the fault-tolerance story. Idempotent. */
-  def freeSuperseded(df: Dataset[_]): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD if cutRdds.remove(lr.rdd) != null =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+  /** Run `body` in a fresh [[Scope]], closed when `body` returns or throws. */
+  def scope[A](body: Scope => A): A = {
+    val s = new Scope
+    try body(s) finally s.close()
+  }
+
+  /** The RDDs behind the lineage cuts and checkpoints `ds`'s plan reads. */
+  private def rdds(ds: Dataset[_]): Seq[RDD[_]] =
+    ds.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 }

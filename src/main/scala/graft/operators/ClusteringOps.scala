@@ -70,32 +70,32 @@ object ClusteringOps {
       scale: Long = DefaultScale): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = corpus
-      .select(col(id).cast("long").as("id"), quantize(col(vec), scale).as("qv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val smix = udf { x: Long => DedupOps.splitmix64(x) }
-    var cents: Array[Array[Long]] = q
-      .orderBy(smix(col("id")), col("id")).limit(k)
-      .select("qv").collect().map(_.getSeq[Long](0).toArray)
-    var it = 0
-    while (it < iters) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val cells = q
-        .select(assignUdf(bc)(col("qv")).as("cid"), col("qv"))
-        .select(col("cid"), posexplode(col("qv")).as(Seq("d", "v")))
-        .groupBy("cid", "d")
-        .agg(sum("v").as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.clone) // empty clusters keep previous centroid
-      cells.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3))
+    Caching.scope { s =>
+      val q = s.persist(corpus
+        .select(col(id).cast("long").as("id"), quantize(col(vec), scale).as("qv")))
+      val smix = udf { x: Long => DedupOps.splitmix64(x) }
+      var cents: Array[Array[Long]] = q
+        .orderBy(smix(col("id")), col("id")).limit(k)
+        .select("qv").collect().map(_.getSeq[Long](0).toArray)
+      var it = 0
+      while (it < iters) {
+        val bc = spark.sparkContext.broadcast(cents)
+        val cells = q
+          .select(assignUdf(bc)(col("qv")).as("cid"), col("qv"))
+          .select(col("cid"), posexplode(col("qv")).as(Seq("d", "v")))
+          .groupBy("cid", "d")
+          .agg(sum("v").as("s"), count(lit(1)).as("n"))
+          .collect()
+        val next = cents.map(_.clone) // empty clusters keep previous centroid
+        cells.foreach { r =>
+          next(r.getInt(0))(r.getInt(1)) = Math.floorDiv(r.getLong(2), r.getLong(3))
+        }
+        cents = next
+        bc.destroy()
+        it += 1
       }
-      cents = next
-      bc.destroy()
-      it += 1
+      cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("ci", "cqvec")
     }
-    q.unpersist()
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("ci", "cqvec")
   }
 
   /** Map-side assignment of a corpus against a fitted (ci, cqvec) table:
@@ -146,9 +146,8 @@ object ClusteringOps {
       scale: Long = PcaScale): (Array[Long], Array[Array[Long]], Long) = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val q = corpus.select(quantize(col(vec), scale).as("qv"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    Caching.scope { s =>
+      val q = s.persist(corpus.select(quantize(col(vec), scale).as("qv")))
       val (sums, n) = q.select(posexplode(col("qv")).as(Seq("d", "x")))
         .groupBy("d").agg(sum("x").as("s"), count(lit(1)).as("n"))
         .collect()
@@ -180,7 +179,7 @@ object ClusteringOps {
       val g = Array.ofDim[Long](dim, dim)
       cells.foreach(r => g(r.getInt(0))(r.getInt(1)) = r.getLong(2))
       (mean, g, n)
-    } finally q.unpersist()
+    }
   }
 
   /** Top principal axis of the integer Gram matrix by fixed-point power
@@ -290,34 +289,36 @@ object ClusteringOps {
     // persisted: every iteration re-aggregates this narrow (label +
     // centered features) projection — without the cache each of the
     // iters+1 passes re-reads and re-featurizes the corpus
-    val cf = feats.select((col(labelCol) +: centered): _*).persist()
-    var w = Array.fill(featureCols.length + 1)(0L)
-    def predCol: Column = {
-      val dot = featureCols.zipWithIndex
-        .map { case (c, i) => lit(w(i + 1)) * col(c) }
-        .foldLeft(lit(w(0)) * lit(1L))(_ + _)
-      when(dot > 0, 1L).otherwise(0L)
+    val (pocket, pocketOk) = Caching.scope { s =>
+      val cf = s.persist(feats.select((col(labelCol) +: centered): _*))
+      var w = Array.fill(featureCols.length + 1)(0L)
+      def predCol: Column = {
+        val dot = featureCols.zipWithIndex
+          .map { case (c, i) => lit(w(i + 1)) * col(c) }
+          .foldLeft(lit(w(0)) * lit(1L))(_ + _)
+        when(dot > 0, 1L).otherwise(0L)
+      }
+      var pocket = w
+      var pocketOk = -1L
+      for (_ <- 1 to iters) {
+        // one pass scores the CURRENT weights and computes their update
+        val err = col(labelCol) - predCol
+        val row = cf.agg(
+          sum(when(predCol === col(labelCol), 1L).otherwise(0L)).as("ok"),
+          (Seq(sum(err).as("d0")) ++
+            featureCols.zipWithIndex.map { case (c, i) =>
+              sum(err * col(c)).as(s"d${i + 1}")
+            }): _*).collect().head
+        if (row.getLong(0) > pocketOk) { pocketOk = row.getLong(0); pocket = w }
+        w = w.indices.map(i => w(i) + row.getLong(i + 1)).toArray
+      }
+      // the post-loop weights get scored too (iters updates = iters+1 candidates)
+      val lastOk = cf.agg(
+        sum(when(predCol === col(labelCol), 1L).otherwise(0L))).collect()
+        .head.getLong(0)
+      if (lastOk > pocketOk) { pocketOk = lastOk; pocket = w }
+      (pocket, pocketOk)
     }
-    var pocket = w
-    var pocketOk = -1L
-    for (_ <- 1 to iters) {
-      // one pass scores the CURRENT weights and computes their update
-      val err = col(labelCol) - predCol
-      val row = cf.agg(
-        sum(when(predCol === col(labelCol), 1L).otherwise(0L)).as("ok"),
-        (Seq(sum(err).as("d0")) ++
-          featureCols.zipWithIndex.map { case (c, i) =>
-            sum(err * col(c)).as(s"d${i + 1}")
-          }): _*).collect().head
-      if (row.getLong(0) > pocketOk) { pocketOk = row.getLong(0); pocket = w }
-      w = w.indices.map(i => w(i) + row.getLong(i + 1)).toArray
-    }
-    // the post-loop weights get scored too (iters updates = iters+1 candidates)
-    val lastOk = cf.agg(
-      sum(when(predCol === col(labelCol), 1L).otherwise(0L))).collect()
-      .head.getLong(0)
-    if (lastOk > pocketOk) { pocketOk = lastOk; pocket = w }
-    cf.unpersist(blocking = false)
     val names = "bias" +: featureCols
     val centers = 0L +: means
     val rows = pocket.indices.map(i => Row(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -809,69 +809,70 @@ object DedupOps {
     * skew lands on AQE. (Iterative CC by label propagation is the
     * standard public formulation, e.g. Kiveris et al. "Connected
     * Components in MapReduce"; GraphX/GraphFrames use the same shape.) */
-  def clusterDuplicates(pairs: DataFrame, maxIterations: Int = 50): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs
-      .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
-      .union(pairs.select(col("id_b").cast("long").as("src"),
-        col("id_a").cast("long").as("dst")))
-      .distinct()
-      .persist(lvl)
+  def clusterDuplicates(pairs: DataFrame, maxIterations: Int = 50): DataFrame =
+    Caching.scope { s =>
+      val edges = s.persist(pairs
+        .select(col("id_a").cast("long").as("src"), col("id_b").cast("long").as("dst"))
+        .union(pairs.select(col("id_b").cast("long").as("src"),
+          col("id_a").cast("long").as("dst")))
+        .distinct())
 
-    // localCheckpoint truncates the logical plan each round — without it
-    // the self-referential lineage doubles per iteration and the PLAN
-    // itself (not the data) blows up (the standard iterative-graph
-    // pitfall; GraphX/GraphFrames checkpoint the same way)
-    //
-    // Seed label(v) = min(v, min neighbor) — the first propagation round
-    // computed in the same aggregation that discovers the vertex set, so
-    // star-shaped components (the common near-dup shape) are already done
-    // before the loop runs once.
-    var labels = Caching.cutLineage(edges
-      .groupBy(col("src").as("id"))
-      .agg(least(min(col("dst")), col("src")).as("label")))
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIterations) {
-      // all per-round joins hint shuffle-hash: vertex-id keys are uniform
-      // longs, and skipping the SMJ sorts matters when the loop runs
-      // several rounds over a 100 TB-scale edge list
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "dst2").hint("shuffle_hash"),
-          col("dst") === col("dst2"))
-        .groupBy(col("src")).agg(min("label").as("nlabel"))
-      // stepped feeds BOTH sides of the pointer-jump self-join below,
-      // keyed differently (nl vs jid) — without a materialization the
-      // whole stepped subtree (edge join + neighbor-min aggregation +
-      // label join) executes TWICE per round (r16; the q184 double-scan
-      // class). Checkpoint it once per round.
-      val stepped = Caching.cutLineage(labels
-        .join(neighborMin.hint("shuffle_hash"),
-          labels("id") === neighborMin("src"), "left")
-        .select(col("id"), col("label"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("nl")))
-      // the previous round's label checkpoint is fully consumed once
-      // stepped materializes (eager) — free its blocks instead of letting
-      // up to maxIterations rounds of them accumulate (ADVICE r16)
-      Caching.freeSuperseded(labels)
-      // pointer jumping: label <- label(label). Labels are always member
-      // ids of the same component, so the jump stays within the component
-      // while collapsing chains logarithmically (rounds ~ log diameter
-      // instead of diameter)
-      val jumped = Caching.cutLineage(stepped
-        .join(stepped.select(col("id").as("jid"), col("nl").as("jl"))
-          .hint("shuffle_hash"),
-          col("nl") === col("jid"), "left")
-        .select(col("id"), col("label"),
-          coalesce(col("jl"), col("nl")).as("newLabel")))
-      Caching.freeSuperseded(stepped)
-      converged = jumped.filter(col("newLabel") < col("label")).isEmpty
-      labels = jumped.select(col("id"), col("newLabel").as("label"))
-      iter += 1
+      // each round's state is an eager lineage cut — without it the
+      // self-referential lineage doubles per iteration and the PLAN
+      // itself (not the data) blows up (the standard iterative-graph
+      // pitfall; GraphX/GraphFrames checkpoint the same way)
+      //
+      // Seed label(v) = min(v, min neighbor) — the first propagation round
+      // computed in the same aggregation that discovers the vertex set, so
+      // star-shaped components (the common near-dup shape) are already done
+      // before the loop runs once.
+      var labels = s.cut(edges
+        .groupBy(col("src").as("id"))
+        .agg(least(min(col("dst")), col("src")).as("label")))
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIterations) {
+        // all per-round joins hint shuffle-hash: vertex-id keys are uniform
+        // longs, and skipping the SMJ sorts matters when the loop runs
+        // several rounds over a 100 TB-scale edge list
+        val neighborMin = edges
+          .join(labels.withColumnRenamed("id", "dst2").hint("shuffle_hash"),
+            col("dst") === col("dst2"))
+          .groupBy(col("src")).agg(min("label").as("nlabel"))
+        // stepped feeds BOTH sides of the pointer-jump self-join below,
+        // keyed differently (nl vs jid) — without a materialization the
+        // whole stepped subtree (edge join + neighbor-min aggregation +
+        // label join) would execute TWICE per round. Cut it once per round.
+        val stepped = s.cut(labels
+          .join(neighborMin.hint("shuffle_hash"),
+            labels("id") === neighborMin("src"), "left")
+          .select(col("id"), col("label"),
+            least(col("label"), coalesce(col("nlabel"), col("label"))).as("nl")))
+        // the previous round's labels are fully consumed once stepped
+        // materializes: free them instead of letting up to maxIterations
+        // rounds of them accumulate
+        s.keepOnly(stepped)
+        // pointer jumping: label <- label(label). Labels are always member
+        // ids of the same component, so the jump stays within the component
+        // while collapsing chains logarithmically (rounds ~ log diameter
+        // instead of diameter). The stop test counts the lowered labels as
+        // an observed metric of this cut's own job, not a job of its own.
+        val lowered = new Observation()
+        val jumped = s.cut(stepped
+          .join(stepped.select(col("id").as("jid"), col("nl").as("jl"))
+            .hint("shuffle_hash"),
+            col("nl") === col("jid"), "left")
+          .select(col("id"), col("label"),
+            coalesce(col("jl"), col("nl")).as("newLabel"))
+          .observe(lowered,
+            count(when(col("newLabel") < col("label"), 1)).as("lowered")))
+        s.keepOnly(jumped)
+        converged = lowered.get("lowered") == 0L
+        labels = jumped.select(col("id"), col("newLabel").as("label"))
+        iter += 1
+      }
+      labels.select(col("id"), col("label").as("cluster_id"))
     }
-    edges.unpersist()
-    labels.select(col("id"), col("label").as("cluster_id"))
-  }
 
   /** Incremental connected-component maintenance: merge an EXISTING
     * labeling with newly-discovered duplicate pairs (e.g. an incoming

@@ -33,8 +33,8 @@ object GraphOps {
     * both directions of every distinct item pair sharing an order. The
     * classic market-basket graph; self-pairs excluded.
     *
-    * Shape (r16, measured 2.8x faster than the previous self-join +
-    * distinct at sf0.1): ONE exchange groups the incidence narrow rows
+    * Shape (measured 2.8x faster than a self-join + distinct at
+    * sf0.1): ONE exchange groups the incidence narrow rows
     * per key (`collect_list` — bounded by basket size, never corpus
     * size), pairs explode map-side, and the dedup aggregation runs on a
     * src-keyed exchange — `HashPartitioning(src)` satisfies the
@@ -45,7 +45,7 @@ object GraphOps {
     * partitioning. Per-task volume is bounded by the max node degree —
     * the same bound every consumer's own groupBy(src) already carries.
     *
-    * SKEW BOUNDS (documented assumption, ADVICE r16): (1) `collect_list`
+    * SKEW BOUNDS (documented assumption): (1) `collect_list`
     * holds ONE basket per aggregation buffer and the explode fans out
     * K² pairs from that one row — fine for market-basket keys (bounded
     * basket size) but a heavy-hitter key with millions of items would
@@ -84,39 +84,34 @@ object GraphOps {
   def pageRank(
       edges: DataFrame, iters: Int = 5, scale: Long = 1000000000L): DataFrame = {
     val n = incidencePartitions(edges)
-    // persist, not checkpoint (r17 A/B): the per-iteration e ⋈ contrib
-    // join broadcasts the node-sized contrib side at runtime, so the
-    // cached edge table is never re-shuffled — an eager checkpoint only
-    // added its own materialization jobs (q93 3.3 → 5.3 s, reverted).
-    val e = edges.select(col("src"), col("dst")).repartition(n, col("src")).persist()
-    // (node, deg) — the node table WITH the outdegree fused in (r16): the
-    // rank state carries deg through every iteration, so the old
-    // per-iteration ranks ⋈ outdeg join (one node-table join per round)
-    // disappears; contrib is a pure projection of the rank state.
-    val ndeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg")).persist()
-    val teleport = (3L * scale) / 20L
-    var ranks = Caching.cutLineage(ndeg.withColumn("rank", lit(scale)))
-    for (_ <- 0 until iters) {
-      val contrib = ranks
-        .select(col("node").as("src"), expr("rank div deg").as("c"))
-      val msgs = e.join(contrib, "src")
-        .groupBy("dst").agg(sum("c").as("s"))
-      val next = Caching.cutLineage(ndeg
-        .join(msgs, ndeg("node") === msgs("dst"), "left")
-        .select(col("node"), col("deg"),
-          (lit(teleport) + expr("17 * coalesce(s, 0L) div 20")).as("rank")))
-      // previous round's checkpoint blocks are dead once `next` is
-      // materialized (eager) — free them now instead of letting them
-      // accumulate across rounds (ADVICE r16)
-      Caching.freeSuperseded(ranks)
-      ranks = next
+    Caching.scope { s =>
+      // persisted, not checkpointed: the per-iteration e ⋈ contrib join
+      // broadcasts the node-sized contrib side at runtime, so the cached
+      // edge table is never re-shuffled, and an eager checkpoint only
+      // adds its own materialization jobs (q93 measured 3.3 → 5.3 s)
+      val e = s.persist(edges.select(col("src"), col("dst"))
+        .repartition(n, col("src")))
+      // (node, deg) — the node table WITH the outdegree fused in: the rank
+      // state carries deg through every iteration, so no round joins the
+      // ranks to an outdegree table; contrib is a pure projection of the
+      // rank state.
+      val ndeg = s.persist(e.groupBy("src").agg(count(lit(1)).as("deg"))
+        .select(col("src").as("node"), col("deg")))
+      val teleport = (3L * scale) / 20L
+      var ranks = s.cut(ndeg.withColumn("rank", lit(scale)))
+      for (_ <- 0 until iters) {
+        val contrib = ranks
+          .select(col("node").as("src"), expr("rank div deg").as("c"))
+        val msgs = e.join(contrib, "src")
+          .groupBy("dst").agg(sum("c").as("s"))
+        ranks = s.cut(ndeg
+          .join(msgs, ndeg("node") === msgs("dst"), "left")
+          .select(col("node"), col("deg"),
+            (lit(teleport) + expr("17 * coalesce(s, 0L) div 20")).as("rank")))
+        s.keepOnly(ranks)
+      }
+      ranks.select(col("node"), col("rank").as("rank_q"))
     }
-    // final ranks is checkpoint-backed (lineage cut): the scaffolding
-    // caches are no longer referenced — release before returning (tier 1,
-    // see operators/Caching.scala)
-    Caching.release(e, ndeg)
-    ranks.select(col("node"), col("rank").as("rank_q"))
   }
 
   /** Top-`k` nodes of [[pageRank]] with the deterministic
@@ -155,46 +150,44 @@ object GraphOps {
       edges: DataFrame, seeds: DataFrame, iters: Int = 5,
       scale: Long = 1000000000L): DataFrame = {
     val n = incidencePartitions(edges)
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(n, col("src")).persist()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val seedSet = seeds.select(col("node")).distinct()
-      .withColumn("__seed", lit(1))
-    // (node, __seed, deg) — deg fused into the node table (r16, the
-    // [[pageRank]] recipe): the rank state carries deg, so the old
-    // per-iteration ranks ⋈ outdeg join disappears. deg is NULL for
-    // dst-only (dangling) nodes; their contrib rows never match an edge
-    // src in the message join — exactly the rows the old inner join
-    // against outdeg dropped.
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .join(broadcast(seedSet), Seq("node"), "left")
-      .join(outdeg.select(col("src").as("node"), col("deg")),
-        Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__seed"), lit(0)).as("__seed"), col("deg"))
-      .persist()
-    val teleport = (3L * scale) / 20L
-    var ranks = Caching.cutLineage(nodes
-      .select(col("node"), col("__seed"), col("deg"),
-        when(col("__seed") === 1, lit(scale)).otherwise(lit(0L))
-          .as("rank")))
-    for (_ <- 0 until iters) {
-      val contrib = ranks
-        .filter(col("deg").isNotNull)
-        .select(col("node").as("src"), expr("rank div deg").as("c"))
-      val msgs = e.join(contrib, "src")
-        .groupBy("dst").agg(sum("c").as("s"))
-      val next = Caching.cutLineage(nodes
-        .join(msgs, nodes("node") === msgs("dst"), "left")
+    Caching.scope { s =>
+      val e = s.persist(edges.select(col("src"), col("dst"))
+        .repartition(n, col("src")))
+      val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      val seedSet = seeds.select(col("node")).distinct()
+        .withColumn("__seed", lit(1))
+      // (node, __seed, deg) — deg fused into the node table (the
+      // [[pageRank]] recipe): the rank state carries deg, so no round
+      // joins the ranks to an outdegree table. deg is NULL for dst-only
+      // (dangling) nodes; their contrib rows never match an edge src in
+      // the message join, as an inner join against outdeg would drop them.
+      val nodes = s.persist(e.select(col("src").as("node"))
+        .union(e.select(col("dst").as("node"))).distinct()
+        .join(broadcast(seedSet), Seq("node"), "left")
+        .join(outdeg.select(col("src").as("node"), col("deg")),
+          Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("__seed"), lit(0)).as("__seed"), col("deg")))
+      val teleport = (3L * scale) / 20L
+      var ranks = s.cut(nodes
         .select(col("node"), col("__seed"), col("deg"),
-          (when(col("__seed") === 1, lit(teleport)).otherwise(lit(0L))
-            + expr("17 * coalesce(s, 0L) div 20")).as("rank")))
-      Caching.freeSuperseded(ranks)
-      ranks = next
+          when(col("__seed") === 1, lit(scale)).otherwise(lit(0L))
+            .as("rank")))
+      for (_ <- 0 until iters) {
+        val contrib = ranks
+          .filter(col("deg").isNotNull)
+          .select(col("node").as("src"), expr("rank div deg").as("c"))
+        val msgs = e.join(contrib, "src")
+          .groupBy("dst").agg(sum("c").as("s"))
+        ranks = s.cut(nodes
+          .join(msgs, nodes("node") === msgs("dst"), "left")
+          .select(col("node"), col("__seed"), col("deg"),
+            (when(col("__seed") === 1, lit(teleport)).otherwise(lit(0L))
+              + expr("17 * coalesce(s, 0L) div 20")).as("rank")))
+        s.keepOnly(ranks)
+      }
+      ranks.select(col("node"), col("rank").as("rank_q"))
     }
-    Caching.release(e, nodes)
-    ranks.select(col("node"), col("rank").as("rank_q"))
   }
 
   /** Top-`k` of [[personalizedPageRank]] with the deterministic
@@ -229,35 +222,33 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val n = incidencePartitions(edges)
     val ed = edges.select(col("src"), col("dst"))
-    // dedup on the dst-keyed exchange (HashPartitioning(dst) satisfies
-    // the (src, dst) clustered distribution): one shuffle where
-    // distinct + repartition paid two (r16)
-    val e = ed.union(ed.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(n, col("dst")).dropDuplicates("src", "dst")
-      .persist()
-    val nodes = e.select(col("src").as("node")).distinct()
-    var labels = Caching.cutLineage(nodes.withColumn("lbl", col("node")))
-    for (_ <- 0 until rounds) {
-      // one src-keyed exchange carries BOTH aggregations (r17):
-      // HashPartitioning(src) satisfies the (src, lbl) clustered
-      // distribution of the count, and the argmax then reuses the same
-      // partitioning — previously the count shuffled on (src, lbl) and
-      // the argmax re-shuffled its output on src (two exchanges/round)
-      val counts = e
-        .join(labels.withColumnRenamed("node", "dst"), "dst")
-        .repartition(n, col("src"))
-        .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
-      val next = Caching.cutLineage(counts
-        .groupBy(col("src").as("node"))
-        .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("best"))
-        .select(col("node"), col("best.l").as("lbl")))
-      Caching.freeSuperseded(labels)
-      labels = next
+    Caching.scope { s =>
+      // dedup on the dst-keyed exchange (HashPartitioning(dst) satisfies
+      // the (src, dst) clustered distribution): one shuffle where
+      // distinct + repartition would pay two
+      val e = s.persist(
+        ed.union(ed.select(col("dst").as("src"), col("src").as("dst")))
+          .repartition(n, col("dst")).dropDuplicates("src", "dst"))
+      val nodes = e.select(col("src").as("node")).distinct()
+      var labels = s.cut(nodes.withColumn("lbl", col("node")))
+      for (_ <- 0 until rounds) {
+        // one src-keyed exchange carries BOTH aggregations:
+        // HashPartitioning(src) satisfies the (src, lbl) clustered
+        // distribution of the count, and the argmax then reuses the same
+        // partitioning, where a (src, lbl)-keyed count would need the
+        // argmax to re-shuffle on src (two exchanges per round)
+        val counts = e
+          .join(labels.withColumnRenamed("node", "dst"), "dst")
+          .repartition(n, col("src"))
+          .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("c"))
+        labels = s.cut(counts
+          .groupBy(col("src").as("node"))
+          .agg(min(struct((-col("c")).as("nc"), col("lbl").as("l"))).as("best"))
+          .select(col("node"), col("best.l").as("lbl")))
+        s.keepOnly(labels)
+      }
+      labels
     }
-    // labels (even at rounds = 0) is checkpoint-backed: release the edge
-    // cache before returning (tier 1, see operators/Caching.scala)
-    Caching.release(e)
-    labels
   }
 
   /** Community-size report off [[labelPropagation]]: the `k` largest
@@ -317,34 +308,34 @@ object GraphOps {
 
   def kCoreByMedianDegree(edges: DataFrame, rounds: Int = 4): DataFrame = {
     val n = incidencePartitions(edges)
-    // src-keyed dedup (one exchange, r16): the degree histogram and every
-    // peel round immediately re-aggregate by src, so the checkpointed
-    // edge table starts on the partitioning they need
-    var e = Caching.cutLineage(edges.select(col("src"), col("dst"))
-      .repartition(n, col("src")).dropDuplicates("src", "dst"))
-    val k = medianFromHistogram(
-      degreeHistogram(e).collect().map(r => (r.getLong(0), r.getLong(1))))
-    for (_ <- 0 until rounds) {
-      // keep is read by BOTH endpoint semi-joins; checkpoint the bounded
-      // node list so the degree aggregation over e runs once per round,
-      // not once per join branch (r16 — the q184 double-scan class)
-      val keep = Caching.cutLineage(e.groupBy("src")
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("src").as("n")))
-      val next = Caching.cutLineage(e
-        .join(keep.select(col("n").as("src")), "src")
-        .join(keep.select(col("n").as("dst")), "dst")
-        .select("src", "dst"))
-      // this round's peel is materialized: the previous edge table and the
-      // keep list are dead — free their blocks now (ADVICE r16)
-      Caching.freeSuperseded(keep)
-      Caching.freeSuperseded(e)
-      e = next
+    Caching.scope { s =>
+      // src-keyed dedup (one exchange): the degree histogram and every
+      // peel round immediately re-aggregate by src, so the checkpointed
+      // edge table starts on the partitioning they need
+      var e = s.cut(edges.select(col("src"), col("dst"))
+        .repartition(n, col("src")).dropDuplicates("src", "dst"))
+      val k = medianFromHistogram(
+        degreeHistogram(e).collect().map(r => (r.getLong(0), r.getLong(1))))
+      for (_ <- 0 until rounds) {
+        // keep is read by BOTH endpoint semi-joins; checkpoint the bounded
+        // node list so the degree aggregation over e runs once per round,
+        // not once per join branch
+        val keep = s.cut(e.groupBy("src")
+          .agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k)
+          .select(col("src").as("n")))
+        e = s.cut(e
+          .join(keep.select(col("n").as("src")), "src")
+          .join(keep.select(col("n").as("dst")), "dst")
+          .select("src", "dst"))
+        // the peeled edge table is materialized: the previous one and the
+        // keep list are dead
+        s.keepOnly(e)
+      }
+      e.groupBy("src").agg(count(lit(1)).as("deg_residual"))
+        .select(col("src").as("node"), col("deg_residual"),
+          lit(k).as("k_threshold"))
     }
-    e.groupBy("src").agg(count(lit(1)).as("deg_residual"))
-      .select(col("src").as("node"), col("deg_residual"),
-        lit(k).as("k_threshold"))
   }
 
   /** Per-node triangle counts + local clustering coefficient over an
@@ -370,7 +361,7 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") < col("b"))
-      // dedup on an a-keyed exchange (r16): HashPartitioning(a) satisfies
+      // dedup on an a-keyed exchange: HashPartitioning(a) satisfies
       // the (a, b) clustered distribution, so canonicalization costs one
       // shuffle (not an (a, b) exchange) and the endpoint-degree join on
       // `a` starts co-partitioned
@@ -386,11 +377,11 @@ object GraphOps {
       .join(deg.select(col("n").as("b"), col("deg").as("db")), "b")
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
-    // cached pre-partitioned AND pre-sorted on the wedge key (r16):
-    // the wedge self-join reads this table on BOTH sides keyed by s.
-    // r17 A/B NOTE — an eager localCheckpoint here (which records the
-    // executed partitioning statically and removes the wedge join's two
-    // declared exchanges+sorts) was measured and REVERTED: checkpointing
+    // cached pre-partitioned AND pre-sorted on the wedge key: the wedge
+    // self-join reads this table on BOTH sides keyed by s. Persisted, not
+    // cut: an eager local checkpoint here (which records the executed
+    // partitioning statically and removes the wedge join's two declared
+    // exchanges+sorts) measured slower in the catalog: checkpointing
     // o eagerly also MATERIALIZES the und cache, whose statistics then
     // report actual size (>10 MB) instead of the pre-materialization
     // estimate — the closing wedges ⋈ und join loses its static
@@ -455,49 +446,46 @@ object GraphOps {
     require(iters > 0, s"iters must be positive: $iters")
     val dec = "decimal(38,0)"
     val n = incidencePartitions(edges)
-    // dedup directly on the src-keyed exchange (r16: HashPartitioning(src)
-    // satisfies the (src, dst) clustered distribution) — one shuffle
-    // where distinct + repartition paid two. A/B-measured alternatives
-    // kept OUT deliberately: (a) a second dst-partitioned edge copy
-    // (saves the per-iteration dst re-shuffle but costs an extra cache
-    // materialization — net slower at 3 iterations, 3.9 s vs 3.5 s
-    // sf0.1); (b) checkpointing the raw vector inside renorm (the
-    // normalizer subquery does NOT re-execute the raw subtree —
-    // ReuseExchange dedupes it — so the checkpoint was pure added cost,
-    // +1.2 s over 6 half-steps).
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(n, col("src")).dropDuplicates("src", "dst").persist()
     val mass = lit(1000000000000L).cast(dec)
-    def renorm(raw: DataFrame): DataFrame = {
-      val tot = raw.agg(sum("raw").as("__tot"))
-      // exact floor division of non-negative decimals: IntegralDivide
-      // (`div`) yields the same integer as the old (p - pmod(p,tot))/tot
-      // chain with one decimal op instead of three
-      Caching.cutLineage(raw.crossJoin(broadcast(tot))
-        .select(col("node"), (col("raw") * mass).cast(dec).as("__p"),
-          col("__tot"))
-        .select(col("node"), expr("__p div __tot").cast("long").as("s")))
+    Caching.scope { s =>
+      // dedup directly on the src-keyed exchange (HashPartitioning(src)
+      // satisfies the (src, dst) clustered distribution) — one shuffle
+      // where distinct + repartition would pay two. Measured alternatives
+      // kept OUT deliberately: (a) a second dst-partitioned edge copy
+      // (saves the per-iteration dst re-shuffle but costs an extra cache
+      // materialization — net slower at 3 iterations, 3.9 s vs 3.5 s
+      // sf0.1); (b) checkpointing the raw vector inside renorm (the
+      // normalizer subquery does NOT re-execute the raw subtree —
+      // ReuseExchange dedupes it — so the checkpoint was pure added cost,
+      // +1.2 s over 6 half-steps).
+      val e = s.persist(edges.select(col("src"), col("dst"))
+        .repartition(n, col("src")).dropDuplicates("src", "dst"))
+      def renorm(raw: DataFrame): DataFrame = {
+        val tot = raw.agg(sum("raw").as("__tot"))
+        // exact floor division of non-negative decimals: IntegralDivide
+        // (`div`) yields the same integer as (p - pmod(p,tot))/tot with
+        // one decimal op instead of three
+        s.cut(raw.crossJoin(broadcast(tot))
+          .select(col("node"), (col("raw") * mass).cast(dec).as("__p"),
+            col("__tot"))
+          .select(col("node"), expr("__p div __tot").cast("long").as("s")))
+      }
+      var h = s.cut(e.select(col("src").as("node")).distinct()
+        .withColumn("s", lit(1000000L)))
+      var a: DataFrame = h // replaced on the first iteration
+      for (_ <- 0 until iters) {
+        a = renorm(e.join(h.withColumnRenamed("node", "src"), Seq("src"))
+          .groupBy(col("dst").as("node")).agg(sum("s").cast(dec).as("raw")))
+        h = renorm(e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
+          .groupBy(col("src").as("node")).agg(sum("s").cast(dec).as("raw")))
+        // both half-steps are materialized (renorm cuts eagerly): the
+        // previous iteration's vectors are dead
+        s.keepOnly(a, h)
+      }
+      a.select(col("node"), lit("auth").as("side"), col("s").as("score_q"))
+        .unionAll(
+          h.select(col("node"), lit("hub").as("side"), col("s").as("score_q")))
     }
-    var h = Caching.cutLineage(e.select(col("src").as("node")).distinct()
-      .withColumn("s", lit(1000000L)))
-    var a: DataFrame = h // replaced on the first iteration
-    for (_ <- 0 until iters) {
-      val oldA = a; val oldH = h
-      a = renorm(e.join(h.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node")).agg(sum("s").cast(dec).as("raw")))
-      h = renorm(e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
-        .groupBy(col("src").as("node")).agg(sum("s").cast(dec).as("raw")))
-      // both half-steps of this iteration are materialized (renorm cuts
-      // eagerly): the previous iteration's vectors are dead — free their
-      // blocks (ADVICE r16). freeSuperseded is idempotent, so the
-      // first-iteration aliasing (a eq h) is harmless.
-      Caching.freeSuperseded(oldA)
-      Caching.freeSuperseded(oldH)
-    }
-    Caching.release(e)
-    a.select(col("node"), lit("auth").as("side"), col("s").as("score_q"))
-      .unionAll(
-        h.select(col("node"), lit("hub").as("side"), col("s").as("score_q")))
   }
 
   /** Top-`k` hubs and top-`k` authorities of [[hits]] with the
@@ -548,7 +536,7 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") < col("b"))
-      // dedup on an a-keyed exchange (r16): HashPartitioning(a) satisfies
+      // dedup on an a-keyed exchange: HashPartitioning(a) satisfies
       // the (a, b) clustered distribution, so canonicalization costs one
       // shuffle (not an (a, b) exchange) and the endpoint-degree join on
       // `a` starts co-partitioned
@@ -609,7 +597,7 @@ object GraphOps {
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") < col("b"))
-      // dedup on an a-keyed exchange (r16): HashPartitioning(a) satisfies
+      // dedup on an a-keyed exchange: HashPartitioning(a) satisfies
       // the (a, b) clustered distribution, so canonicalization costs one
       // shuffle (not an (a, b) exchange) and the endpoint-degree join on
       // `a` starts co-partitioned

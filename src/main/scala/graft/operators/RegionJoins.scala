@@ -303,14 +303,15 @@ object RegionJoins {
     * side is persisted, so every subsequent [[joinAgainst]] rebuilds its
     * broadcast hash table from the cached blocks instead of recomputing
     * the side's lineage; `destroy()` releases the blocks. */
-  final class RegionBroadcast private[operators] (val side: DataFrame) {
-    def destroy(): Unit = { side.unpersist(); () }
+  final class RegionBroadcast private[operators] (
+      caches: Caching.Scope, raw: DataFrame) {
+    val side: DataFrame = caches.persist(raw)
+    def destroy(): Unit = caches.close()
   }
 
   /** Prepare (persist + mark) a DataFrame as a reusable broadcast side. */
   def prepareBroadcast(side: DataFrame): RegionBroadcast =
-    new RegionBroadcast(
-      side.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    new RegionBroadcast(new Caching.Scope, side)
 
   /** Overlap join against a prepared broadcast side
     * (broadcastRegionJoinAgainst / rightOuterBroadcastRegionJoinAgainst,

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * word histogram, never on document order). Every merge round then runs
   * on the |V|-row vocabulary: one pair-count aggregation (reduce key space
   * = symbol-pair vocabulary), one 1-row argmax collect, one per-row
-  * `replace` pass. Lineage is cut per round with localCheckpoint (the
-  * PageRank/k-means recipe) so the plan stays constant-depth over any
+  * `replace` pass. Lineage is cut per round (the PageRank recipe, one
+  * [[Caching.scope]]) so the plan stays constant-depth over any
   * merge count. At 100 TB the histogram is ~10M rows — trivially
   * vocabulary-bounded state.
   *
@@ -74,8 +74,8 @@ object TokenizerOps {
     * symbolized vocabulary (sym, n). Stops early only if no pairs remain
     * (every word fully merged) — callers pick numMerges well below that. */
   private def train(docs: DataFrame, textCol: String,
-      numMerges: Int): (Seq[BpeMerge], DataFrame) = {
-    var vocab = Caching.cutLineage(wordHistogram(docs, textCol)
+      numMerges: Int): (Seq[BpeMerge], DataFrame) = Caching.scope { s =>
+    var vocab = s.cut(wordHistogram(docs, textCol)
       .select(col("word"), symbolize(col("word")).as("sym"), col("n")))
     val merges = scala.collection.mutable.ArrayBuffer[BpeMerge]()
     var r = 1
@@ -98,13 +98,10 @@ object TokenizerOps {
         val b = best(0).getString(1)
         merges += BpeMerge(r, a, b, a + b, best(0).getLong(2))
         // symbols are [a-z0-9]+ concatenations — safe to interpolate
-        val next = Caching.cutLineage(vocab
+        vocab = s.cut(vocab
           .select(col("word"), expr(mergeSql("sym", a, b)).as("sym"),
             col("n")))
-        // previous round's vocab checkpoint is dead once `next` is
-        // materialized (eager) — free its blocks (ADVICE r16)
-        Caching.freeSuperseded(vocab)
-        vocab = next
+        s.keepOnly(vocab)
         r += 1
       }
     }

@@ -367,21 +367,25 @@ object BamIO {
       refIndex: Map[String, Int], buf: ByteArrayOutputStream): Unit = {
     buf.reset()
     def w16(v: Int): Unit = { buf.write(v); buf.write(v >> 8) }
-    val name = r.readName.getOrElse("*")
+    val name = r.readName.getOrElse("*").getBytes(UTF_8)
+    // l_read_name is one byte and counts the NUL
+    if (name.length > 254) throw new IllegalArgumentException(
+      s"read name ${r.readName.get} is ${name.length} UTF-8 bytes; BAM stores at most 254")
     val cigar = Cigar.parse(r.cigar.getOrElse(""))
     val seq = r.sequence.getOrElse("")
     le32(buf, r.referenceName.flatMap(refIndex.get).getOrElse(-1))
     le32(buf, r.start.map(_.toInt).getOrElse(-1))
     buf.write(name.length + 1)
     buf.write(r.mappingQuality.getOrElse(255))
-    w16(0) // bin (unused by our reader)
+    // SAM spec §4.2: reg2bin(pos, end), a read without a position in bin 4680
+    w16(r.start.fold(4680)(s => Bai.reg2bin(s, math.max(r.end.getOrElse(s + 1), s + 1))))
     w16(cigar.length)
     w16(SamIO.flagOf(r))
     le32(buf, seq.length)
     le32(buf, r.mateReferenceName.flatMap(refIndex.get).getOrElse(-1))
     le32(buf, r.mateAlignmentStart.map(_.toInt).getOrElse(-1))
     le32(buf, r.insertSize.map(_.toInt).getOrElse(0))
-    buf.write(name.getBytes(UTF_8)); buf.write(0)
+    buf.write(name); buf.write(0)
     cigar.foreach(e => le32(buf, (e.length << 4) | CigarOps.indexOf(e.op)))
     var i = 0
     while (i < seq.length) {

@@ -1570,6 +1570,15 @@ object CramIO {
     out.result()
   }
 
+  /** A read's quality from its per-feature (Q/q/B) qualities, which
+    * writers use when QS is not stored per record: the `rl` bytes start
+    * as 0xff, and a position no feature covers leaves its 0xff in place.
+    * As for BAM's 0xff ([[SamIO.readQuality]]), such a quality reads back
+    * missing. */
+  private[sources] def featureQuality(q: Array[Byte]): Option[String] =
+    if (q.exists(b => (b & 0xff) == 0xff)) None
+    else SamIO.readQuality(q, 0, q.length)
+
   private def decodeSlice(
       ch: CompressionHeader, slice: SliceHeader,
       blocks: Map[Int, Array[Byte]], core: Array[Byte],
@@ -1774,8 +1783,7 @@ object CramIO {
 
       val quals =
         if (qualsStored) SamIO.readQuality(r.bytes("QS", rl), 0, rl)
-        else if (featQuals != null)
-          Some(featQuals.map(q => ((q & 0xff) + 33).toChar).mkString)
+        else if (featQuals != null) featureQuality(featQuals)
         else None
 
       val attributes0 = attrs.result()

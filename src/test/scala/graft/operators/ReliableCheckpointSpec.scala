@@ -75,21 +75,36 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(live <= 2, s"expected <=2 live blocks after pageRank, got $live")
   }
 
-  test("freeSuperseded frees only the checkpoints cutLineage made") {
+  test("an iterative operator frees its own cuts, never a caller's") {
     def live = spark.sparkContext.getPersistentRDDs
-    def rddOf(d: org.apache.spark.sql.Dataset[_]) =
-      d.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.get
-    // a caller's own checkpoint, embedded in the plan beside a cut
-    val theirs = graphEdges.localCheckpoint()
-    val ours = Caching.cutLineage(graphEdges.groupBy("src").count())
-    assert(live.contains(rddOf(theirs).id) && live.contains(rddOf(ours).id))
-    Caching.freeSuperseded(ours.join(theirs, "src"))
-    assert(!live.contains(rddOf(ours).id))
-    assert(live.contains(rddOf(theirs).id))
-    assert(theirs.count() == 8)
-    rddOf(theirs).unpersist(blocking = true)
+    def rddIds(d: org.apache.spark.sql.Dataset[_]): Set[Int] =
+      d.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+    import spark.implicits._
+    val ops: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (GraphOps.pageRank(_, iters = 4)),
+      "personalizedPageRank" -> (GraphOps.personalizedPageRank(_,
+        Seq(1L).toDF("node"), iters = 4)),
+      "labelPropagation" -> (GraphOps.labelPropagation(_, rounds = 3)),
+      "kCoreByMedianDegree" -> (GraphOps.kCoreByMedianDegree(_, rounds = 3)),
+      "hits" -> (GraphOps.hits(_, iters = 3)),
+      "clusterDuplicates" -> (e => DedupOps.clusterDuplicates(
+        e.select(col("src").as("id_a"), col("dst").as("id_b")))))
+    ops.foreach { case (name, op) =>
+      // the caller's own checkpoint is the operator's input
+      val theirs = graphEdges.localCheckpoint()
+      val before = live.keySet.toSet
+      val out = op(theirs)
+      out.collect()
+      val added = live.keySet.toSet -- before
+      // what the call leaves cached is exactly the cuts its result reads:
+      // every superseded round's cut and all scaffolding are gone
+      assert(added.subsetOf(rddIds(out)), s"$name left ${added -- rddIds(out)}")
+      assert(rddIds(theirs).subsetOf(live.keySet.toSet), s"$name freed the caller's checkpoint")
+      assert(theirs.count() == 8)
+      rddIds(theirs).foreach(id => live(id).unpersist(blocking = true))
+    }
   }
 
   test("kCoreByMedianDegree: reliable path matches local path") {
@@ -100,5 +115,21 @@ class ReliableCheckpointSpec extends SparkSpec {
         .orderBy("node").collect().toSeq.map(_.toString)
     }
     assert(reliable === local)
+  }
+
+  test("labelPropagation, personalizedPageRank, hits and bpeMerges: reliable path matches local path") {
+    import spark.implicits._
+    val docs = Seq("banana bandana", "ban an anna", "nanana banana").toDF("text")
+    val seeds = Seq(1L, 4L).toDF("node")
+    def runAll: Seq[Seq[String]] = Seq(
+      GraphOps.labelPropagation(graphEdges, rounds = 3).orderBy("node"),
+      GraphOps.personalizedPageRank(graphEdges, seeds, iters = 3).orderBy("node"),
+      GraphOps.hits(graphEdges, iters = 3).orderBy("side", "node"),
+      TokenizerOps.bpeMerges(docs, "text", 4).orderBy("merge_rank"))
+      .map(_.collect().toSeq.map(_.toString))
+    val local = runAll
+    val reliable = withReliable(runAll)
+    assert(reliable === local)
+    assert(local.forall(_.nonEmpty))
   }
 }

@@ -252,6 +252,24 @@ class TextDedupSpec extends SparkSpec {
     assert(cc.toSeq == Seq(0L), "a 31-node chain is one component rooted at 0")
   }
 
+  test("clusterDuplicates: the stop test adds no job to a round") {
+    import spark.implicits._
+    // two components: a 5-chain and a triangle; 3 rounds to converge
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L),
+      (10L, 11L), (11L, 12L), (10L, 12L)).toDF("id_a", "id_b")
+    var cc: Seq[(Long, Long)] = Nil
+    val jobs = jobsDuring {
+      cc = DedupOps.clusterDuplicates(pairs).orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    assert(cc.map(_._2) == Seq.fill(5)(1L) ++ Seq.fill(3)(10L))
+    // 2 rounds (the second lowers no label): a stop test run as a job of
+    // its own, after each round's cut, made this 25
+    assert(jobs == 23, s"clusterDuplicates ran $jobs jobs")
+    // no pair at all: the seed labels are empty and the first round stops
+    assert(DedupOps.clusterDuplicates(pairs.limit(0)).count() == 0)
+  }
+
   test("jaccardSimilarityJoin: prefix filter finds exactly the brute-force pairs") {
     import spark.implicits._
     // random docs from a small vocabulary so near-duplicates exist

@@ -404,6 +404,35 @@ class BamIOSpec extends SparkSpec {
       (1 to 5000).sum)
   }
 
+  test("BAM records carry the SAM spec bin of their alignment span") {
+    def read(name: String, start: Option[Long], end: Option[Long]) =
+      Alignment(readName = Some(name), referenceName = start.map(_ => "chr1"),
+        start = start, end = end, cigar = end.map(e => s"${e - start.get}M"),
+        sequence = Some("ACGTACGTAC"), readMapped = Some(end.isDefined))
+    // name -> expected bin, worked out by hand from §4.2's reg2bin
+    val cases = Seq(
+      read("in16k", Some(100L), Some(110L)) -> 4681, // level 5, first 16 kb
+      read("second16k", Some(20000L), Some(20010L)) -> 4682,
+      read("spans16k", Some(16380L), Some(16390L)) -> 585, // level 4
+      read("unmappedPlaced", Some(200L), None) -> 4681, // [pos, pos + 1)
+      read("unplaced", None, None) -> 4680)
+    val path = tmpDir() + "/bins.bam"
+    BamIO.write(GenomicDataset(spark.createDataset(cases.map(_._1)), meta), path)
+    val in = new java.io.DataInputStream(
+      Bgzf.inputStream(java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))))
+    def le32(): Int = Integer.reverseBytes(in.readInt())
+    in.skipBytes(4); in.skipBytes(le32()) // magic, header text
+    (1 to le32()).foreach { _ => in.skipBytes(le32()); in.skipBytes(4) }
+    val bins = cases.indices.map { _ =>
+      val rec = new Array[Byte](le32())
+      in.readFully(rec)
+      val name = new String(rec, 32, (rec(8) & 0xff) - 1, "UTF-8")
+      name -> ((rec(10) & 0xff) | (rec(11) & 0xff) << 8)
+    }.toMap
+    in.close()
+    assert(bins == cases.map { case (r, b) => r.readName.get -> b }.toMap)
+  }
+
   test("SAM -> BAM -> SAM preserves the record line content") {
     val samPath = tmpDir() + "/x.sam"
     val gd = GenomicDataset(spark.createDataset(reads), meta)

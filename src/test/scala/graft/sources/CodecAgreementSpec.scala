@@ -85,6 +85,31 @@ class CodecAgreementSpec extends SparkSpec {
       "emptySeq" -> "*"))
   }
 
+  test("multi-byte read names read back alike; a name over 254 bytes is rejected") {
+    val seq = Some("ACGTACGTAC")
+    val q = Some("IIII#IIII5")
+    // 'ü' is 2 UTF-8 bytes: 127 of them are BAM's 254-byte maximum
+    val names = Seq("read-é", "读/1", "ü" * 127)
+    val recs = names.zipWithIndex.map { case (n, i) => rec(n, 100L + i, seq, q) }
+    val dir = tmpDir()
+    val (("parquet", parquet) +: codecs) = writeAndRead(recs, _.readName.get, dir)
+    recs.foreach { r =>
+      val name = r.readName.get
+      assert(parquet(name) == r, s"parquet: $name")
+      codecs.foreach { case (codec, back) =>
+        assert(back.get(name).map(key) == Some(key(AlignmentGen.stored(r))), s"$codec: $name")
+      }
+    }
+    // 255 UTF-8 bytes in 128 chars: refused before any byte is written
+    val tooLong = "ü" * 127 + "a"
+    val gd = GenomicDataset(spark.createDataset(Seq(rec(tooLong, 100L, seq, q))), meta)
+    val e = intercept[Exception](BamIO.write(gd, s"$dir/long.bam"))
+    val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case i: IllegalArgumentException => i }
+    assert(cause.exists(_.getMessage.contains(tooLong)), e.toString)
+    assert(!new java.io.File(s"$dir/long.bam").exists())
+  }
+
   test("generated whole alignments read back alike from BAM, CRAM, SAM and parquet") {
     val recs = AlignmentGen.batch(400, seed = 8L)
     // the batch holds every case the generator is meant to vary

@@ -715,6 +715,14 @@ class CramIOSpec extends SparkSpec {
     fromCram.foreach(r => assert(r.sequence.exists(_.length == 10)))
   }
 
+  test("per-feature qualities: a position no feature covers makes the quality missing") {
+    val covered = Array[Byte](40, 30, 2)
+    assert(CramIO.featureQuality(covered) == Some("I?#"))
+    assert(CramIO.featureQuality(Array[Byte](40, 0xff.toByte, 2)) == None)
+    assert(CramIO.featureQuality(Array[Byte](40, 30, 0xff.toByte)) == None)
+    assert(CramIO.featureQuality(Array.emptyByteArray) == None)
+  }
+
   test("CRAM compresses smaller than BAM on repetitive data") {
     val reads = (0 until 2000).map(i =>
       rec(s"c$i", Some("chr1"), Some(i.toLong), Some("36M"),
