@@ -35,6 +35,15 @@ object Bench {
     * query's own output columns, so every operator pays its real cost. */
   def force(df: DataFrame): Long = df.queryExecution.toRdd.count()
 
+  /** `parse`'s value, where `parse` reads a tool's command line and checks
+    * its inputs. On an IllegalArgumentException its message and `usage` go
+    * to stderr and the JVM exits 2, before any session starts. */
+  def parseOrExit[A](usage: String)(parse: => A): A =
+    try parse catch { case e: IllegalArgumentException =>
+      System.err.println(s"${e.getMessage}\n\n$usage")
+      sys.exit(2)
+    }
+
   /** Operators that persist() intermediates (similarity joins,
     * clustering) leave their blocks cached after the action; drop them
     * between runs so later queries aren't timed under accumulated memory
@@ -72,6 +81,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    parseOrExit("usage: [SPARK_GRAFT_SF_DIR=<sfDir>] graft.Bench")(
+      graft.core.Tables.requireAll(sfDir))
     type Query = (SparkSession, String) => DataFrame
     // A query that THROWS is a failure, never a timing: a time-to-throw
     // must not be recorded as if it were a real run. Failures land in the

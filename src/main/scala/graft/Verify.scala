@@ -4,12 +4,24 @@ import graft.Bench.{jsonString => q}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val usage = "usage: [SPARK_GRAFT_ONLY=<name>,...] graft.Verify <sfDir> <outDir>"
+
+  /** (sfDir, outDir, the SPARK_GRAFT_ONLY selection) from the command line,
+    * checked: two arguments, every table present under sfDir, every
+    * selected name in the catalog. Throws IllegalArgumentException. */
+  private[graft] def parseArgs(args: Seq[String],
+      only: Option[String]): (String, String, Option[Set[String]]) = {
+    require(args.size == 2, s"expected 2 arguments, got ${args.size}")
+    graft.core.Tables.requireAll(args(0))
+    (args(0), args(1), only.map(SparkEntry.resolveQueries(_).toSet))
+  }
+
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    // local-iteration filter (unset for the full correctness gate);
-    // resolved before the session starts so a typo fails at once instead
-    // of running nothing and writing an empty failures.json
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(SparkEntry.resolveQueries(_).toSet)
+    // checked before the session starts, so a typo fails at once instead
+    // of running every query into failures.json; SPARK_GRAFT_ONLY is the
+    // local-iteration filter (unset for the full correctness gate)
+    val (sfDir, outDir, only) =
+      Bench.parseOrExit(usage)(parseArgs(args.toSeq, sys.env.get("SPARK_GRAFT_ONLY")))
     // the shared session factory: the oracle gate verifies the SAME plans
     // the bench times
     val spark = graft.core.SessionTuning.local()

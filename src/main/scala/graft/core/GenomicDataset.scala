@@ -263,7 +263,7 @@ object GenomicDataset {
   def loadParquet[T](spark: SparkSession, path: String)(implicit e: Encoder[T]): GenomicDataset[T] = {
     val meta = Sidecars.read(spark, path)
     GenomicDataset(
-      backfillMissing(spark.read.parquet(path), e.schema).as[T], meta,
+      backfillMissing(Tables.readParquet(spark, path), e.schema).as[T], meta,
       sorted = Sidecars.readSortedFlag(spark, path))
   }
 
@@ -277,7 +277,7 @@ object GenomicDataset {
       lookback: Int = 1)(implicit e: Encoder[T]): GenomicDataset[T] = {
     val meta = Sidecars.read(spark, path)
     val binSize = Sidecars.readPartitionFlag(spark, path).getOrElse(1000000L)
-    val df = spark.read.parquet(path)
+    val df = Tables.readParquet(spark, path)
     val pruned =
       if (regions.isEmpty) df
       else df.filter(regions.map(binnedRegionFilter(_, binSize, lookback))

@@ -1,23 +1,42 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided TPC-H-ish parquet tables (TESTDATA.md).
   *
-  * All reads go through `spark.read.parquet` so Catalyst owns predicate
-  * pushdown / column pruning / partition discovery — see SURVEY.md §2.1
-  * (reference: adam-core ADAMContext.loadParquet, ADAMContext.scala:1814-1857,
-  * where pushdown/projection are hand-plumbed; here they are free).
+  * Every parquet read in graft goes through [[readParquet]]: the schema is
+  * read from the files' footers on the driver ([[FooterSchema]]), and the
+  * read is `spark.read.schema(s).parquet(path)`, so Catalyst still owns
+  * predicate pushdown, column pruning and partition discovery, and no
+  * schema-inference job runs. ADAM's `loadParquet` (ADAMContext.scala:
+  * 1814-1857, SURVEY.md §2.1) likewise reads with a schema it already
+  * knows.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Throws IllegalArgumentException unless directory `dir` holds every
+    * table of [[names]]: the tools check their input this way before they
+    * start a session. */
+  def requireAll(dir: String): Unit = {
+    val absent = names.filterNot(n => new java.io.File(s"$dir/$n.parquet").exists)
+    require(absent.isEmpty, s"$dir lacks ${absent.map(_ + ".parquet").mkString(", ")}")
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(readParquet(spark, s"$dir/$name.parquet"))
+
+  /** `spark.read.parquet(path)` with the same schema and rows, without its
+    * schema-inference job: the schema Spark would infer is read from the
+    * footers on the driver. Nothing is remembered between calls, so a
+    * rewritten path reads its new schema. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(FooterSchema.infer(spark, path)).parquet(path)
 
   /** Normalize a `ts` column to TimestampType regardless of how the
     * parquet was generated: TIMESTAMP(NANOS) reads as LongType under

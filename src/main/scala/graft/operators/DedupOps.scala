@@ -867,6 +867,16 @@ object DedupOps {
           .observe(lowered,
             count(when(col("newLabel") < col("label"), 1)).as("lowered")))
         s.keepOnly(jumped)
+        // The stop test is safe under task retry and speculation. Spark
+        // merges a task's accumulator updates only when the task succeeds,
+        // so a failed attempt adds nothing; a retried or duplicate attempt
+        // may add a second copy of its partition's count. Every attempt
+        // of a partition counts the same rows, because `stepped` is a
+        // materialized cut and the join's hash partitioning is fixed. A
+        // sum of non-negative copies is 0 only if each copy is 0, so no
+        // attempt can flip `lowered == 0` either way. A local master does
+        // not retry tasks, so no spec forces a retry; ReliableCheckpointSpec
+        // runs this loop on reliable cuts.
         converged = lowered.get("lowered") == 0L
         labels = jumped.select(col("id"), col("newLabel").as("label"))
         iter += 1

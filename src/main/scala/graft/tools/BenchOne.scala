@@ -8,11 +8,27 @@ import graft.core.SessionTuning
   * (comma-separated names share one session)
   */
 object BenchOne {
-  def main(args: Array[String]): Unit = {
+  val usage = "usage: graft.tools.BenchOne <name>[,<name>...] [sfDir] [reps] [explain]"
+
+  /** (names, sfDir, reps, explain) from the command line, checked: 1 to 4
+    * arguments, known query names, every table present under sfDir, a
+    * positive reps, `explain` or nothing last. Throws
+    * IllegalArgumentException. */
+  private[graft] def parseArgs(args: Seq[String]): (Seq[String], String, Int, Boolean) = {
+    require(args.size >= 1 && args.size <= 4, s"expected 1 to 4 arguments, got ${args.size}")
     val names = SparkEntry.resolveQueries(args(0))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(2).map(_.toInt).getOrElse(3)
-    val doExplain = args.lift(3).contains("explain")
+    val reps = args.lift(2).fold(3) { r =>
+      r.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(s"reps must be a positive integer, got '$r'"))
+    }
+    require(args.lift(3).forall(_ == "explain"), s"expected 'explain', got '${args(3)}'")
+    graft.core.Tables.requireAll(sfDir)
+    (names, sfDir, reps, args.size == 4)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (names, sfDir, reps, doExplain) = Bench.parseOrExit(usage)(parseArgs(args.toSeq))
     val spark = SessionTuning.local()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import graft.algorithms.{Bqsr, MdTagging, RealignIndels}
 import graft.api.Conversions
-import graft.core.{GenomicDataset, ReferenceContigs}
+import graft.core.{GenomicDataset, ReferenceContigs, Tables}
 import graft.model._
 import graft.operators._
 import graft.sources._
@@ -61,7 +61,7 @@ object Cli {
     /** Parquet in, parquet out: every positional but the last is read as
       * parquet, and the frame `f` returns goes to the last one. */
     def parquet(f: (Args, IndexedSeq[DataFrame]) => DataFrame): Command =
-      run((spark, a) => sink(a, f(a, a.pos.init.map(spark.read.parquet))))
+      run((spark, a) => sink(a, f(a, a.pos.init.map(Tables.readParquet(spark, _)))))
 
     /** [[parquet]] for event tables: the inputs are read through
       * [[readTs]] on the command's `-ts` column. */
@@ -160,12 +160,7 @@ object Cli {
       s"  ${c.spec.usage}\n      ${c.spec.about}")).mkString("\n")
 
   def main(args: Array[String]): Unit = {
-    val call = try parse(args.toSeq) catch {
-      case e: IllegalArgumentException =>
-        System.err.println(s"${e.getMessage}\n\n$usage")
-        System.exit(2)
-        return
-    }
+    val call = graft.Bench.parseOrExit(usage)(parse(args.toSeq))
     val spark = graft.core.SessionTuning.local()
     try call.run(spark) finally spark.stop()
   }
@@ -203,7 +198,7 @@ object Cli {
     * unix_millis/windows need plain TimestampType. */
   private def readTs(spark: SparkSession, path: String,
       tsCol: String): DataFrame =
-    graft.core.Tables.normalizeTs(spark.read.parquet(path), tsCol)
+    Tables.normalizeTs(Tables.readParquet(spark, path), tsCol)
 
   private def loadReference(spark: SparkSession, path: String): ReferenceContigs =
     if (path.toLowerCase.endsWith(".2bit")) TwoBit.readFile(path)
@@ -474,7 +469,7 @@ object Cli {
     try {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       a.pos.foreach { f =>
-        spark.read.parquet(f).toJSON.toLocalIterator().forEachRemaining { line =>
+        Tables.readParquet(spark, f).toJSON.toLocalIterator().forEachRemaining { line =>
           if (a.has("-pretty"))
             ps.println(mapper.writerWithDefaultPrettyPrinter()
               .writeValueAsString(mapper.readTree(line)))
@@ -572,7 +567,7 @@ object Cli {
         import org.apache.spark.sql.functions.{count, explode, length}
         val (in, k) = (a.pos(0), a.pos(1).toInt)
         val seqs =
-          if (in.toLowerCase.endsWith(".parquet")) spark.read.parquet(in)
+          if (in.toLowerCase.endsWith(".parquet")) Tables.readParquet(spark, in)
           else SequenceIO.readFasta(spark, in).toDF()
         sink(a, seqs.filter(col("sequence").isNotNull)
           .select(explode(
@@ -589,7 +584,7 @@ object Cli {
         val (in, out) = (a.pos(0), a.out.toLowerCase)
         val seqs =
           if (in.toLowerCase.endsWith(".parquet"))
-            spark.read.parquet(in).as[Sequence]
+            Tables.readParquet(spark, in).as[Sequence]
           else SequenceIO.readFasta(spark, in)
         if (out.endsWith(".fasta") || out.endsWith(".fa"))
           SequenceIO.writeFasta(seqs, a.out)
@@ -605,7 +600,7 @@ object Cli {
         val in = a.pos(0)
         val slices =
           if (in.toLowerCase.endsWith(".parquet"))
-            spark.read.parquet(in).as[Slice]
+            Tables.readParquet(spark, in).as[Slice]
           else SequenceIO.readFastaSlices(spark, in)
         GenomicDataset(slices, GenomicMetadata.empty).saveAsParquet(a.out)
         a.wrote(a.out)
@@ -656,7 +651,7 @@ object Cli {
       .run { (spark, a) =>
         val in = a.pos(0)
         val vars =
-          if (in.endsWith(".parquet")) spark.read.parquet(in)
+          if (in.endsWith(".parquet")) Tables.readParquet(spark, in)
           else VcfIO.readVariants(spark, in).toDF
             .select(col("referenceName"), col("start"), col("names"),
               col("alternateAllele"), col("annotation"))
@@ -839,7 +834,7 @@ object Cli {
         "share and totals; -out also writes them",
       Seq("-key" -> "user_id", "-top" -> "20"), optional = Seq("-out"))
       .run { (spark, a) =>
-        val rep = SkewOps.keySkewReport(spark.read.parquet(a.pos(0)),
+        val rep = SkewOps.keySkewReport(Tables.readParquet(spark, a.pos(0)),
           a("-key"), a.int("-top"))
         a.get("-out").foreach(save(rep, _))
         rep.show(100, truncate = false)
@@ -894,7 +889,7 @@ object Cli {
         "multi-column row-group pruning",
       Seq("-cols" -> "", "-files" -> "64", "-bits" -> "16"))
       .run { (spark, a) =>
-        ZOrder.writeZOrdered(spark.read.parquet(a.pos(0)), a.out,
+        ZOrder.writeZOrdered(Tables.readParquet(spark, a.pos(0)), a.out,
           a.list("-cols"), a.int("-files"), a.int("-bits"))
         a.wrote(a.out)
       },

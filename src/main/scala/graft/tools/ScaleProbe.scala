@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Bench
+import graft.core.Tables
 
 /** Scale probe: runs the five most expensive operators at ~sf1 (10x the
   * largest driver-provided testdata) and prints one JSON line per probe.
@@ -44,7 +45,7 @@ object ScaleProbe {
     import graft.operators.{DedupOps, RegionJoins, TextOps}
 
     // ---- synthesize sf1-scale inputs (10x sf0.1), materialized first ----
-    val docs01 = graft.core.Tables.load(spark, sfDir, "documents")
+    val docs01 = Tables.load(spark, sfDir, "documents")
       .select("doc_id", "text")
     val nDocs01 = docs01.count()
     val perturb = udf { (text: String, rep: Int) =>
@@ -69,7 +70,7 @@ object ScaleProbe {
     // operator); any real ingest writes many files
     if (fresh(docsPath))
       docsBig.repartition(64).write.mode("overwrite").parquet(docsPath)
-    val docs = spark.read.parquet(docsPath)
+    val docs = Tables.readParquet(spark, docsPath)
     println(s"""{"probe":"setup_docs","rows":${docs.count()}}""")
 
     // interval tables ~sf1: 2M left rows / 500k right rows over 25 contigs
@@ -88,7 +89,7 @@ object ScaleProbe {
       .repartition(64).write.mode("overwrite").parquet(lPath)
     if (fresh(rPath)) intervals(500000L, 13L, 20000L)
       .repartition(64).write.mode("overwrite").parquet(rPath)
-    val lIv = spark.read.parquet(lPath); val rIv = spark.read.parquet(rPath)
+    val lIv = Tables.readParquet(spark, lPath); val rIv = Tables.readParquet(spark, rPath)
 
     // ---- probes ----
     timed("region_join_inner") {
@@ -107,7 +108,7 @@ object ScaleProbe {
         col("id"))
       .select("referenceName", "start", "end", "id")
       .repartition(64).write.mode("overwrite").parquet(svPath)
-    val svIv = spark.read.parquet(svPath)
+    val svIv = Tables.readParquet(spark, svPath)
     timed("region_join_sv_default_bin") {
       RegionJoins.overlapJoin(lIv, svIv, "inner").count()
     }
@@ -157,7 +158,7 @@ object ScaleProbe {
     // nudged — replicas land in the SAME cluster, so SemDeDup's
     // within-cluster pair scan sees ~10 co-located near-dups per vector
     // (its adversarial shape, like the perturbed documents above).
-    val emb01 = graft.core.Tables.load(spark, sfDir, "embeddings")
+    val emb01 = Tables.load(spark, sfDir, "embeddings")
       .select("vec_id", "embedding")
     val nEmb01 = emb01.count()
     val nudge = udf { (v: Seq[Float], rep: Int) =>
@@ -169,7 +170,7 @@ object ScaleProbe {
       .select((col("vec_id") + col("id") * nEmb01 * 2).as("vec_id"),
         nudge(col("embedding"), col("id").cast("int")).as("embedding"))
       .repartition(64).write.mode("overwrite").parquet(embPath)
-    val emb = spark.read.parquet(embPath)
+    val emb = Tables.readParquet(spark, embPath)
 
     spark.catalog.clearCache()
     timed("semantic_dedup") {
@@ -199,7 +200,7 @@ object ScaleProbe {
     // shape for the time-analytics family: per-user ordered windows
     // (asof carry, sessionize) get 10x deeper instead of the shuffle just
     // getting wider.
-    val ev01 = graft.core.Tables.load(spark, sfDir, "events")
+    val ev01 = Tables.load(spark, sfDir, "events")
       .select("event_id", "ts", "user_id", "event_type", "value")
     val nEv01 = ev01.count()
     val evPath = s"$work/events_sf1.parquet"
@@ -213,7 +214,7 @@ object ScaleProbe {
           col("user_id"), col("event_type"), col("value"))
         .repartition(64).write.mode("overwrite").parquet(evPath)
     }
-    val ev = spark.read.parquet(evPath)
+    val ev = Tables.readParquet(spark, evPath)
     println(s"""{"probe":"setup_events","rows":${ev.count()}}""")
     import graft.operators.Sessionize
 
@@ -1135,7 +1136,7 @@ object ScaleProbe {
       val corpusPath = s"$work/ivf_corpus_1m.parquet"
       if (fresh(corpusPath))
         corpusV.repartition(64).write.mode("overwrite").parquet(corpusPath)
-      val corpus = spark.read.parquet(corpusPath)
+      val corpus = Tables.readParquet(spark, corpusPath)
       val queriesV = spark.range(40L)
         .select((col("id") + 7L).as("qid"),
           mkVec(col("id") * 104729L + 13L).as("qvec"))
@@ -1152,7 +1153,7 @@ object ScaleProbe {
         val aPath = s"$work/ivf_assigned_1m_$nc.parquet"
         if (fresh(aPath))
           assigned.write.mode("overwrite").parquet(aPath)
-        val idx = spark.read.parquet(aPath)
+        val idx = Tables.readParquet(spark, aPath)
         for (np <- Seq(1, 2, 4, 8, 16)) {
           val t0 = System.nanoTime()
           val got = graft.operators.SimilarityOps
@@ -1192,13 +1193,13 @@ object ScaleProbe {
           (col("id") % 500000L).as("order"),
           pmod(xxhash64(col("id")), lit(20000L)).as("item"))
         .repartition(64).write.mode("overwrite").parquet(incPath)
-      val inc = spark.read.parquet(incPath)
+      val inc = Tables.readParquet(spark, incPath)
       val hotPath = s"$work/cooc_incidence_hot.parquet"
-      if (fresh(hotPath)) spark.read.parquet(incPath).unionAll(
+      if (fresh(hotPath)) Tables.readParquet(spark, incPath).unionAll(
           spark.range(400000L).select((col("id")).as("order"),
             lit(99999L).as("item")))
         .repartition(64).write.mode("overwrite").parquet(hotPath)
-      val hotInc = spark.read.parquet(hotPath)
+      val hotInc = Tables.readParquet(spark, hotPath)
       timed("cooc_edges_uniform") {
         graft.operators.GraphOps
           .coOccurrenceEdges(inc, "order", "item").count()

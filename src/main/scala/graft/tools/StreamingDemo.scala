@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.core.Tables
 import graft.streaming.EventStreams
 
 /** End-to-end Structured Streaming drive: stream the events parquet
@@ -21,7 +22,7 @@ object StreamingDemo {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       stage.resolve("events.parquet"))
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val batchSchema = Tables.readParquet(spark, s"$sfDir/events.parquet").schema
     val raw = spark.readStream.schema(batchSchema).parquet(stage.toString)
     val events = raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
 

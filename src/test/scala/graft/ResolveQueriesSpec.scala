@@ -27,6 +27,6 @@ class ResolveQueriesSpec extends AnyFunSuite {
 
   test("BenchOne rejects an unknown name before it starts a session") {
     intercept[IllegalArgumentException](
-      graft.tools.BenchOne.main(Array("q03_revenue_by_nation,nope")))
+      graft.tools.BenchOne.parseArgs(Seq("q03_revenue_by_nation,nope")))
   }
 }
