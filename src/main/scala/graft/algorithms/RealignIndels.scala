@@ -293,7 +293,7 @@ object RealignIndels {
     // stored CIGAR; indels consume but never mismatch) — the reference
     // scores originals the same way (sumMismatchQuality via
     // mdTag.getReference(withGaps), RealignIndels.scala:685-693).
-    // Scoring the original UNGAPPED (the r15 behavior) double-counted a
+    // Scoring the original UNGAPPED would double-count a
     // read whose own alignment already carried the consensus indel,
     // which is exactly why we moved artificial.sam's read1/3/5 where
     // GATK (and the reference) leave them: their gapped originals TIE

@@ -18,11 +18,24 @@ object SessionTuning {
   /** The confs every graft session needs: UTC session time (calendar
     * operators and the oracle compare assume it), TIMESTAMP(NANOS)
     * parquet read as a long (converted back by [[Tables.normalizeTs]];
-    * Spark 4 cannot read it otherwise) and no UI. */
+    * Spark 4 cannot read it otherwise), no UI, and room for graft's
+    * generated classes.
+    *
+    * Spark keeps compiled codegen classes in one JVM-wide cache of
+    * `spark.sql.codegen.cache.maxEntries` entries (default 100), which
+    * Guava splits into 4 segments that each evict on their own. Seven
+    * short catalog queries already compile 79 classes plus the session's
+    * own, so whether a segment overflows depends on how the keys hash:
+    * in some JVMs every warm pass recompiled 19–28 classes and ran
+    * slower. 4096 entries hold a whole catalog pass (3351 classes
+    * at sf0.001) without an eviction. The size is fixed once per JVM, at
+    * its first codegen, so it takes effect only where a session built
+    * here compiles first; a facade user's own session keeps Spark's 100. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
 
   /** Default session parallelism: `SPARK_GRAFT_CPUS`, else the machine's
     * processor count. */

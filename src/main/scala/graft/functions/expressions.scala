@@ -1,8 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import com.ibm.icu.lang.UCharacter
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -93,6 +96,74 @@ case class Fnv1a64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Lower- and upper-casing of graft's text, with the results of Spark's
+  * `lower`/`upper` on default (UTF8_BINARY) strings under Spark's default
+  * ICU case mapping: an all-ASCII string maps byte by byte; any other
+  * string is made valid UTF-8 (`UTF8String.toValidString`) and mapped by
+  * ICU's full case mapping in the JVM's default locale.
+  *
+  * Spark makes that same ICU call through `CollationAwareUTF8String`,
+  * whose static initializer first asks ICU for the title case of all
+  * 1,114,112 code points, a table `lower` and `upper` never read. A JVM
+  * pays that once, at its first text query, and it takes seconds, which
+  * every one-shot CLI call pays again. These expressions make the ICU
+  * call directly, so the table is never built and every result is the
+  * one Spark's `lower`/`upper` would give (`CaseMapSpec` compares them
+  * on every code point).
+  *
+  * Like Spark's `Lower`, each takes string input with implicit cast, is
+  * null-intolerant and keeps the child's nullability, so plans keep
+  * their inferred `IsNotNull` filters. They are not registered as SQL
+  * functions; SQL text keeps Spark's `lower`/`upper`.
+  */
+private[graft] object CaseMap {
+
+  def toLower(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(UCharacter.toLowerCase(s.toValidString))
+
+  def toUpper(s: UTF8String): UTF8String =
+    if (s.isFullAscii) s.toUpperCaseAscii
+    else UTF8String.fromString(UCharacter.toUpperCase(s.toValidString))
+
+  def lower(c: Column): Column = ColumnBridge.column(Lower(ColumnBridge.expression(c)))
+
+  def upper(c: Column): Column = ColumnBridge.column(Upper(ColumnBridge.expression(c)))
+
+  /** A case mapping, codegen'd as a static call of `CaseMap.<method>`.
+    * The pretty name is Spark's, so unaliased output columns keep their
+    * names. Serializable itself because Java serialization of a task's
+    * plan needs a no-argument constructor on the first superclass that
+    * is not. */
+  sealed abstract class CaseMapping(name: String, method: String)
+    extends UnaryExpression with ImplicitCastInputTypes with Serializable {
+
+    protected def map(s: UTF8String): UTF8String
+
+    override def inputTypes: Seq[DataType] = Seq(StringType)
+    override def dataType: DataType = StringType
+    override def nullIntolerant: Boolean = true
+    override def prettyName: String = name
+
+    protected override def nullSafeEval(input: Any): Any = map(input.asInstanceOf[UTF8String])
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, c => s"graft.functions.CaseMap.$method($c)")
+  }
+
+  case class Lower(child: Expression) extends CaseMapping("lower", "toLower") {
+    protected def map(s: UTF8String): UTF8String = toLower(s)
+    override protected def withNewChildInternal(newChild: Expression): Lower =
+      copy(child = newChild)
+  }
+
+  case class Upper(child: Expression) extends CaseMapping("upper", "toUpper") {
+    protected def map(s: UTF8String): UTF8String = toUpper(s)
+    override protected def withNewChildInternal(newChild: Expression): Upper =
+      copy(child = newChild)
+  }
+}
+
 /** cosine_similarity(array<double>, array<double>) — codegen'd cosine over
   * ArrayData with zero boxing (a ScalaUDF deserializes both arrays to
   * Seq[Double] per call — ruinous inside pair joins). Sums run
@@ -162,11 +233,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 /** Column-API + SQL-registry access to the native expressions. */
 object GraftFunctions {
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-  import org.apache.spark.sql.graft.ColumnBridge
 
   def reverseComplement(c: Column): Column =
     ColumnBridge.column(ReverseComplement(ColumnBridge.expression(c)))

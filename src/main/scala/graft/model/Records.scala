@@ -162,9 +162,10 @@ case class Genotype(
     // which FORMAT key genotypeLikelihoods came from: Some(true) = PL
     // (phred-scaled), Some(false) = GL (log10 floats). The writer emits
     // the SAME key back — emitting GL floats under PL would hand a
-    // spec-violating file to any downstream tool (r15 byte audit).
+    // spec-violating file to any downstream tool (a byte-level read-back
+    // of the written VCF checks this).
     likelihoodsPhred: Option[Boolean] = None,
-    // original per-record FORMAT key order (r16): VCF writers differ in
+    // original per-record FORMAT key order: VCF writers differ in
     // key order (freebayes: GT:DP:AD:RO:QR:AO:QA:GL) and keys are
     // self-describing, so order is the ONE thing a canonical writer
     // loses. The writer re-emits this order when it matches the key set

@@ -217,8 +217,8 @@ object AlignmentOps {
     // through the window, and no Alignment objects materialize. Semantics
     // are pinned to the typed keyOf by the fragment-path agreement spec
     // and the q40 oracle.
-    // while-loop body (r17, guide §1.2 per-task work): the iterator chain
-    // allocated an iterator + two closures per row; same values
+    // while-loop body: an iterator chain would allocate an iterator and
+    // two closures per row for the same values
     val scoreU = udf((q: String) => {
       var s = 0; var i = 0
       while (i < q.length) {

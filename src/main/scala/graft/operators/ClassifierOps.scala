@@ -25,9 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object ClassifierOps {
 
-  private def toks(textCol: String) =
-    filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")
-
   private def bucketOf(c: org.apache.spark.sql.Column, buckets: Int) =
     pmod(graft.functions.GraftFunctions.fnv1a64(c), lit(buckets.toLong))
 
@@ -38,7 +35,7 @@ object ClassifierOps {
       buckets: Int): DataFrame = {
     require(buckets > 0, s"bad nb buckets: $buckets")
     val feats = docs
-      .select(col(labelCol).as("label"), explode(toks(textCol)).as("tok"))
+      .select(col(labelCol).as("label"), explode(TextOps.alnumWords(col(textCol))).as("tok"))
       .select(col("label"), bucketOf(col("tok"), buckets).as("b"))
       .groupBy("label", "b").agg(count(lit(1)).as("c"))
     val priors = docs
@@ -74,8 +71,8 @@ object ClassifierOps {
     // the trained model feeds priors, totals, per-label constants AND
     // the per-bucket grid — when it is an unpersisted corpus aggregation
     // (the nbConfusion shape) every reference would re-explode the train
-    // corpus (the q184 double-scan class, CatalogPlanSweepSpec r16
-    // detector). The grid is bounded (labels x (buckets+1)) — persist.
+    // corpus (the q184 double-scan class, which CatalogPlanSweepSpec's
+    // detector catches). The grid is bounded (labels x (buckets+1)) — persist.
     val m = model.persist(lvl)
     val prior = m.filter(col("b") === -1L)
       .select(col("label"), col("c").as("nd"))
@@ -99,7 +96,7 @@ object ClassifierOps {
     // per-doc bucket counts feed BOTH the delta join and the size sum —
     // persist so the test corpus is exploded once, not twice
     val dt = docs
-      .select(col(idCol), explode(toks(textCol)).as("tok"))
+      .select(col(idCol), explode(TextOps.alnumWords(col(textCol))).as("tok"))
       .select(col(idCol), bucketOf(col("tok"), buckets).as("b"))
       .groupBy(idCol, "b").agg(count(lit(1)).as("k"))
       .persist(lvl)

@@ -17,9 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object CorpusCompareOps {
 
-  private def toks(textCol: String) =
-    filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")
-
   private def bucketOf(c: Column, buckets: Int) =
     pmod(graft.functions.GraftFunctions.fnv1a64(c), lit(buckets.toLong))
 
@@ -101,7 +98,7 @@ object CorpusCompareOps {
     val nonNull = docs.filter(col(sourceCol).isNotNull)
     val pairs = nonNull.select(col(sourceCol).as("source"),
       graft.functions.GraftFunctions.fnv1a64(
-        lower(regexp_replace(trim(col(textCol)), "\\s+", " "))).as("fp"))
+        TextOps.normalizedText(col(textCol))).as("fp"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val totals = pairs.groupBy("source").agg(count(lit(1)).as("n"))
@@ -137,7 +134,7 @@ object CorpusCompareOps {
     require(buckets > 0, s"bad buckets: $buckets")
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
     val counts = docs
-      .select(col(sourceCol).as("source"), explode(toks(textCol)).as("tok"))
+      .select(col(sourceCol).as("source"), explode(TextOps.alnumWords(col(textCol))).as("tok"))
       .select(col("source"), bucketOf(col("tok"), buckets).as("b"))
       .groupBy("source", "b").agg(count(lit(1)).as("c"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -182,7 +179,7 @@ object CorpusCompareOps {
       buckets: Int = 4096, k: Int = 50): DataFrame = {
     require(buckets > 0 && k > 0)
     val obs = docs
-      .select(col(labelCol).as("label"), explode(toks(textCol)).as("tok"))
+      .select(col(labelCol).as("label"), explode(TextOps.alnumWords(col(textCol))).as("tok"))
       .select(col("label"), bucketOf(col("tok"), buckets).as("b"))
       .groupBy("label", "b").agg(count(lit(1)).as("o"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -158,7 +158,7 @@ object MultimodalOps {
     implicit val enc: org.apache.spark.sql.Encoder[ImageStatsRow] =
       Encoders.product[ImageStatsRow]
     Parallelism.fanOut(media.select("media_id", "payload"),
-      col("media_id")) // r16: a 1-split scan decoded on one core
+      col("media_id")) // a 1-split scan would decode on one core
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap { r =>
           val id = r.getLong(0)
@@ -183,7 +183,7 @@ object MultimodalOps {
     implicit val enc: org.apache.spark.sql.Encoder[AudioStatsRow] =
       Encoders.product[AudioStatsRow]
     Parallelism.fanOut(media.select("media_id", "payload"),
-      col("media_id")) // r16: a 1-split scan decoded on one core
+      col("media_id")) // a 1-split scan would decode on one core
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap { r =>
           val id = r.getLong(0)
@@ -267,7 +267,7 @@ object MultimodalOps {
     implicit val enc: org.apache.spark.sql.Encoder[VideoStatsRow] =
       Encoders.product[VideoStatsRow]
     Parallelism.fanOut(media.select("media_id", "payload"),
-      col("media_id")) // r16: a 1-split scan decoded on one core
+      col("media_id")) // a 1-split scan would decode on one core
       .mapPartitions { rows: Iterator[Row] =>
         rows.flatMap { r =>
           val id = r.getLong(0)
@@ -302,7 +302,7 @@ object MultimodalOps {
     implicit val enc: org.apache.spark.sql.Encoder[AudioFeatureRow] =
       Encoders.product[AudioFeatureRow]
     Parallelism.fanOut(media.select("media_id", "payload"),
-      col("media_id")) // r16: a 1-split scan decoded on one core
+      col("media_id")) // a 1-split scan would decode on one core
       .mapPartitions { rows: Iterator[Row] =>
         // per-partition codec init happens here, once per batch
         rows.flatMap { r =>
@@ -376,7 +376,7 @@ object MultimodalOps {
     implicit val enc: org.apache.spark.sql.Encoder[DHashRow] =
       Encoders.product[DHashRow]
     Parallelism.fanOut(media.select("media_id", "payload"),
-      col("media_id")) // r16: a 1-split scan decoded on one core
+      col("media_id")) // a 1-split scan would decode on one core
       .mapPartitions { rows: Iterator[Row] =>
         rows.map { r =>
           val img = graft.sources.Bmp.decode(r.getAs[Array[Byte]](1))
@@ -484,7 +484,7 @@ object MultimodalOps {
     implicit val enc: org.apache.spark.sql.Encoder[AudioFpRow] =
       Encoders.product[AudioFpRow]
     Parallelism.fanOut(media.select("media_id", "payload"),
-      col("media_id")) // r16: a 1-split scan decoded on one core
+      col("media_id")) // a 1-split scan would decode on one core
       .mapPartitions { rows: Iterator[Row] =>
         rows.map { r =>
           val audio = graft.sources.Wav.decode(r.getAs[Array[Byte]](1))
@@ -512,7 +512,7 @@ object MultimodalOps {
     implicit val enc: org.apache.spark.sql.Encoder[VideoDHashRow] =
       Encoders.product[VideoDHashRow]
     Parallelism.fanOut(media.select("media_id", "payload"),
-      col("media_id")) // r16: a 1-split scan decoded on one core
+      col("media_id")) // a 1-split scan would decode on one core
       .mapPartitions { rows: Iterator[Row] =>
         rows.map { r =>
           val v = graft.sources.Avi.decode(r.getAs[Array[Byte]](1))

@@ -89,7 +89,7 @@ object SamplingOps {
     val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
     // weight = #{cdf thresholds <= u} via a fixed comparison chain; the
     // original pass rides as replicate -1 with weight 1. The uniform
-    // hash is MATERIALIZED as its own projection column first (r16):
+    // hash is MATERIALIZED as its own projection column first:
     // inlining it repeated the concat+fnv tree once per threshold (8x)
     // and codegen subexpression elimination did not collapse the copies
     // — measured 2.6 s vs 0.9 s for the weight projection at sf0.1.
@@ -259,7 +259,7 @@ object SamplingOps {
     // budget, the cut and the remainder — SIX+ references; when `counts`
     // is an unpersisted corpus aggregation (the q152 shape) each one
     // would re-aggregate the corpus (the q184 double-scan bug class,
-    // caught by CatalogPlanSweepSpec's r16 detector). The grid is
+    // caught by CatalogPlanSweepSpec's double-scan detector). The grid is
     // bounded (one row per source) — persist it, release via the
     // bounded result (tier 1, operators/Caching.scala).
     val d = counts.select(col(sourceCol).as("source"),
@@ -692,8 +692,7 @@ object SamplingOps {
     val base = Parallelism.fanOut(
       docs.select(col(idCol).as("doc_id"), col(textCol).as("text"),
         isTarget.as("is_target")), col(idCol))
-    val toks = base.select(col("is_target"),
-      filter(split(lower(col("text")), "[^a-z0-9]+"), t => t =!= "").as("ts"))
+    val toks = base.select(col("is_target"), TextOps.alnumWords(col("text")).as("ts"))
     // unigrams ++ bigrams; zip_with pads the shorter side with null, so the
     // dangling last pair concat()s to null and the filter drops it
     val feats = toks.select(col("is_target"),

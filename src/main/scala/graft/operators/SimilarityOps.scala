@@ -345,7 +345,7 @@ object SimilarityOps {
     * batch computes probe lists per call — the 100 TB corpus scan carries
     * its stored `cid`.
     *
-    * nProbe default (r16, measured — SCALE.md "IVF ANN recall anchor"):
+    * nProbe default (measured — SCALE.md "IVF ANN recall anchor"):
     * recall tracks the probed FRACTION nProbe/nCentroids; >= ~1/8 of the
     * lists gives >= 0.99 recall@10 on clustered 1M x 32-dim data
     * (8/64 -> 0.9975, 16/256 -> 0.9975, but 8/256 -> 0.945). The default

@@ -30,9 +30,7 @@ object SketchOps {
 
   /** Lowercased `[a-z0-9]+` tokens of `textCol`, one row per occurrence. */
   def tokens(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(
-      filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= ""))
-      .as("token"))
+    docs.select(explode(TextOps.alnumWords(col(textCol))).as("token"))
 
   // ----------------------------- count-min sketch --------------------------
 
@@ -163,9 +161,7 @@ object SketchOps {
       p: Int = 10): DataFrame = {
     val m = 1L << p
     val counts = docs
-      .select(col(groupCol).as("g"), explode(
-        filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= ""))
-        .as("token"))
+      .select(col(groupCol).as("g"), explode(TextOps.alnumWords(col(textCol))).as("token"))
       .groupBy("g", "token").agg(count(lit(1)).as("n"))
     counts
       .select(col("g"), col("n"), hllRegUdf(p)(col("token")).as("rr"))

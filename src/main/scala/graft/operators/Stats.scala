@@ -1078,10 +1078,10 @@ object Stats {
   /** Default group-size threshold above which [[rankWithinGroups]]
     * escalates from the per-group window sort (ONE task per group) to
     * the two-phase distributed rank. Measured honestly (toRdd force —
-    * the r15 probe's count() action let Catalyst prune the trim sums,
+    * a count() action lets Catalyst prune the trim sums,
     * understating the single-task cost 10x): a 5M-row group costs
     * ~16 s through the single-task window+trim-aggregate vs ~7 s
-    * escalated (local[16], SCALE.md r16), so 5M is the local
+    * escalated (local[16], SCALE.md), so 5M is the local
     * crossover; per-task work above it grows linearly while the
     * escalated path stays bounded by rows/partitions. */
   val EscalateGroupRows: Long = 5000000L
@@ -1226,7 +1226,7 @@ object Stats {
     * concentrates. Chosen over Theil/ln-based indices deliberately:
     * a per-row transcendental CANNOT be made engine-identical (JVM
     * Math.log and DuckDB ln disagree by 1 ulp on real arguments —
-    * measured, r15), while the harmonic form needs only a reciprocal,
+    * measured), while the harmonic form needs only a reciprocal,
     * which quantizes exactly.
     *
     * Engine-parity BY CONSTRUCTION: each row contributes the exact

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.CaseMap
 
 /** Text-analysis operators for large-scale training-data pipelines
   * (SURVEY.md §7 step 10 extensions). All per-row column expressions —
@@ -62,8 +63,8 @@ object TextOps {
     t.rlike("[.!?\"']$") &&
       size(split(t, "\\s+")) >= minWords &&
       !t.contains("{") &&
-      !lower(t).contains("javascript") &&
-      !lower(t).contains("lorem ipsum")
+      !CaseMap.lower(t).contains("javascript") &&
+      !CaseMap.lower(t).contains("lorem ipsum")
   }
 
   /** Lines of `text` surviving the C4 rules, in order — a codegen'd
@@ -102,8 +103,7 @@ object TextOps {
   def tokenFrequencies(
       docs: DataFrame, textCol: String, k: Int): DataFrame = {
     val toks = docs
-      .select(explode(filter(split(lower(col(textCol)), "\\s+"),
-        t => t =!= "")).as("token"))
+      .select(explode(whitespaceTokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n_occurrences"))
     toks
       .orderBy(col("n_occurrences").desc, col("token"))
@@ -149,9 +149,7 @@ object TextOps {
     require(phrase.nonEmpty, "phraseSearch needs at least one word")
     val words = phrase.map(_.toLowerCase)
     val toks = docs
-      .select(col(idCol), posexplode(
-        filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= ""))
-        .as(Seq("pos", "tok")))
+      .select(col(idCol), posexplode(alnumWords(col(textCol))).as(Seq("pos", "tok")))
       .filter(col("tok").isin(words.distinct: _*))
     val first = toks.filter(col("tok") === words.head)
       .select(col(idCol), col("pos"))
@@ -170,9 +168,7 @@ object TextOps {
     require(terms.nonEmpty, "bm25Scores needs at least one query term")
     val toks = Parallelism
       .fanOut(docs.select(col(idCol), col(textCol)), col(idCol))
-      .select(col(idCol).as("doc_id"),
-        filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")
-          .as("ts"))
+      .select(col(idCol).as("doc_id"), alnumWords(col(textCol)).as("ts"))
     val dl = toks.select(col("doc_id"), size(col("ts")).as("dl"))
     val tf = toks
       .select(col("doc_id"), explode(col("ts")).as("term"))
@@ -223,8 +219,7 @@ object TextOps {
       docs: DataFrame, textCol: String,
       buckets: Int = 1 << 16): DataFrame = {
     require(buckets > 0, s"bad lm buckets: $buckets")
-    val toks = docs.select(
-      filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "").as("ts"))
+    val toks = docs.select(alnumWords(col(textCol)).as("ts"))
     // kind-prefixed features: "u:" + token, "b:" + token + " " + next
     val feats = toks.select(explode(filter(
       concat(
@@ -270,10 +265,11 @@ object TextOps {
         (s, math.max(ts.length - 1, 0))
       }
     }
-    docs.withColumn("__lm", scoreU(col(textCol)))
-      .withColumn("lm_q", col("__lm._1"))
-      .withColumn("n_transitions", col("__lm._2"))
-      .drop("__lm")
+    val Seq(lm) = ScratchColumns.fresh(docs, "__lm")
+    docs.withColumn(lm, scoreU(col(textCol)))
+      .withColumn("lm_q", col(s"$lm._1"))
+      .withColumn("n_transitions", col(s"$lm._2"))
+      .drop(lm)
   }
 
   /** The eight Gopher stop words (Rae et al. 2021, Appendix A1.1): a doc
@@ -310,7 +306,7 @@ object TextOps {
     val ellipsisLines = size(filter(lines, l => trim(l).rlike("\\.\\.\\.$")))
     val alphaWords = size(filter(words, w => w.rlike("[A-Za-z]")))
     val stopHits = gopherStopWords
-      .map(kw => when(exists(words, w => lower(w) === kw), 1).otherwise(0))
+      .map(kw => when(exists(words, w => CaseMap.lower(w) === kw), 1).otherwise(0))
       .reduce(_ + _)
     Seq(
       "n_words" -> nWords,
@@ -350,7 +346,7 @@ object TextOps {
     // pure integer arithmetic → engine-portable.
     // `replace` (literal, not regex) matches DuckDB's replace() exactly —
     // both remove left-to-right non-overlapping occurrences.
-    val padded = concat(lit(" "), lower(text), lit(" "))
+    val padded = concat(lit(" "), CaseMap.lower(text), lit(" "))
     markers.map { kw =>
       (length(padded) - length(replace(padded, lit(kw), lit("")))) / kw.length
     }.reduce(_ + _)
@@ -365,10 +361,25 @@ object TextOps {
     }
   }
 
-  /** Document fingerprint: md5 of whitespace-normalized lowercase text.
-    * The exact-dedup key (see [[DedupOps.exactDuplicates]]). */
+  /** Lower-cased `[a-z0-9]+` words of `text`, empty runs dropped: the word
+    * split of the bag-of-words, sketch and classifier operators (DuckDB:
+    * `list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')`). */
+  def alnumWords(text: Column): Column =
+    filter(split(CaseMap.lower(text), "[^a-z0-9]+"), t => t =!= "")
+
+  /** Lower-cased whitespace tokens of `text`, empty tokens dropped. */
+  def whitespaceTokens(text: Column): Column =
+    filter(split(CaseMap.lower(text), "\\s+"), t => t =!= "")
+
+  /** Whitespace-normalized lowercase text: trimmed, each whitespace run
+    * one space. */
+  def normalizedText(text: Column): Column =
+    CaseMap.lower(regexp_replace(trim(text), "\\s+", " "))
+
+  /** Document fingerprint: md5 of [[normalizedText]]. The exact-dedup key
+    * (see [[DedupOps.exactDuplicates]]). */
   def fingerprint(text: Column): Column =
-    md5(lower(regexp_replace(trim(text), "\\s+", " ")))
+    md5(normalizedText(text))
 
   /** Winnowing fingerprints (Schleimer et al. 2003, the MOSS scheme):
     * hash every character `k`-gram of the whitespace-normalized lowercase
@@ -983,9 +994,7 @@ object TextOps {
   def collocationsPmi(
       docs: DataFrame, textCol: String,
       minCount: Long = 5L, k: Int = 50): DataFrame = {
-    val toks = docs.select(
-      filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")
-        .as("ts"))
+    val toks = docs.select(alnumWords(col(textCol)).as("ts"))
     val bigrams = toks
       .filter(size(col("ts")) >= 2)
       .select(explode(expr(
@@ -1030,9 +1039,7 @@ object TextOps {
     * handful of terms, never a global sort. */
   def tfidfKeywords(
       docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    val toks = docs.select(col(idCol),
-      explode(filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= ""))
-        .as("term"))
+    val toks = docs.select(col(idCol), explode(alnumWords(col(textCol))).as("term"))
     val tf = toks.groupBy(col(idCol), col("term"))
       .agg(count(lit(1)).as("tf"))
     // tf is unique per (doc, term) => df = rows per term
@@ -1076,8 +1083,7 @@ object TextOps {
   def zipfFit(docs: DataFrame, textCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val freqs = docs
-      .select(explode(filter(split(lower(col(textCol)), "[^a-z0-9]+"),
-        t => t =!= "")).as("token"))
+      .select(explode(alnumWords(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
     val sized = freqs
       .repartitionByRange(col("n").desc, col("token"))
@@ -1185,8 +1191,7 @@ object TextOps {
     require(window >= 1, s"window must be >= 1: $window")
     require(minCount >= 1, s"minCount must be >= 1: $minCount")
     val toks = docs.select(col(idCol).as("__d"),
-      posexplode(filter(split(lower(col(textCol)), "\\s+"),
-        t => t =!= "")).as(Seq("__p", "__w")))
+      posexplode(whitespaceTokens(col(textCol))).as(Seq("__p", "__w")))
     val offs = (-window to window).filter(_ != 0).map(o => lit(o))
     val ctx = toks
       .select(col("__d"), col("__w").as("center"), col("__p"),
@@ -1203,7 +1208,7 @@ object TextOps {
 
   def fleschReadability(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val txt = lower(coalesce(col(textCol), lit("")))
+    val txt = CaseMap.lower(coalesce(col(textCol), lit("")))
     val words = filter(split(txt, "\\s+"), w => w =!= "")
     docs.select(col(idCol),
         size(words).cast("long").as("n_words"),

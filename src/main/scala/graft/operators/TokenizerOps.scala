@@ -55,9 +55,7 @@ object TokenizerOps {
 
   /** Corpus word histogram (word, n) — the one corpus-wide shuffle. */
   def wordHistogram(docs: DataFrame, textCol: String): DataFrame =
-    docs.select(explode(
-      filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= ""))
-      .as("word"))
+    docs.select(explode(TextOps.alnumWords(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
 
   /** " h e l l o " — char symbols with sentinel spaces. */
@@ -136,9 +134,7 @@ object TokenizerOps {
       size(split(trim(col("sym")), " ")).cast("long").as("n_sub"),
       length(col("word")).cast("long").as("n_ch"))
     val docWords = docs
-      .select(col(idCol), explode(
-        filter(split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= ""))
-        .as("word"))
+      .select(col(idCol), explode(TextOps.alnumWords(col(textCol))).as("word"))
       .groupBy(idCol, "word").agg(count(lit(1)).as("k"))
     docWords.join(wordLens, "word")
       .groupBy(idCol)
@@ -245,8 +241,7 @@ object TokenizerOps {
       sourceCol: String): DataFrame =
     docs
       .select(col(sourceCol).as("source"),
-        explode(filter(split(lower(col(textCol)), "\\s+"),
-          t => t =!= "")).as("term"))
+        explode(TextOps.whitespaceTokens(col(textCol))).as("term"))
       .groupBy("source", "term").agg(count(lit(1)).as("n"))
 
   /** Finish [[oovRate]] from a [[termCounts]]-shaped relation
@@ -288,8 +283,7 @@ object TokenizerOps {
     require(ks.nonEmpty && ks.forall(_ > 0) && ks == ks.sorted,
       s"ks must be positive and ascending: $ks")
     val tc = docs
-      .select(explode(filter(split(lower(col(textCol)), "\\s+"),
-        t => t =!= "")).as("term"))
+      .select(explode(TextOps.whitespaceTokens(col(textCol))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("n"))
     val ranked = Quantiles.globalRank(tc,
       Seq(col("n").desc, col("term")))

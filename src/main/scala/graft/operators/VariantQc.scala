@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.CaseMap
 import org.apache.spark.sql.types.DecimalType
 
 /** Variant / callset quality-control censuses — the bcftools-stats /
@@ -45,8 +46,8 @@ object VariantQc {
   def tstvCounts(variants: DataFrame, groupCol: String,
       refCol: String = "referenceAllele",
       altCol: String = "alternateAllele"): DataFrame = {
-    val r = upper(col(refCol))
-    val a = upper(col(altCol))
+    val r = CaseMap.upper(col(refCol))
+    val a = CaseMap.upper(col(altCol))
     val isSnv = length(r) === 1 && length(a) === 1 && r =!= a &&
       r.isin("A", "C", "G", "T") && a.isin("A", "C", "G", "T")
     val isTs = (r.isin("A", "G") && a.isin("A", "G")) ||
@@ -435,8 +436,8 @@ object VariantQc {
   def substitutionCounts(variants: DataFrame,
       refCol: String = "referenceAllele",
       altCol: String = "alternateAllele"): DataFrame = {
-    val r = upper(col(refCol))
-    val a = upper(col(altCol))
+    val r = CaseMap.upper(col(refCol))
+    val a = CaseMap.upper(col(altCol))
     val isSnv = length(r) === 1 && length(a) === 1 && r =!= a &&
       r.isin("A", "C", "G", "T") && a.isin("A", "C", "G", "T")
     variants
@@ -487,8 +488,8 @@ object VariantQc {
       altCol: String = "alternateAllele",
       maxAbsLen: Int = 20): DataFrame = {
     require(maxAbsLen > 0, s"maxAbsLen must be positive: $maxAbsLen")
-    val r = upper(col(refCol))
-    val a = upper(col(altCol))
+    val r = CaseMap.upper(col(refCol))
+    val a = CaseMap.upper(col(altCol))
     val isIndel = r.rlike("^[ACGT]+$") && a.rlike("^[ACGT]+$") &&
       length(r) =!= length(a)
     variants

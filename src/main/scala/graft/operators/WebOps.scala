@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.CaseMap
 
 /** Web-corpus preparation operators: HTML → text extraction and URL
   * canonicalization / URL-level dedup (the document-acquisition front of a
@@ -283,7 +284,7 @@ object WebOps {
     * stripped); NULL for anything else — the registrable unit the link
     * graph aggregates on. Pure regexp, codegen'd. */
   def linkHost(url: Column): Column = {
-    val h = lower(regexp_extract(url,
+    val h = CaseMap.lower(regexp_extract(url,
       "^(?i)https?://(?:[^/@?#]*@)?([^:/?#]+).*", 1))
     when(h =!= "", h)
   }

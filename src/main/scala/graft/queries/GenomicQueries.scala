@@ -184,8 +184,8 @@ object GenomicQueries extends QuerySet {
         // sf0.001 contains a fully-duplicated lineitem row: identical rows
         // would merge into one two-read fragment bucket while the SQL twin
         // ranks them separately. The name encodes every varying column, so
-        // deduping drops exactly the clones. r17 (guide §2.3 shuffle fewer
-        // bytes): dedup on the 4-column key BEFORE the wide projection —
+        // deduping drops exactly the clones. To shuffle fewer bytes, dedup
+        // on the 4-column key BEFORE the wide projection —
         // readName is a bijection of these four columns and every read
         // field is a function of them alone, so the surviving read set is
         // identical, and the dedup exchange carries 4 longs instead of the

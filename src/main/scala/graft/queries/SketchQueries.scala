@@ -414,7 +414,8 @@ object SketchQueries extends QuerySet {
     // flips bits.
     Query("q95_image_dhash",
       (s, dir) => MultimodalOps.imageDHash(
-        // fanOut before the payload UDF — see q101 (r16)
+        // fanOut before the payload UDF: the small documents scan is one
+        // split, so the decode would otherwise run on one core (see q101)
         graft.operators.Parallelism.fanOut(
           t(s, dir, "documents").select(col("doc_id").as("media_id")),
           col("media_id"))
@@ -429,7 +430,8 @@ object SketchQueries extends QuerySet {
     // pairs, so banding recall is proven, not assumed.
     Query("q96_image_neardup",
       (s, dir) => MultimodalOps.imageNearDuplicates(
-        // fanOut before the payload UDF — see q101 (r16)
+        // fanOut before the payload UDF: the small documents scan is one
+        // split, so the decode would otherwise run on one core (see q101)
         graft.operators.Parallelism.fanOut(
           t(s, dir, "documents").select(col("doc_id").as("media_id")),
           col("media_id"))
@@ -499,7 +501,8 @@ object SketchQueries extends QuerySet {
             (((eid * 37 + i * 11) % 4096 - 2048) * vol).toInt)
           graft.sources.Wav.encode(16000, smp)
         }
-        // fanOut before the payload UDF — see q101 (r16)
+        // fanOut before the payload UDF: the small documents scan is one
+        // split, so the decode would otherwise run on one core (see q101)
         MultimodalOps.audioNearDuplicates(
           graft.operators.Parallelism.fanOut(
             t(s, dir, "documents").select(col("doc_id").as("media_id")),
@@ -549,7 +552,7 @@ object SketchQueries extends QuerySet {
           graft.sources.Avi.encode(16, 12, 40000, frames)
         }
         // fan the 1-split documents scan out BEFORE the payload UDF so
-        // encode + decode parallelize (r16; a small parquet scans as one
+        // encode + decode parallelize (a small parquet scans as one
         // partition and the whole media stage ran on one core)
         MultimodalOps.videoNearDuplicates(
           graft.operators.Parallelism.fanOut(
@@ -1068,8 +1071,7 @@ object SketchQueries extends QuerySet {
     Query("q117_perceptron_quality_gate",
       (s, dir) => {
         val feats = t(s, dir, "documents").select(col("doc_id"),
-          size(filter(split(lower(col("text")), "[^a-z0-9]+"),
-            t => t =!= "")).cast("long").as("f_words"),
+          size(TextOps.alnumWords(col("text"))).cast("long").as("f_words"),
           length(col("text")).cast("long").as("f_chars"))
           .filter(col("f_words") > 0)
           .withColumn("f_mwl", expr("f_chars * 1000 div f_words"))

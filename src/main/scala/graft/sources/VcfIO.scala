@@ -420,7 +420,7 @@ object VcfIO {
       // digits, trailing zeros stripped, e-XX exponent) — adopted ONLY
       // when it round-trips to the same double; otherwise the exact
       // Double.toString wins (formatting must never lose precision).
-      // This makes the r15 byte audit read QUAL back byte-identically.
+      // So a written QUAL reads back byte-identically.
       val raw =
         String.format(java.util.Locale.ROOT, "%.6g", Double.box(d))
       val (m, e) = raw.indexOf('e') match {

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.operators.{ScratchColumns, TextOps}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface (SURVEY.md §2.10: absent in the reference —
@@ -41,13 +42,14 @@ object EventStreams {
       docs: DataFrame,
       textCol: String = "text",
       tsCol: String = "ts",
-      watermarkDelay: String = "10 minutes"): DataFrame =
+      watermarkDelay: String = "10 minutes"): DataFrame = {
+    val Seq(fp) = ScratchColumns.fresh(docs, "__fp")
     docs
-      .withColumn("__fp",
-        md5(lower(regexp_replace(trim(col(textCol)), "\\s+", " "))))
+      .withColumn(fp, TextOps.fingerprint(col(textCol)))
       .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("__fp")
-      .drop("__fp")
+      .dropDuplicatesWithinWatermark(fp)
+      .drop(fp)
+  }
 
   /** Streaming near-duplicate flagging against a STATIC MinHash index
     * (from [[graft.operators.DedupOps.minhashSignatures]], e.g. loaded
@@ -390,8 +392,7 @@ object EventStreams {
       docs: DataFrame, textCol: String = "text",
       depth: Int = 4, width: Int = 1024): DataFrame =
     docs
-      .select(explode(filter(
-        split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")).as("token"))
+      .select(explode(TextOps.alnumWords(col(textCol))).as("token"))
       .select(posexplode(
         graft.operators.SketchOps.cmsBucketsUdf(depth, width)(col("token")))
         .as(Seq("i", "bucket")))
@@ -492,10 +493,11 @@ object EventStreams {
       }
       (ls(bi), bs)
     }
-    docs.withColumn("__nb", scoreU(col(textCol)))
-      .withColumn("pred_label", col("__nb._1"))
-      .withColumn("score_q", col("__nb._2"))
-      .drop("__nb")
+    val Seq(nb) = ScratchColumns.fresh(docs, "__nb")
+    docs.withColumn(nb, scoreU(col(textCol)))
+      .withColumn("pred_label", col(s"$nb._1"))
+      .withColumn("score_q", col(s"$nb._2"))
+      .drop(nb)
   }
 
   /** Streaming HyperLogLog registers: max(rho) per register as a streaming
@@ -507,8 +509,7 @@ object EventStreams {
   def streamingHllRegisters(
       docs: DataFrame, textCol: String = "text", p: Int = 10): DataFrame =
     docs
-      .select(explode(filter(
-        split(lower(col(textCol)), "[^a-z0-9]+"), t => t =!= "")).as("token"))
+      .select(explode(TextOps.alnumWords(col(textCol))).as("token"))
       .select(graft.operators.SketchOps.hllRegUdf(p)(col("token")).as("rr"))
       .select(col("rr._1").as("reg"), col("rr._2").as("rho"))
       .groupBy("reg")

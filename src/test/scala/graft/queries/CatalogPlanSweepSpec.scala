@@ -1,7 +1,11 @@
 package graft.queries
 
 import graft.SparkSpec
+import org.apache.spark.sql.catalyst.expressions.{InitCap, Lower, Upper}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 
 /** Catalog-wide plan-shape gate (VERDICT r13 next-round #8): the
   * per-batch PlanSpec pins each new operator's shape, but nothing
@@ -17,11 +21,35 @@ import org.apache.spark.sql.catalyst.plans.logical._
   *     execution) rides an input that is provably bounded: its subtree
   *     must contain an Aggregate / GlobalLimit / LocalRelation, i.e. a
   *     distinct-value grid, a top-k, or a literal table — never raw
-  *     data rows (the percent-rank/ksDrift class of scale-killer).
+  *     data rows (the percent-rank/ksDrift class of scale-killer);
+  *  3. no Spark `Lower`, `Upper` or `InitCap` anywhere in the optimized
+  *     plan, its subqueries, higher-order-function lambdas or cached
+  *     relations: graft case-maps through `graft.functions.CaseMap`,
+  *     because the first Spark case mapping in a JVM builds ICU's
+  *     title-case table for every code point (seconds of a cold query).
   */
 class CatalogPlanSweepSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** Simple class names of Spark's case-mapping expressions in `plan`:
+    * in every node's expressions (lambdas are children, so they are
+    * searched too), in subqueries and in the plans of cached relations. */
+  private def sparkCaseMappings(plan: QueryPlan[_]): Seq[String] = {
+    val nodes: Seq[QueryPlan[_]] = plan match {
+      case p: LogicalPlan => p.collectWithSubqueries { case n => n }
+      case p: SparkPlan => p.collectWithSubqueries { case n => n }
+    }
+    nodes.flatMap { n =>
+      n.expressions.flatMap(_.collect {
+        case e @ (_: Lower | _: Upper | _: InitCap) => e.getClass.getSimpleName
+      }) ++ (n match {
+        case r: InMemoryRelation => sparkCaseMappings(r.cacheBuilder.cachedPlan)
+        case s: InMemoryTableScanExec => sparkCaseMappings(s.relation.cacheBuilder.cachedPlan)
+        case _ => Nil
+      })
+    }
+  }
 
   test("all catalog plans: no cartesian product, unkeyed windows only " +
       "over bounded (aggregated/limited/literal) inputs") {
@@ -47,7 +75,10 @@ class CatalogPlanSweepSpec extends SparkSpec {
                 s"$name: unkeyed Window over un-aggregated input " +
                   s"(${w.windowExpressions.map(_.name).mkString(",")})"
             }
-            cart ++ rawUnkeyed
+            val caseMaps = sparkCaseMappings(df.queryExecution.optimizedPlan)
+              .distinct.map(c => s"$name: Spark's $c in the plan " +
+                "(case-map through graft.functions.CaseMap)")
+            cart ++ rawUnkeyed ++ caseMaps
           } catch {
             case e: Throwable =>
               Seq(s"$name: plan construction failed: " +

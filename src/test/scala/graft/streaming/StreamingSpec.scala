@@ -1491,4 +1491,63 @@ class StreamingSpec extends SparkSpec {
       assert(got == batch, "stream-batch seasonality drift")
     } finally q.stop()
   }
+
+  // The frame-preserving text operators add one scratch column to the
+  // caller's frame and drop it again; a caller column of the same name
+  // must come back unchanged.
+
+  test("dedupDocuments keeps a caller's own __fp column") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Timestamp, Long, String, String)]
+    val docs = input.toDF().toDF("ts", "doc_id", "text", "__fp")
+    val out = EventStreams.dedupDocuments(docs, "text", "ts", "10 minutes")
+    assert(out.columns.toSeq == docs.columns.toSeq)
+    val q = out.writeStream.format("memory").queryName("dedup_own_fp")
+      .outputMode("append").start()
+    try {
+      input.addData(
+        (ts(1), 1L, "Hello  World", "mine-1"),
+        (ts(2), 2L, "hello world", "mine-2"),
+        (ts(3), 3L, "something else", "mine-3"))
+      q.processAllAvailable()
+      val got = spark.table("dedup_own_fp").select("doc_id", "__fp").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      assert(got == Map(1L -> "mine-1", 3L -> "mine-3"), s"got $got")
+    } finally q.stop()
+  }
+
+  test("lmScoreAgainst keeps a caller's own __lm column") {
+    import spark.implicits._
+    val target = (0L until 20L).map(i => (i, "alpha beta gamma delta"))
+      .toDF("doc_id", "text")
+    val index = graft.operators.TextOps.lmIndex(target, "text", buckets = 256)
+    val probes = Seq((100L, "alpha beta gamma"), (101L, "zz"))
+      .toDF("doc_id", "text")
+    val plain = graft.operators.TextOps.lmScoreAgainst(probes, index, "text", 256)
+      .select("doc_id", "lm_q", "n_transitions").collect().toSet
+    val mine = probes.withColumn("__lm", concat(lit("mine-"), col("doc_id")))
+    val out = graft.operators.TextOps.lmScoreAgainst(mine, index, "text", 256)
+    assert(out.columns.toSeq == mine.columns.toSeq ++ Seq("lm_q", "n_transitions"))
+    assert(out.select("doc_id", "lm_q", "n_transitions").collect().toSet == plain)
+    assert(out.select("doc_id", "__lm").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap ==
+      Map(100L -> "mine-100", 101L -> "mine-101"))
+  }
+
+  test("streamingNbRoute keeps a caller's own __nb column") {
+    import spark.implicits._
+    val train = Seq(
+      (2L, "en", "the cat and the dog sat on the mat"),
+      (6L, "de", "der hund und die katze sitzen auf der matte"))
+      .toDF("doc_id", "lang", "text")
+    val model = graft.operators.ClassifierOps.nbTrain(train, "lang", "text", 64)
+    val docs = Seq((1L, "the cat sat", "mine-1"), (3L, "der hund", "mine-3"))
+      .toDF("doc_id", "text", "__nb")
+    val out = EventStreams.streamingNbRoute(docs, model, "text", 64)
+    assert(out.columns.toSeq == docs.columns.toSeq ++ Seq("pred_label", "score_q"))
+    val got = out.select("doc_id", "__nb", "pred_label").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+    assert(got == Map(1L -> ("mine-1", "en"), 3L -> ("mine-3", "de")), s"got $got")
+  }
 }
